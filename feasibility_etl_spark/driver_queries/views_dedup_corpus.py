@@ -562,8 +562,8 @@ FROM scored QUALIFY rank <= 10
 
 
 def q_dedup_components(spark: SparkSession, sf: str) -> DataFrame:
-    """DEDUP-COMPONENTS: near-dup pairs → transitive dedup groups via
-    iterative min-label propagation (similarity isn't transitive; groups
+    """DEDUP-COMPONENTS: near-dup pairs → transitive dedup groups, each
+    labeled by its minimum doc id (similarity isn't transitive; groups
     are the connected components of the pair graph). Fed from the blocked
     n-gram pairs so the DuckDB oracle can recompute the same graph with a
     recursive CTE + min-over-reachable-set."""

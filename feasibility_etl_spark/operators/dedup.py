@@ -616,8 +616,6 @@ def minhash_components(
     bands: int = 8,
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
-    max_iterations: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Component-grain LSH output: ``(doc_id, component_id)`` for every
     doc sharing ≥1 minhash band with another — the same groups
@@ -635,9 +633,7 @@ def minhash_components(
     where the pair grain is affordable."""
     banded = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n)
     edges = bucket_star_edges(banded, id_col, max_bucket_size=max_bucket_size)
-    return connected_components(
-        edges, max_iterations=max_iterations, checkpoint_dir=checkpoint_dir
-    )
+    return connected_components(edges)
 
 
 def jaccard(shingles_a: Column, shingles_b: Column) -> Column:
@@ -921,6 +917,11 @@ def blocked_jaccard_pairs(
         # both branches would be empty; the all-pairs one is the cheap
         # empty plan
         build_small = _g["mn"] is None or _g["mn"] <= allpairs_max_pairs
+        if not build_big:
+            # the all-small plan reads only toks: the gate-only persists
+            # release now, not with the returned frame
+            block_cost.unpersist(blocking=False)
+            df_tok.unpersist(blocking=False)
         if broadcast_routing is None:
             broadcast_routing = _g["nb"] <= MAX_BROADCAST_BLOCKS
     if broadcast_routing is None:
@@ -1118,24 +1119,8 @@ def simhash_candidates(
     )
 
 
-def _round_checkpoint(df: DataFrame, checkpoint_dir: str | None, path: str) -> DataFrame:
-    """Materialize one iteration's frame with truncated lineage.
-
-    ``checkpoint_dir=None`` → ``localCheckpoint``: blocks live UNREPLICATED
-    on executors, so losing ANY executor after round 1 kills the job. Fine
-    on local mode / small jobs; on a 1000-executor run over hours, some
-    executor loss is expected, so pass a durable ``checkpoint_dir``
-    (hdfs://, s3://) and each round becomes a parquet write + read-back —
-    recomputable from storage after any executor loss, at the cost of one
-    round-trip per iteration (graph-scale, not corpus-scale)."""
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=True)
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
 def _union_find_batches(name_a: str, name_b: str):
-    """Batch function for the two-phase contraction path: exact
+    """Batch function for both :func:`connected_components` steps: exact
     union-find with min-root union over every (a, b) row in this task's
     partition, emitting one ``(node, root)`` row per node seen —
     including roots as ``(n, n)`` so isolated/self-edge nodes survive.
@@ -1173,251 +1158,46 @@ def _union_find_batches(name_a: str, name_b: str):
     return run
 
 
-def _contracted_components(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
-    """Two-phase union-find as ONE LAZY DAG — the default
-    ``connected_components`` path (VERDICT r11 item 2: the eager
-    count-gate + driver collect ran the whole upstream pair chain at
-    DataFrame-CONSTRUCTION time; this plan runs nothing until the
-    caller's first action).
-
-    Phase 1 (``mapInPandas``, per existing partition, NO shuffle):
-    local union-find per task → one ``(node, local_root)`` star edge
-    per local node. Star edges per partition preserve global
-    connectivity (every local node appears; every local component
-    contracts to its root), and there are at most V of them per
-    partition — the classic local-contraction step.
-
-    Phase 2 (r13 — the ROOT GRAPH, not the node forest, goes through
-    the single merge task): group the phase-1 star edges by node — a
-    node crossing partition boundaries carries several local roots, and
-    those roots must unify — and emit one ``(root, min_root)`` edge per
-    local root per node (self-edge when a node has one root, so
-    isolated components survive). The single union-find task then runs
-    over ROOT-grain edges only: its dict holds O(distinct local roots)
-    ≈ O(components + partition-boundary crossings), not O(dup nodes) —
-    the r12 shape's merge held every dup node in one executor dict,
-    which is the ceiling VERDICT r12 item 1 flagged for
-    boilerplate-heavy crawls. Final labels attach DISTRIBUTED: the
-    per-node min local root joins the (tiny, AQE-broadcast) root→final
-    map; no single task ever materializes node-grain state.
-
-    Labels are component minimum ids at every level (min-root union;
-    the global minimum node is its own local root in every partition
-    that sees it, so the root component's minimum IS the node minimum)
-    — the same labels the distributed loop converges to, pinned in
-    tests.
-
-    Cluster posture note: the merge task is root-graph-sized, so the
-    remaining ceiling is one executor holding the contracted quotient
-    graph — components themselves, not their members; for graphs past
-    even that, pass ``checkpoint_dir`` — the durable distributed label
-    loop has per-round parquet state and no single-task step."""
-    dt = pairs.schema[id_a].dataType
-    forest_schema = T.StructType(
-        [T.StructField("src", dt), T.StructField("dst", dt)]
-    )
-    rootmap_schema = T.StructType(
-        [T.StructField("_root", dt), T.StructField("_final", dt)]
-    )
-    forest = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).mapInPandas(_union_find_batches("src", "dst"), forest_schema)
-    # the result stays an ORDINARY lazy frame: the labels plan is
-    # pairs + narrow map/agg nodes, so consumers nest it at pair-plan
-    # cost. Compositions whose pair plan is itself deep (PIPE-CORPUS)
-    # bound that cost at the fan-out ROOT with a StageCache.cut() on
-    # the pair stage's input — cutting here instead would freeze the
-    # (possibly broadcast-bearing) pair plan and fire its exchanges at
-    # construction time (see plans/compose.py:StageCache.cut).
-    # node_roots feeds TWO consumers (the root-edge subtree and the
-    # final label join) — without a persist the whole pair subtree
-    # executes twice (A/B-measured +0.9 s at sf0.1, and 2× the pair
-    # join at scale). The persist is LAZY (materializes at the caller's
-    # first action — construction runs nothing) and node-grain narrow;
-    # it releases with the returned frame's lifecycle.
-    from ..plans.compose import StageCache, release_when_unreachable
-
-    _cc_cache = StageCache()
-    node_roots = _cc_cache(
-        forest.groupBy("src").agg(
-            F.min("dst").alias("_min_r"), F.collect_set("dst").alias("_rs")
-        )
-    )
-    root_edges = node_roots.select(
-        F.explode("_rs").alias("_a"), F.col("_min_r").alias("_b")
-    )
-    rootmap = root_edges.repartition(1).mapInPandas(
-        _union_find_batches("_root", "_final"), rootmap_schema
-    )
-    # broadcast BY HINT, not by AQE: rootmap is mapInPandas output (no
-    # stats, so AQE plans a sort-merge join — two extra exchanges,
-    # A/B-measured +0.6 s at sf0.1), and it is root-graph-sized by
-    # construction — the same bound the merge task's dict already
-    # requires to fit one executor, so the broadcast adds no new ceiling
-    out = (
-        node_roots.join(F.broadcast(rootmap), node_roots["_min_r"] == rootmap["_root"])
-        .select(
-            F.col("src").alias("doc_id"),
-            F.col("_final").alias("component_id"),
-        )
-    )
-    return release_when_unreachable(out, _cc_cache)
-
-
 def connected_components(
-    pairs: DataFrame,
-    max_iterations: int = 20,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    checkpoint_dir: str | None = None,
-    driver_max_edges: int | None = None,
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, component_id).
 
     Near-dup PAIRS aren't dedup GROUPS: similarity is not transitive, so
     A~B, B~C must collapse into one keep-group {A,B,C} even when A~C was
-    never a candidate. Classic large-graph min-label propagation, all
-    DataFrame ops: every node starts labeled with its own id; each round
-    every node adopts the minimum label in its neighborhood (one
-    groupBy-min over the symmetrized edge list); converged when no label
-    changes. Rounds needed = graph diameter ≤ ``max_iterations`` — dedup
-    components are shallow (near-clique), so 3-4 rounds is typical.
+    never a candidate. ``component_id`` is the component's minimum doc
+    id — the deterministic keeper.
 
-    Each round is one shuffle on the node id at graph (pairs) scale, not
-    corpus scale. Per-round checkpointing truncates the growing lineage so
-    the loop doesn't re-execute all prior rounds each iteration (the
-    classic iterative-DataFrame trap); ``checkpoint_dir=None`` uses fast
-    executor-local blocks, a durable dir makes every round recoverable
-    from storage (see :func:`_round_checkpoint` — the 1000-executor
-    posture). Retired label rounds are deleted as the loop advances; the
-    final round's files back the RETURNED frame, so the caller owns
-    ``checkpoint_dir`` cleanup after consuming the result. The final
-    ``component_id`` is the component's minimum doc id — the
-    deterministic keeper.
-
-    Alternative considered (Kiveris et al. large-star/small-star, which
-    converges in O(log²) rounds): per round it costs TWO edge-scale
-    shuffles plus an edge-set rewrite where this loop pays one
-    edge-labels join, and it must still checkpoint the mutating edge set
-    every round. Near-dup graphs are near-cliques — measured at sf0.1 the
-    loop converges in 3 label rounds (diameter 2 + the no-change round,
-    ~0.3-0.5 s/round after the first materialization; durable-dir rounds
-    measured the same ±0.1 s as localCheckpoint) — so plain propagation
-    is already at LSS's round floor and strictly cheaper per round; LSS
-    pays off on chain-like graphs (diameter ≫ log n), which dedup pair
-    graphs are not. Raise ``max_iterations`` if one ever shows up rather
-    than switching the default.
-
-    Default routing (``checkpoint_dir=None``, ``driver_max_edges=None``):
-    the LAZY two-phase contraction path — see
-    :func:`_contracted_components`. r10's driver union-find fast path
-    (count-gate + Arrow collect) was value-identical but EAGER: the
-    gate's count and the collect ran the entire upstream pair-generation
-    chain at DataFrame-construction time (VERDICT r11 item 2 — bench
-    measured 14.2 s of construction-time jobs on PIPE-CORPUS's critical
-    path, invisible to stage attribution and paid even by callers who
-    never run the frame). The contraction path runs the same exact
-    union-find INSIDE the plan (per-partition local forests → one merge
-    task), so construction is free, the work lands on executors, and
-    the merge task holds O(dup nodes) instead of the driver holding
-    O(edges). Labels are identical (min-id; pinned in tests).
-
-    ``driver_max_edges`` stays as the routing knob it always was, never
-    a semantics knob: ``0`` forces the distributed label loop; a
-    positive bound count-gates the SYMMETRIZED edge list (eager — the
-    caller is explicitly buying a routing decision) and routes
-    under-bound graphs to the contraction path, over-bound graphs to
-    the loop. Durable ``checkpoint_dir`` runs always take the loop
-    (that flag is the caller saying "cluster posture, executor loss
-    expected, no single merge task").
+    Exact union-find in one lazy plan, so building the frame runs no
+    job: each task contracts its partition of pairs to one
+    ``(node, local_root)`` forest edge per node it saw (no shuffle),
+    then one ``repartition(1)`` task unions the forest edges and emits
+    the labels. Min-root union keeps every root its component's minimum
+    at both steps. The merge task holds every node that appears in a
+    pair: that is the ceiling, dup-count-sized rather than corpus-sized.
     """
-    import uuid
-
-    run_tag = uuid.uuid4().hex[:12] if checkpoint_dir is not None else ""
-
-    def ck(df: DataFrame, name: str) -> DataFrame:
-        path = f"{checkpoint_dir}/cc_{run_tag}/{name}" if checkpoint_dir else ""
-        return _round_checkpoint(df, checkpoint_dir, path)
-
-    def rm(name: str) -> None:
-        if checkpoint_dir is None:
-            return
-        spark = pairs.sparkSession
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(
-            f"{checkpoint_dir}/cc_{run_tag}/{name}"
-        )
-        jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
-
-    if checkpoint_dir is None and driver_max_edges is None:
-        # the default: zero construction-time jobs, zero driver state
-        return _contracted_components(pairs, id_a, id_b)
-
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
+    dt = pairs.schema[id_a].dataType
+    forest_schema = T.StructType(
+        [T.StructField("src", dt), T.StructField("dst", dt)]
     )
-    # edges feed every iteration's join — checkpoint once or the (possibly
-    # expensive) upstream pair-generation plan re-executes per round
-    edges = ck(edges, "edges")
-    if driver_max_edges and checkpoint_dir is None:
-        # count-gate off the checkpointed frame (no plan re-execution, no
-        # row transfer): an over-bound graph learns it's over-bound from a
-        # scalar, not from shipping bound+1 rows it would then discard
-        if edges.limit(driver_max_edges + 1).count() <= driver_max_edges:
-            return _contracted_components(edges, "src", "dst")
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("component_id")
+    out_schema = T.StructType(
+        [T.StructField("doc_id", dt), T.StructField("component_id", dt)]
     )
-    labels = ck(labels, "labels_init")
-    changed = 0
-    for rnd in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("component_id").alias("neighbor_label"))
-        )
-        new_label = F.least(
-            F.col("component_id"), F.coalesce("neighbor_label", "component_id")
-        )
-        updated = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
-            .select(
-                "node",
-                new_label.alias("component_id"),
-                # fused convergence flag: rides the checkpoint materialization,
-                # so the changed-check below is a filter over cached rows — no
-                # extra per-round join against the previous labels
-                (new_label < F.col("component_id")).alias("_chg"),
-            )
-        )
-        updated = ck(updated, f"labels_{rnd}")
-        changed = updated.where("_chg").limit(1).count()
-        labels = updated.drop("_chg")
-        # this round's labels are now durable; the previous round's files
-        # are dead weight (keep labels_init only until round 0 lands)
-        rm("labels_init" if rnd == 0 else f"labels_{rnd - 1}")
-        if changed == 0:
-            break
-    if changed != 0:
-        # A silent non-converged return would hand callers WRONG labels (and
-        # prune_components would keep docs that belong to a dup group), so
-        # this is an error, not a warning. Diameter > max_iterations is rare
-        # for near-clique dedup graphs; raise the cap for path-like graphs.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations (labels still changing). The pair graph's diameter "
-            "exceeds max_iterations — raise it (rounds needed = diameter)."
-        )
-    return labels.select(F.col("node").alias("doc_id"), "component_id")
+    forest = pairs.select(
+        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+    ).mapInPandas(_union_find_batches("src", "dst"), forest_schema)
+    # consumers nest the whole pair plan under these two map nodes;
+    # compositions whose pair plan is itself deep bound that with a
+    # StageCache.cut() at their fan-out root (plans/compose.py)
+    return forest.repartition(1).mapInPandas(
+        _union_find_batches("doc_id", "component_id"), out_schema
+    )
 
 
 def prune_components(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iterations: int = 20,
-    checkpoint_dir: str | None = None,
     score_col: str | None = None,
 ) -> DataFrame:
     """Deduplicated corpus: drop every doc that is not its component's
@@ -1426,9 +1206,7 @@ def prune_components(
     representatives), which is near-dup-count sized, not corpus sized.
     Broadcast is left to AQE: at typical dup rates the dropped set fits the
     broadcast threshold, but it is unbounded in principle (cf. the writer's
-    fact-key anti-join), so we don't force it. ``checkpoint_dir``: durable
-    per-round checkpointing for the component loop (see
-    :func:`connected_components`).
+    fact-key anti-join), so we don't force it.
 
     Representative choice: with ``score_col=None`` the minimum id keeps
     (deterministic, metadata-free — the component label itself). With a
@@ -1438,9 +1216,7 @@ def prune_components(
     Cost: one extra join of the component table (pair-graph-scale, not
     corpus-scale) against the scores of ITS OWN members plus a
     per-component argmax window — the corpus never re-shuffles."""
-    comps = connected_components(
-        pairs, max_iterations=max_iterations, checkpoint_dir=checkpoint_dir
-    )
+    comps = connected_components(pairs)
     return prune_by_components(df, comps, id_col=id_col, score_col=score_col)
 
 

@@ -145,6 +145,36 @@ def test_blocked_jaccard_branch_gate_parity_all_routings(spark):
         assert gated == lazy, f"branch_gate routing {name} diverged"
 
 
+def test_blocked_jaccard_branch_gate_all_small_releases_gate_persists(
+    spark, monkeypatch
+):
+    """The all-small gated plan reads only the token table, so the
+    (block, tok) df table and the block-cost table must leave the
+    session's cache manager right after the gate, while the returned
+    frame is still alive."""
+    from pyspark import StorageLevel
+
+    from feasibility_etl_spark.plans.compose import StageCache
+
+    persisted = []
+    real_call = StageCache.__call__
+
+    def spy(self, df, storage_level=None):
+        out = real_call(self, df, storage_level)
+        persisted.append(out)
+        return out
+
+    monkeypatch.setattr(StageCache, "__call__", spy)
+    out = blocked_jaccard_pairs(
+        docs(spark), ["lang", "source"], threshold=0.1, branch_gate=True
+    )
+    toks, df_tok, block_cost = persisted
+    none = StorageLevel.NONE
+    assert df_tok.storageLevel == none and block_cost.storageLevel == none
+    assert toks.storageLevel != none
+    assert out.count() > 0
+
+
 def test_simhash_buckets_exact_dups(spark):
     cands = {(r.id_a, r.id_b) for r in simhash_candidates(docs(spark)).collect()}
     assert (1, 2) in cands  # identical text → identical signature → all bands match
@@ -155,141 +185,70 @@ def test_connected_components_matches_union_find(spark):
 
     from feasibility_etl_spark.operators.dedup import connected_components
 
-    rng = random.Random(7)
-    # random graph: 60 nodes, 50 edges → several nontrivial components
-    edges = {(rng.randint(0, 59), rng.randint(0, 59)) for _ in range(50)}
-    edges = [(a, b) for a, b in edges if a != b]
-    pairs = spark.createDataFrame(
-        [(min(a, b), max(a, b)) for a, b in edges], "id_a long, id_b long"
-    )
-    got = {
-        r.doc_id: r.component_id for r in connected_components(pairs).collect()
-    }
+    def reference(edges):
+        parent = {}
 
-    # reference union-find
-    parent = {}
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-    def union(a, b):
-        parent[find(a)] = find(b)
-    for a, b in edges:
-        union(a, b)
-    comps = {}
-    for n in parent:
-        comps.setdefault(find(n), set()).add(n)
-    want = {}
-    for members in comps.values():
-        low = min(members)
-        for m in members:
-            want[m] = low
-    assert got == want
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
 
+        for a, b in edges:
+            parent[find(a)] = find(b)
+        comps = {}
+        for n in parent:
+            comps.setdefault(find(n), set()).add(n)
+        return {m: min(members) for members in comps.values() for m in members}
 
-def test_connected_components_driver_and_distributed_paths_agree(spark):
-    """The driver union-find fast path and the distributed label loop must
-    be value-identical on the same graph — including the over-threshold
-    spill into the distributed path."""
-    import random
-
-    from feasibility_etl_spark.operators.dedup import connected_components
-
-    rng = random.Random(13)
-    edges = {(rng.randint(0, 79), rng.randint(0, 79)) for _ in range(70)}
-    edges = [(min(a, b), max(a, b)) for a, b in edges if a != b]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    via_driver = {
-        (r.doc_id, r.component_id) for r in connected_components(pairs).collect()
-    }
-    via_loop = {
-        (r.doc_id, r.component_id)
-        for r in connected_components(pairs, driver_max_edges=0).collect()
-    }
-    assert via_driver == via_loop and len(via_driver) > 0
-    # a graph just over a tiny threshold takes the distributed path and
-    # still agrees (the bound is a routing knob, never a semantics knob)
-    via_spill = {
-        (r.doc_id, r.component_id)
-        for r in connected_components(pairs, driver_max_edges=3).collect()
-    }
-    assert via_spill == via_driver
+    # random graphs (60 nodes/50 edges, 80 nodes/70 edges) → several
+    # nontrivial components each
+    for seed, n_nodes, n_edges in [(7, 60, 50), (13, 80, 70)]:
+        rng = random.Random(seed)
+        edges = {
+            (rng.randint(0, n_nodes - 1), rng.randint(0, n_nodes - 1))
+            for _ in range(n_edges)
+        }
+        edges = [(min(a, b), max(a, b)) for a, b in edges if a != b]
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        got = {
+            r.doc_id: r.component_id for r in connected_components(pairs).collect()
+        }
+        assert got == reference(edges), f"seed {seed}"
 
 
 def test_connected_components_cross_partition_root_merge(spark):
-    """r13: the contracted-components path merges a ROOT graph, not the
-    node forest — every phase-1 task contributes local roots and the
-    final labels must unify them across partitions. Force the worst
-    case: a single long chain with every edge in its OWN partition, so
-    no local union-find sees more than one edge and correctness rests
-    entirely on the cross-partition root merge."""
+    """Worst case for the per-partition contraction: a single long chain
+    with every edge in its OWN partition, so no local union-find sees
+    more than one edge and correctness rests entirely on the merge."""
     from feasibility_etl_spark.operators.dedup import connected_components
 
     n = 33
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     ).repartition(n - 1)  # ≈ one edge per task
-    got = {
-        r.doc_id: r.component_id for r in connected_components(pairs).collect()
-    }
+    # building the frame runs no job and persists nothing
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    spark.range(1).count()  # settle async job bookkeeping
+    base_jobs = scheduler.nextJobId()
+    comps = connected_components(pairs)
+    assert scheduler.nextJobId() == base_jobs
+    assert "InMemory" not in comps._jdf.queryExecution().executedPlan().toString()
+    got = {r.doc_id: r.component_id for r in comps.collect()}
     assert got == {i: 0 for i in range(n)}
 
 
 def test_connected_components_chain_transitivity(spark):
     from feasibility_etl_spark.operators.dedup import connected_components
 
-    # path graph 0-1-2-...-9: worst-case diameter, must still converge
+    # path graph 0-1-2-...-9: worst-case diameter
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "id_a long, id_b long"
     )
     rows = connected_components(pairs).collect()
     assert {r.component_id for r in rows} == {0}
     assert len(rows) == 10
-
-
-def test_connected_components_raises_on_non_convergence(spark):
-    import pytest
-
-    from feasibility_etl_spark.operators.dedup import connected_components
-
-    # path graph with diameter 9 cannot converge in 2 rounds: the silent
-    # wrong-labels return is an error, not a warning. driver_max_edges=0
-    # forces the DISTRIBUTED loop — the guard under test — since the
-    # driver union-find fast path has no iterations to bound
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iterations=2, driver_max_edges=0)
-
-
-def test_connected_components_reliable_checkpoint_path(spark, tmp_path):
-    """checkpoint_dir-backed rounds (the executor-loss-safe posture) must
-    produce labels identical to the localCheckpoint path, clean up retired
-    rounds as the loop advances, and leave the final round's files backing
-    the returned frame."""
-    import os
-
-    from feasibility_etl_spark.operators.dedup import connected_components
-
-    # chain + clique + singleton-pair mix, several rounds to converge
-    edges = [(i, i + 1) for i in range(6)] + [(10, 11), (10, 12), (11, 12), (20, 21)]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    ckdir = str(tmp_path / "cc_ck")
-    local = {r.doc_id: r.component_id for r in connected_components(pairs).collect()}
-    durable_df = connected_components(pairs, checkpoint_dir=ckdir)
-    durable = {r.doc_id: r.component_id for r in durable_df.collect()}
-    assert durable == local
-
-    run_dirs = os.listdir(ckdir)
-    assert len(run_dirs) == 1 and run_dirs[0].startswith("cc_")
-    kept = sorted(os.listdir(os.path.join(ckdir, run_dirs[0])))
-    # retired label rounds deleted: only edges + the final labels round stay
-    assert kept[0] == "edges" and len(kept) == 2 and kept[1].startswith("labels_")
-    # the returned frame survives re-reads (it is backed by kept files)
-    assert durable_df.count() == len(local)
 
 
 def test_adaptive_routing_strategies_agree(spark):

@@ -63,18 +63,7 @@ MAX_EXCHANGES = {
                           # don't. toks/sizes/df_tok persist → plan_id
                           # count
     "DEDUP-MINHASH": 3,   # sig agg + banded self-join + verify
-    "DEDUP-PRUNE": 24,    # r12 re-pin (was 2): the old default ran the
-                          # WHOLE pair chain EAGERLY at construction
-                          # (driver union-find) and the plan pinned here
-                          # was just the final LocalRelation joins — the
-                          # 2 was an artifact of hidden work, not a lean
-                          # plan. The lazy two-phase contraction keeps
-                          # the real chain in-plan: DEDUP-NGRAM's 13
-                          # candidate-stage exchanges + the contraction
-                          # merge (repartition(1) over forest edges) +
-                          # labels/prune joins + presentation. Measured
-                          # 22; entry runtime IMPROVED 6.6 → ~2.5 s
-                          # (the chain no longer runs twice)
+    "DEDUP-PRUNE": 16,    # 13 pair-stage + 1 union-find merge + 2 prune anti-join
     "DEDUP-SUBSTRING": 4, # r12 re-pin (was 3): the decide-small/rebuild-
                           # map-side restructure keys the gram window (1
                           # exchange) + per-doc starts agg (1); the static

@@ -141,11 +141,10 @@ PYTHON_OK = {"MM-IMAGE", "MM-AUDIO", "MM-RESIZE", "MM-VISUAL",
              # mapInPandas (repetition_signals_arrow, ~3.6× at sf0.1);
              # relational twin stays the oracle-shaped formulation.
              "TEXT-REPETITION",
-             # r12: connected_components' default is the lazy two-phase
-             # union-find — two Arrow-batched mapInPandas stages
-             # (per-partition local forests + one merge task) replacing
-             # the eager driver collect (VERDICT r11 item 2). Every
-             # entry whose plan embeds component labels carries them.
+             # connected_components is a lazy two-phase union-find —
+             # two Arrow-batched mapInPandas stages (per-partition local
+             # forests + one merge task). Every entry whose plan embeds
+             # component labels carries them.
              "DEDUP-COMPONENTS", "DEDUP-PRUNE", "DEDUP-PRUNE-BEST",
              "DEDUP-MINHASH-COMP", "DEDUP-STARPRUNE",
              "PIPE-CORPUS-COMPONENTS",
