@@ -218,6 +218,31 @@ def test_connected_components_matches_union_find(spark):
         assert got == reference(edges), f"seed {seed}"
 
 
+def test_connected_components_driver_and_distributed_paths_agree(spark):
+    """The labels must not depend on how the pairs are partitioned: the
+    whole graph in one task's union-find (all contraction before the
+    merge) and the graph spread over many tasks (the merge does most of
+    the unioning) give identical (doc_id, component_id) sets."""
+    import random
+
+    from feasibility_etl_spark.operators.dedup import connected_components
+
+    rng = random.Random(13)
+    edges = {(rng.randint(0, 79), rng.randint(0, 79)) for _ in range(70)}
+    edges = [(min(a, b), max(a, b)) for a, b in edges if a != b]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+
+    def labels(df):
+        return {
+            (r.doc_id, r.component_id) for r in connected_components(df).collect()
+        }
+
+    one_task = labels(pairs.coalesce(1))
+    many_tasks = labels(pairs.repartition(16))
+    assert one_task == many_tasks and len(one_task) > 0
+    assert labels(pairs) == one_task
+
+
 def test_connected_components_cross_partition_root_merge(spark):
     """Worst case for the per-partition contraction: a single long chain
     with every edge in its OWN partition, so no local union-find sees
