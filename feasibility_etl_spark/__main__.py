@@ -36,11 +36,25 @@ def _session(name: str):
     return build_session(name), reused
 
 
-def _read_or_empty(spark, path: str, schema: str):
+def _read_parquet_or_none(spark, path: str):
+    """The table at ``path``, or None on a first run (nothing landed yet).
+
+    Only PATH_NOT_FOUND means "first run". Any other failure (a corrupt or
+    unreadable table) raises: read as empty, it would restart dense ids at 1
+    under an existing fact."""
+    from pyspark.errors import AnalysisException
+
     try:
         return spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — first run: nothing landed yet
-        return spark.createDataFrame([], schema)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return None
+
+
+def _read_or_empty(spark, path: str, schema: str):
+    df = _read_parquet_or_none(spark, path)
+    return spark.createDataFrame([], schema) if df is None else df
 
 
 def cmd_etl(args) -> int:
@@ -84,12 +98,8 @@ def cmd_etl(args) -> int:
         ),
     }
     fact_path = os.path.join(args.out, "fact")
-    try:
-        existing = spark.read.parquet(fact_path)
-    except Exception:  # noqa: BLE001
-        existing = None
     res = write_denormalized(
-        wide, specs, dims, existing_fact=existing,
+        wide, specs, dims, existing_fact=_read_parquet_or_none(spark, fact_path),
         fact_key="key", required=["key", "reviewer_name", "project_name"],
     )
     # fact: plain append (input listing pinned at read; idempotency anti-join

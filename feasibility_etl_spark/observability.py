@@ -15,10 +15,10 @@ is dataflow-adjacent and belongs in-engine.
 with a job group, then reads the driver's ``AppStatusStore`` (the store
 behind the UI/REST API — present even with ``spark.ui.enabled=false``)
 and folds the group's stage metrics into one row: records/bytes
-in/out, shuffle read/write, executor time, wall time. ``metrics_df()``
-returns the collected rows as a DataFrame, so pipeline health checks
-are ordinary queries (``loss_report``-style gates over metrics instead
-of logs).
+in/out, shuffle read/write, executor time, wall time, Janino compiles.
+``metrics_df()`` returns the collected rows as a DataFrame, so pipeline
+health checks are ordinary queries (``loss_report``-style gates over
+metrics instead of logs).
 
 Driver-side by design: metrics rows are one-per-tracked-query (bounded
 by the program, not the data), and the status store read is a handful
@@ -36,15 +36,22 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 #: metrics_df schema (all sums over the tracked group's stages, last
-#: attempt per stage).
+#: attempt per stage). ``codegen_compiles`` is the JVM-wide CodegenMetrics
+#: delta over the window, so tracks that run concurrently overlap.
 _SCHEMA = (
     "query string, n_jobs int, n_stages int, n_tasks long, "
     "input_records long, input_bytes long, "
     "output_records long, output_bytes long, "
     "shuffle_read_records long, shuffle_read_bytes long, "
     "shuffle_write_records long, shuffle_write_bytes long, "
-    "executor_run_ms long, wall_ms long"
+    "executor_run_ms long, wall_ms long, codegen_compiles long"
 )
+
+
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Janino compilations so far in this JVM (every generated class)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 class JobMetricsTracker:
@@ -67,18 +74,20 @@ class JobMetricsTracker:
         sc = self._spark.sparkContext
         group = f"jmt-{name}-{uuid.uuid4().hex[:8]}"
         sc.setJobGroup(group, name, False)
+        compiles0 = _codegen_compiles(self._spark)
         t0 = time.time()
         try:
             yield self
         finally:
             wall_ms = int((time.time() - t0) * 1000)
             try:
-                self._rows.append(self._fold(group, name, wall_ms))
+                compiles = _codegen_compiles(self._spark) - compiles0
+                self._rows.append(self._fold(group, name, wall_ms, compiles))
             finally:
                 # clear the group so later, untracked jobs don't inherit it
                 sc.setJobGroup(None, None, False)
 
-    def _fold(self, group: str, name: str, wall_ms: int) -> tuple:
+    def _fold(self, group: str, name: str, wall_ms: int, compiles: int) -> tuple:
         sc = self._spark.sparkContext
         store = sc._jsc.sc().statusStore()
         empty_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
@@ -115,7 +124,7 @@ class JobMetricsTracker:
             name, n_jobs, n_stages, totals[0],
             totals[1], totals[2], totals[3], totals[4],
             totals[5], totals[6], totals[7], totals[8],
-            totals[9], wall_ms,
+            totals[9], wall_ms, compiles,
         )
 
     def metrics_df(self) -> DataFrame:

@@ -1,7 +1,7 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory: the one place engine-wide Spark settings live.
 
-The engine targets a multi-executor cluster over ~100 TB; the settings here
-are the ones that matter at that scale and are harmless on ``local[*]``:
+Tests, the CLI, ``tools/check_correctness.py``, ``bench.py`` and perfbench
+all build their session here. The settings:
 
 - AQE on (runtime coalescing of shuffle partitions, skew-join splitting,
   dynamic join-strategy demotion to broadcast);
@@ -13,7 +13,11 @@ are the ones that matter at that scale and are harmless on ``local[*]``:
 - runtime bloom-filter join pruning left on (default): on fact-fact joins
   with a selective parent predicate and a ≥10 GB detail scan, Spark builds
   a bloom filter from the parent keys and pushes it into the detail scan —
-  plan-asserted on the J-ATTACH shape in tests/test_runtime_filter.py.
+  plan-asserted on the J-ATTACH shape in tests/test_runtime_filter.py;
+- a generated-code cache sized to the engine's working set: Spark's
+  100-entry default evicted classes every round, so repeated plan shapes
+  recompiled. The 50 registered queries at sf0.1 compile 1,405 distinct
+  classes; the cache holds ~2x that.
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+CODEGEN_CACHE_MAX_ENTRIES = 3000
 
 
 def build_session(
@@ -51,6 +56,9 @@ def build_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # static conf: only a new session's JVM picks it up (executors via
+        # SparkConf); ~2x the measured working set, see the module docstring
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         # NB: spark.sql.parquet.aggregatePushdown is deliberately NOT set —
         # it only takes effect on the V2 parquet read path, and moving the
         # whole engine off the (default) V1 source for a footer-stats COUNT

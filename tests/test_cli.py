@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import json
 
+import pytest
+from py4j.protocol import Py4JJavaError
+
 from feasibility_etl_spark.__main__ import main
 
 from conftest import SF0001
@@ -50,3 +53,22 @@ def test_sql_command(spark, tmp_path, capsys):
     ]) == 0
     got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert got["rows"] == 3
+
+
+def test_etl_cli_fails_loudly_on_corrupt_dim(spark, tmp_path):
+    """Only a missing table means "first run": a corrupt dim read as empty
+    would restart dense ids at 1 under the existing fact's FKs."""
+    out = tmp_path / "star"
+    assert main(["etl", "--sf-dir", SF0001, "--out", str(out)]) == 0
+
+    def fact_files():
+        return sorted((p.name, p.stat().st_size) for p in (out / "fact").iterdir())
+
+    fact_before = fact_files()
+    (dim_file,) = (out / "jira_user").glob("part-*.parquet")
+    dim_file.write_bytes(b"not a parquet file" * 64)
+    dim_file.with_name(f".{dim_file.name}.crc").unlink()  # garbage, not a checksum miss
+
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        main(["etl", "--sf-dir", SF0001, "--out", str(out)])
+    assert fact_files() == fact_before

@@ -68,3 +68,13 @@ def test_metrics_df_is_queryable_as_a_gate(spark, tmp_path):
     )
     ratios = {r["query"]: r["out_in_ratio"] for r in loss.collect()}
     assert ratios["stage2"] == 0.5  # 100 in -> 50 out, measured not logged
+
+
+def test_codegen_compiles_counts_new_shapes_only(spark):
+    tracker = JobMetricsTracker(spark)
+    for name in ("first", "repeat"):
+        with tracker.track(name):
+            spark.range(4).selectExpr("id * 6700417 + 999331 AS x").collect()
+    rows = {r["query"]: r["codegen_compiles"] for r in tracker.metrics_df().collect()}
+    assert rows["first"] >= 1  # a shape this JVM has not compiled yet
+    assert rows["repeat"] == 0  # served from the codegen cache
