@@ -8,12 +8,16 @@ into dims + fact → load). A reference user switches by running::
     python -m feasibility_etl_spark sql "SELECT count(*) FROM orders" --sf-dir ...
     python -m feasibility_etl_spark list
 
-``etl`` is the full §3.2 write path: wide frame → role-played dim
-lookup-or-insert + FK-resolved fact increment + NOT-NULL reject isolation
-(E-ISOLATE) → parquet star. It is idempotent and incremental: re-runs
-anti-join already-loaded fact keys and extend dims in place (dense
-SERIAL-like surrogates across runs), exactly the trigger-replacement
-semantics the reference's INSTEAD OF view insert has (schema.sql:141-173).
+``etl`` is the §3.2 write path. It derives the wide frame from ``events``
+and hands it to :func:`~.writer.denormalized.commit_denormalized`, the
+commit the streaming sink uses too: rows with a null required column go to
+``_rejected``, the dims' new keys are appended first and the FK-resolved
+fact last, so every state a run leaves is FK-consistent. A re-run, after
+success or a crash, loads only keys not yet in the fact and keeps the dense
+SERIAL-like surrogates, as the reference's INSTEAD OF view insert does
+(schema.sql:141-173). The star's tables are read with known schemas, so
+none of those reads runs a schema-inference job. It prints the batch's
+reject count and the star's cumulative row counts.
 """
 
 from __future__ import annotations
@@ -36,32 +40,11 @@ def _session(name: str):
     return build_session(name), reused
 
 
-def _read_parquet_or_none(spark, path: str):
-    """The table at ``path``, or None on a first run (nothing landed yet).
-
-    Only PATH_NOT_FOUND means "first run". Any other failure (a corrupt or
-    unreadable table) raises: read as empty, it would restart dense ids at 1
-    under an existing fact."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        return None
-
-
-def _read_or_empty(spark, path: str, schema: str):
-    df = _read_parquet_or_none(spark, path)
-    return spark.createDataFrame([], schema) if df is None else df
-
-
 def cmd_etl(args) -> int:
     from pyspark.sql import functions as F
 
     from .sources.catalog import load
-    from .writer.denormalized import DimSpec, write_denormalized
+    from .writer.denormalized import DimSpec, commit_denormalized, star_totals
 
     spark, reused = _session("feasibility-etl")
     ev = load(spark, args.sf_dir, "events")
@@ -89,49 +72,11 @@ def cmd_etl(args) -> int:
             id_strategy=args.id_strategy,
         ),
     ]
-    dims = {
-        "jira_user": _read_or_empty(
-            spark, os.path.join(args.out, "jira_user"), "id long, username string"
-        ),
-        "project": _read_or_empty(
-            spark, os.path.join(args.out, "project"), "id long, name string"
-        ),
-    }
-    fact_path = os.path.join(args.out, "fact")
-    res = write_denormalized(
-        wide, specs, dims, existing_fact=_read_parquet_or_none(spark, fact_path),
-        fact_key="key", required=["key", "reviewer_name", "project_name"],
+    n_rejected = commit_denormalized(
+        wide, specs, args.out, required=["key", "reviewer_name", "project_name"]
     )
-    # fact: plain append (input listing pinned at read; idempotency anti-join
-    # keeps re-runs exactly-once). dims: their plans read the files being
-    # replaced, so stage → read back → swap (same rule as denormalizing_sink).
-    res.fact.write.mode("append").parquet(fact_path)
-    n_rej = res.rejected.count()
-    if n_rej:
-        res.rejected.write.mode("append").parquet(os.path.join(args.out, "_rejected"))
-    staging = os.path.join(args.out, "_staging_etl")
-    for spec in specs:
-        # repartition(1), not coalesce(1): the dim plan is broadcast-join
-        # only (no shuffle boundary), so coalesce would serialize it into
-        # the single output task
-        res.dims[spec.name].repartition(1).write.mode("overwrite").parquet(
-            os.path.join(staging, spec.name)
-        )
-    for spec in specs:
-        spark.read.parquet(os.path.join(staging, spec.name)).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(args.out, spec.name))
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(staging)
-    jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
-
-    summary = {
-        "fact_rows": spark.read.parquet(fact_path).count(),
-        "rejected": n_rej,
-        **{
-            spec.name: spark.read.parquet(os.path.join(args.out, spec.name)).count()
-            for spec in specs
-        },
-    }
+    totals = star_totals(wide, specs, args.out)
+    summary = {"fact_rows": totals.pop("fact"), "rejected": n_rejected, **totals}
     print(json.dumps(summary))
     if not reused:
         spark.stop()

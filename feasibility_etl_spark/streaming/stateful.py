@@ -266,9 +266,10 @@ def denormalizing_sink(
     """Stream → denormalized star schema: foreachBatch bridges Structured
     Streaming to the batch writer (SURVEY §3.2's trigger replacement).
 
-    Each micro-batch re-reads the current dims/fact from storage, runs the
-    same pure `write_denormalized` decomposition the batch path uses, and
-    appends — so surrogate keys keep their dense SERIAL-like sequence
+    Each micro-batch goes through :func:`commit_denormalized`, the commit
+    the ``etl`` CLI uses: dim increments appended first, the fact resolved
+    against the committed dims and appended last, rejects under
+    ``_rejected``. Surrogate keys keep their dense SERIAL-like sequence
     ACROSS batches and re-delivered keys are dropped by the idempotency
     anti-join (exactly-once effect on the fact under at-least-once
     delivery; Spark serializes foreachBatch calls, so read-modify-write per
@@ -294,66 +295,17 @@ def denormalizing_sink(
     write. Dim increments are new-keys-only (far smaller than the
     fact's) and always land as one file per batch.
     """
-    import os
-
-    from pyspark.sql import functions as F  # noqa: F811 — worker-side import
-
-    from ..writer.denormalized import write_denormalized
+    from ..writer.denormalized import commit_denormalized
     from .conf import scoped_shuffle_partitions
 
     def process(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        with scoped_shuffle_partitions(spark, shuffle_partitions):
-            _process_batch(spark, batch_df, batch_id)
-
-    def _process_batch(spark, batch_df, batch_id: int) -> None:
-        dims = {}
-        for spec in specs:
-            path = os.path.join(parquet_root, spec.name)
-            try:
-                dims[spec.name] = spark.read.parquet(path)
-            except Exception:  # noqa: BLE001 — first batch: dim doesn't exist yet
-                dims[spec.name] = spark.createDataFrame(
-                    [], f"{spec.id_col} long, {spec.natural_key} string"
-                )
-        fact_path = os.path.join(parquet_root, "fact")
-        try:
-            existing = spark.read.parquet(fact_path)
-        except Exception:  # noqa: BLE001
-            existing = None
-        res = write_denormalized(
-            batch_df, specs, dims, existing_fact=existing,
-            fact_key=fact_key, required=required,
-        )
-        # Everything below is executor-side — NOTHING collects to the driver.
-        # A catch-up micro-batch after downtime can be arbitrarily large; the
-        # fact increment must flow executor→storage, never through the driver.
-        #
-        # 1. Fact increment: plain append. The input file listing for
-        #    `existing` was pinned when it was read above, so appending new
-        #    files to the same path is safe, and the idempotency anti-join
-        #    inside write_denormalized keeps retried batches exactly-once.
-        fact_out = (
-            res.fact.repartition(fact_partitions) if fact_partitions else res.fact
-        )
-        fact_out.write.mode("append").parquet(fact_path)
-        # 2. Dims: append ONLY the increment (the new-key rows) — the stored
-        #    dim stays old ∪ new by construction (lookup_or_insert_parts),
-        #    identical contents to rewriting the full updated dim. Until r12
-        #    this staged the WHOLE dim to a side path, read it back, over-
-        #    wrote, and FS-deleted the staging dir every micro-batch (the
-        #    updated plan read the files it was replacing); the append needs
-        #    none of that — the increment's input listing was pinned when
-        #    the dim was read above, so new files land safely beside it
-        #    (same argument as the fact append). Replay-idempotent: a
-        #    retried batch re-reads the dim WITH the appended rows, so its
-        #    recomputed increment is empty. repartition(1), NOT coalesce(1):
-        #    coalesce folds the anti-join + id assignment into the single
-        #    output task, serializing it; repartition keeps the plan
-        #    parallel and only the final write runs one task.
-        for spec in specs:
-            res.dim_increments[spec.name].repartition(1).write.mode("append").parquet(
-                os.path.join(parquet_root, spec.name)
+        # every write is executor-side: a catch-up micro-batch after
+        # downtime can be arbitrarily large, so nothing collects to the
+        # driver
+        with scoped_shuffle_partitions(batch_df.sparkSession, shuffle_partitions):
+            commit_denormalized(
+                batch_df, specs, parquet_root, fact_key=fact_key,
+                required=required, fact_partitions=fact_partitions,
             )
 
     writer = (

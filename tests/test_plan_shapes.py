@@ -284,3 +284,26 @@ def test_repetition_operator_is_zero_shuffle(spark):
     df = repetition_signals(load(spark, SF, "documents"), top_ns=(2,), dup_ns=(2,))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+#: Spark jobs of one incremental ``etl`` batch at sf0.001 (measured 19):
+#: per dim, the new-key increment's scan, distinct, max(id) and row_number
+#: stages and its append; the fact's three FK broadcasts over the
+#: committed dims, its existing-key anti-join and append; the reject
+#: count; one two-job summary aggregate. The stage → read-back → swap
+#: writer this replaced ran 43.
+ETL_BATCH_MAX_JOBS = 21
+
+
+def test_etl_incremental_batch_job_budget(spark, tmp_path, capsys):
+    from feasibility_etl_spark.__main__ import main
+    from feasibility_etl_spark.observability import JobMetricsTracker
+
+    out = str(tmp_path / "star")
+    assert main(["etl", "--sf-dir", SF, "--out", out]) == 0
+    tracker = JobMetricsTracker(spark)
+    with tracker.track("etl-incremental"):
+        assert main(["etl", "--sf-dir", SF, "--out", out]) == 0
+    capsys.readouterr()
+    (row,) = tracker.metrics_df().collect()
+    assert row["n_jobs"] <= ETL_BATCH_MAX_JOBS, row

@@ -95,6 +95,52 @@ def test_denormalizing_sink_across_microbatches(spark, tmp_path):
     assert fact["K-3"].fk_reviewer == 3
 
 
+def test_denormalizing_sink_fails_loudly_on_corrupt_dim(spark, tmp_path):
+    """Only a missing table means "first batch": a corrupt dim read as
+    empty would restart dense ids at 1 under the stored fact's FKs."""
+    import json
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from feasibility_etl_spark.streaming.stateful import denormalizing_sink
+    from feasibility_etl_spark.writer.denormalized import DimSpec
+
+    src = tmp_path / "corrupt_in"
+    src.mkdir()
+    root = tmp_path / "corrupt_star"
+    specs = [
+        DimSpec(name="jira_user", natural_key="username",
+                roles={"reviewer_name": "fk_reviewer"}),
+    ]
+    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in [
+        {"key": "K-1", "reviewer_name": "alice", "v": 1.0},
+        {"key": "K-2", "reviewer_name": "bob", "v": 2.0},
+    ]))
+    stream = spark.readStream.schema(
+        "key string, reviewer_name string, v double"
+    ).json(str(src))
+    q = denormalizing_sink(stream, specs, str(root), str(tmp_path / "corrupt_ckpt"))
+
+    def fact_files():
+        return sorted((p.name, p.stat().st_size) for p in (root / "fact").iterdir())
+
+    try:
+        q.processAllAvailable()
+        fact_before = fact_files()
+        (dim_file,) = (root / "jira_user").glob("part-*.parquet")
+        dim_file.write_bytes(b"not a parquet file" * 64)
+        dim_file.with_name(f".{dim_file.name}.crc").unlink()  # garbage, not a checksum miss
+        (src / "b2.json").write_text(json.dumps(
+            {"key": "K-3", "reviewer_name": "carol", "v": 3.0}
+        ))
+        with pytest.raises(StreamingQueryException, match="FAILED_READ_FILE"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert fact_files() == fact_before
+
+
 def test_denormalizing_sink_fact_partitions_sizing(spark, tmp_path):
     """r12 §6 output sizing: ``fact_partitions=1`` must bound the fact
     append to ONE data file per micro-batch (vs shuffle-width files of
