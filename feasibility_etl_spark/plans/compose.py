@@ -72,7 +72,7 @@ class StageCache:
         self._frames.append(df)
         return df
 
-    def cut(self, df: DataFrame, eager: bool = True) -> DataFrame:
+    def cut(self, df: DataFrame) -> DataFrame:
         """PLAN-LEAF boundary at a composition's fan-out root: returns a
         frame whose logical plan is a single RDD scan
         (``localCheckpoint``), backed by executor-persisted blocks.
@@ -88,47 +88,22 @@ class StageCache:
         overflowed the JVM heap. A ``cut()`` at the fan-out root
         collapses all of that to one leaf.
 
-        ``eager=True`` (default) runs ONE job at construction to
-        materialize the cut. This is a measured trade, not a
-        convenience: r12 prototyped the fully-lazy cut
-        (``eager=False`` + AQE/broadcast disabled for the frozen
-        compile so no exchange fires at construction) and the composed
-        single-action run exploded to 1700+ stages / 133 s — with the
-        leaf COLD, every downstream reference races to compute it and
-        the persist hierarchy above it re-executes per reference;
-        Spark's block-level locking dedups blocks, not stage DAGs. One
-        visible construction job (the frame this method is CALLED on —
-        dup-survivor-sized, ~2 s at bench SF) buys a warm leaf every
-        consumer scans, which is also why it must sit at the fan-out
-        ROOT: everything heavy above it then executes exactly once at
-        action time. ``eager=False`` stays available for
-        single-consumer boundaries where construction must stay free.
+        The cut runs ONE job at construction to materialize the leaf.
+        This is a measured trade: r12 prototyped a fully-lazy cut and
+        the composed single-action run exploded to 1700+ stages / 133 s
+        — with the leaf COLD, every downstream reference races to
+        compute it and the persist hierarchy above it re-executes per
+        reference (Spark's block-level locking dedups blocks, not stage
+        DAGs). One construction job buys a warm leaf every consumer
+        scans, which is also why it must sit at the fan-out ROOT:
+        everything heavy above it then executes exactly once at action
+        time.
 
         The checkpointed blocks live executor-local and release when
         the frame is collected (ContextCleaner), which the per-entry
         gc in bench/driver loops makes prompt; ``release()`` does not
         need to track them."""
-        if eager:
-            return df.localCheckpoint(eager=True)
-        spark = df.sparkSession
-        conf = spark.conf
-        # lazy mode: AQE's execute() materializes every non-result query
-        # stage and a non-AQE execute() still fires BroadcastExchange
-        # futures, so both are disabled JUST for the frozen compile —
-        # place lazy cuts directly above persisted boundaries so the
-        # frozen subtree is an InMemoryRelation scan + narrow ops
-        keys = {
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-        }
-        saved = {k: conf.get(k) for k in keys}
-        for k, v in keys.items():
-            conf.set(k, v)
-        try:
-            return df.localCheckpoint(eager=False)
-        finally:
-            for k, v in saved.items():
-                conf.set(k, v)
+        return df.localCheckpoint(eager=True)
 
     def release(self) -> None:
         frames, self._frames = self._frames, []

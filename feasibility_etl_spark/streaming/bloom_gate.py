@@ -49,8 +49,9 @@ pays TWO Spark jobs and nothing else):
   driver-side fp dict; surviving suspects append through a driver-side
   pyarrow write; the cumulative filter's bits are set in plain Python
   (an exact replay of the probe expression, pinned by test against the
-  distributed ``_sparse_bloom_words``). ``mode='bulk'`` restores the
-  fully distributed plan for backfill-scale batches.
+  distributed ``_sparse_bloom_words``). A batch that finds docs state
+  but no usable filter takes the fully distributed bulk route instead
+  (``exact_dedup_gate_sink``).
 - Bloom state is CUMULATIVE: ``bloom/batch-N.bin`` holds the merged
   filter through batch N, so a batch reads exactly ONE small file
   (its predecessor) instead of re-listing and re-OR-ing N per-batch
@@ -84,6 +85,7 @@ from __future__ import annotations
 import hashlib
 import os
 import struct
+from contextlib import nullcontext
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -97,24 +99,8 @@ from ..operators.sketches import (
     bloom_maybe_contains,
 )
 from ..operators.text import fingerprint
-from .conf import scoped_shuffle_partitions
-
-
-_DBG = os.environ.get("SPARK_GRAFT_GATE_DEBUG") == "1"
-
-
-def _dbg_now() -> float:
-    import time
-
-    return time.time() if _DBG else 0.0
-
-
-def _dbg(label: str, t0: float) -> None:
-    if _DBG:
-        import sys
-        import time
-
-        print(f"[gate-debug] {label}: {time.time() - t0:.3f}s", file=sys.stderr)
+from ..plans.compose import StageCache, materialize_shared
+from .conf import quarantine, start_micro_batches
 
 
 def _read_state(
@@ -295,7 +281,7 @@ def exact_gate_batch(
     m_bits: int = 1 << 18,
     n_hashes: int = 5,
     fingerprinted: bool = False,
-    caches: list[DataFrame] | None = None,
+    caches: StageCache | None = None,
 ) -> DataFrame:
     """One gating step: the subset of ``batch`` surviving exact dedup
     against the accepted state and smaller-id batch-mates. Returns the
@@ -311,11 +297,11 @@ def exact_gate_batch(
 
     ``caches``: when the caller will run SEVERAL actions on the result
     (the sink does: docs write, rejects write, sparse-bits aggregate),
-    pass a list — the persisted suspect frame is appended for the
-    CALLER to unpersist after its actions, so the cache actually serves
-    the downstream semi/anti joins. Without it the cache is released
-    here and only serves the isEmpty probe (each caller action then
-    re-runs the probe plan — fine for a single-action backfill).
+    pass its :class:`StageCache` — the suspect frame is persisted there
+    and released with the caller's other frames, so the cache actually
+    serves the downstream semi/anti joins. Without it the cache is
+    released here and only serves the isEmpty probe (each caller action
+    then re-runs the probe plan — fine for a single-action backfill).
 
     Per-batch cost shape (the round-6 1×-batch fixed-cost work): the
     suspect probe runs over RAW fingerprints — the first-arrival window
@@ -343,10 +329,9 @@ def exact_gate_batch(
         )
     else:
         suspects = b.select("_fp")
-    suspects = suspects.persist()
-    if caches is not None:
-        caches.append(suspects)
-    try:
+    scope = nullcontext(caches) if caches is not None else materialize_shared()
+    with scope as cache:
+        suspects = cache(suspects)
         if suspects.isEmpty():
             # definite-new batch: the fingerprint index is never scanned
             return first_arrival(b)
@@ -360,9 +345,6 @@ def exact_gate_batch(
                 "left_anti",
             )
         )
-    finally:
-        if caches is None:
-            suspects.unpersist()
 
 
 def _sparse_bloom_words(fps: DataFrame, m_bits: int, n_hashes: int) -> list:
@@ -398,7 +380,6 @@ def exact_dedup_gate_sink(
     shuffle_partitions: int | None = None,
     rejects_dir: str | None = None,
     inline_max: int = 10_000,
-    mode: str = "micro",
     driver_index_max: int = 1_000_000,
 ):
     """Start the exact-dedup gate as a ``foreachBatch`` streaming query
@@ -417,9 +398,9 @@ def exact_dedup_gate_sink(
     ``isin`` literals (pushed to the parquet scan); larger sets fall
     back to broadcast joins (dup-heavy backfill batches).
 
-    ``mode='micro'`` (default) is the ONE-JOB-per-batch path: the bloom
-    probe gates in-plan, suspect ROWS and accepted fps both ride out of
-    the single write job as ``Observation`` metrics, exact membership
+    A batch runs as ONE job: the bloom probe gates in-plan, suspect
+    ROWS and accepted fps both ride out of the single write job as
+    ``Observation`` metrics, exact membership
     for suspects resolves against a bounded driver-side fp dict
     (``driver_index_max`` entries; rebuilt from state on restart;
     replay-aware batch tags), surviving suspects append to the batch
@@ -434,31 +415,21 @@ def exact_dedup_gate_sink(
     billion-doc posture, where the only per-batch state touch is a
     pruned scan for the suspect sliver.
 
-    ``mode='bulk'`` is the distributed path (broadcast-join exact tier,
-    sparse ``bit_or`` bloom aggregation): for backfill-scale batches
-    where even fp LISTS shouldn't transit the driver. A micro-mode
-    batch that finds docs state but no usable filter (lost ``.bin``,
-    m_bits change) degrades to a bulk batch automatically — the rebuild
-    needs a full index pass anyway."""
+    A batch that finds docs state but no usable filter (lost ``.bin``,
+    m_bits change) takes the distributed bulk route instead (broadcast-
+    join exact tier, sparse ``bit_or`` bloom aggregation, no fp list on
+    the driver) — the rebuild needs a full index pass anyway."""
     docs_dir = os.path.join(base_dir, "docs")
     bloom_dir = os.path.join(base_dir, "bloom")
     n_words = m_bits // 32
-    # driver-side fp index (micro mode): fp -> batch_id that accepted it.
+    # driver-side fp index: fp -> batch_id that accepted it.
     # Entries tagged >= the current batch are invisible (replay safety).
     fp_seen: dict[str, int] = {}
     mstate = {"bootstrapped": False, "complete": False, "has_state": False}
-    # in-closure cumulative filter (micro mode): the words written for
+    # in-closure cumulative filter: the words written for
     # batch N-1 are exactly what batch N would re-read from disk — keep
     # them; the .bin file stays the restart/durability source of truth
     bloom_cache: dict[str, object] = {"batch_id": None, "words": None, "packed": None}
-
-    def _first_arrival(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
 
     def _state_schema(batch: DataFrame) -> StructType:
         return StructType(
@@ -501,147 +472,125 @@ def exact_dedup_gate_sink(
                 continue
             fp_seen[fp] = batch_id
 
-    def _process_micro(batch: DataFrame, batch_id: int) -> None:
+    def _process(batch: DataFrame, batch_id: int, cache: StageCache) -> None:
         spark = batch.sparkSession
-        _tb = _dbg_now()
-        with scoped_shuffle_partitions(spark, shuffle_partitions):
-            if not mstate["bootstrapped"]:
-                _bootstrap(spark, batch, batch_id)
-            if bloom_cache["batch_id"] == batch_id - 1:
-                prev = bloom_cache["words"]
-                packed = bloom_cache["packed"]
-            else:
-                prev = _read_prev_bloom(spark, bloom_dir, batch_id, n_words)
-                packed = _pack_bytes(prev) if prev is not None else None
-            if prev is None and mstate["has_state"]:
-                # docs state without a usable filter: every fp is a
-                # suspect and the filter needs a full-index rebuild —
-                # that's a bulk batch; re-bootstrap the dict after it
-                _process_bulk_inner(batch, batch_id, spark)
-                mstate["bootstrapped"] = False
-                fp_seen.clear()
-                bloom_cache["batch_id"] = None
-                return
-            b = batch.withColumn("_fp", fingerprint(text_col))
-            hit = (
-                _bloom_hit_packed("_fp", packed, m_bits, n_hashes)
-                if prev is not None
-                else F.lit(False)
-            )
-            obs_sus = Observation()
-            obs_acc = Observation()
-            struct_cols = [F.col(c) for c in batch.columns] + [F.col("_fp")]
-            # WINDOW-FIRST, probe second: the window shuffle materializes
-            # _fp, and the gate filter is ONE CaseWhen referencing _rn —
-            # PushDownPredicates can neither split it nor push it below
-            # the window, so the expensive fingerprint subtree is never
-            # inlined into the probe references (a post-project filter
-            # measured 42 regexp_replace copies per row — the md5+regex
-            # chain re-evaluated per probe half). The probe itself is
-            # projected ONCE as ``_hit`` inside whole-stage codegen; the
-            # CollectMetrics suspect metric (which evaluates its
-            # expressions INTERPRETED, per row) then reads the boolean
-            # attribute instead of re-running substring/conv chains.
-            w = Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
-            win = b.select(
-                "*",
-                F.row_number().over(w).alias("_rn"),
-                F.coalesce(hit, F.lit(False)).alias("_hit"),
-            ).observe(
-                obs_sus,
-                F.collect_list(
-                    F.when(
-                        F.col("_hit") & (F.col("_rn") == 1),
-                        F.struct(*struct_cols),
-                    )
-                ).alias("sus"),
-            )
-            keep = F.when(F.col("_rn") != 1, F.lit(False)).otherwise(
-                ~F.col("_hit")
-            )
-            survivors = (
-                win.where(keep)
-                .select(*batch.columns, F.col("_fp").alias("fp"))
-                .observe(obs_acc, F.collect_list("fp").alias("fps"))
-            )
-            batch_dir = os.path.join(docs_dir, f"batch_id={batch_id}")
-            _t0 = _dbg_now()
-            survivors.write.mode("overwrite").parquet(batch_dir)
-            _dbg(f"gate b{batch_id} write", _t0)
-            _t0 = _dbg_now()
-            suspect_rows = obs_sus.get["sus"]
-            accepted = [fp for fp in obs_acc.get["fps"] if fp is not None]
-            _dbg(f"gate b{batch_id} obs-get", _t0)
-
-            # resolve suspects driver-side: first arrival per fp, then
-            # membership via the dict (entries tagged < batch_id only —
-            # a replay must not gate against its own prior attempt)
-            first: dict[str, object] = {}
-            for r in sorted(suspect_rows, key=lambda r: (r["_fp"], r[id_col])):
-                first.setdefault(r["_fp"], r)
-            unknown = [
-                fp
-                for fp in first
-                if not (fp in fp_seen and fp_seen[fp] < batch_id)
-            ]
-            if unknown and not mstate["complete"]:
-                # absence is not provable from a partial dict: pruned
-                # index scan for the unknown sliver
-                idx = spark.read.schema(_state_schema(batch)).parquet(docs_dir)
-                idx = idx.where(F.col("batch_id") < F.lit(batch_id)).select("fp")
-                if len(unknown) <= inline_max:
-                    known_dup = {
-                        r[0] for r in idx.where(F.col("fp").isin(unknown)).collect()
-                    }
-                else:
-                    udf_ = spark.createDataFrame(
-                        [(u,) for u in unknown], "fp string"
-                    )
-                    known_dup = {
-                        r[0]
-                        for r in idx.join(
-                            F.broadcast(udf_), "fp", "left_semi"
-                        ).collect()
-                    }
-            else:
-                known_dup = set()
-            new_suspects = [
-                first[fp]
-                for fp in first
-                if fp not in known_dup and not (fp in fp_seen and fp_seen[fp] < batch_id)
-            ]
-            if new_suspects:
-                _append_rows_pyarrow(
-                    batch_dir, new_suspects, survivors.schema, batch.columns
+        if not mstate["bootstrapped"]:
+            _bootstrap(spark, batch, batch_id)
+        if bloom_cache["batch_id"] == batch_id - 1:
+            prev = bloom_cache["words"]
+            packed = bloom_cache["packed"]
+        else:
+            prev = _read_prev_bloom(spark, bloom_dir, batch_id, n_words)
+            packed = _pack_bytes(prev) if prev is not None else None
+        if prev is None and mstate["has_state"]:
+            # docs state without a usable filter: every fp is a
+            # suspect and the filter needs a full-index rebuild —
+            # that's a bulk batch; re-bootstrap the dict after it
+            _process_bulk(batch, batch_id, cache)
+            mstate["bootstrapped"] = False
+            fp_seen.clear()
+            bloom_cache["batch_id"] = None
+            return
+        b = batch.withColumn("_fp", fingerprint(text_col))
+        hit = (
+            _bloom_hit_packed("_fp", packed, m_bits, n_hashes)
+            if prev is not None
+            else F.lit(False)
+        )
+        obs_sus = Observation()
+        obs_acc = Observation()
+        struct_cols = [F.col(c) for c in batch.columns] + [F.col("_fp")]
+        # WINDOW-FIRST, probe second: the window shuffle materializes
+        # _fp, and the gate filter is ONE CaseWhen referencing _rn —
+        # PushDownPredicates can neither split it nor push it below
+        # the window, so the expensive fingerprint subtree is never
+        # inlined into the probe references (a post-project filter
+        # measured 42 regexp_replace copies per row — the md5+regex
+        # chain re-evaluated per probe half). The probe itself is
+        # projected ONCE as ``_hit`` inside whole-stage codegen; the
+        # CollectMetrics suspect metric (which evaluates its
+        # expressions INTERPRETED, per row) then reads the boolean
+        # attribute instead of re-running substring/conv chains.
+        w = Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
+        win = b.select(
+            "*",
+            F.row_number().over(w).alias("_rn"),
+            F.coalesce(hit, F.lit(False)).alias("_hit"),
+        ).observe(
+            obs_sus,
+            F.collect_list(
+                F.when(
+                    F.col("_hit") & (F.col("_rn") == 1),
+                    F.struct(*struct_cols),
                 )
-            _t0 = _dbg_now()
-            mstate["has_state"] = True
-            _remember(accepted, batch_id)
-            _remember((r["_fp"] for r in new_suspects), batch_id)
+            ).alias("sus"),
+        )
+        keep = F.when(F.col("_rn") != 1, F.lit(False)).otherwise(~F.col("_hit"))
+        survivors = (
+            win.where(keep)
+            .select(*batch.columns, F.col("_fp").alias("fp"))
+            .observe(obs_acc, F.collect_list("fp").alias("fps"))
+        )
+        batch_dir = os.path.join(docs_dir, f"batch_id={batch_id}")
+        survivors.write.mode("overwrite").parquet(batch_dir)
+        suspect_rows = obs_sus.get["sus"]
+        accepted = [fp for fp in obs_acc.get["fps"] if fp is not None]
 
-            merged = list(prev) if prev is not None else [0] * n_words
-            _py_set_bits(merged, accepted, m_bits, n_hashes)
-            _py_set_bits(
-                merged, (r["_fp"] for r in new_suspects), m_bits, n_hashes
+        # resolve suspects driver-side: first arrival per fp, then
+        # membership via the dict (entries tagged < batch_id only —
+        # a replay must not gate against its own prior attempt)
+        first: dict[str, object] = {}
+        for r in sorted(suspect_rows, key=lambda r: (r["_fp"], r[id_col])):
+            first.setdefault(r["_fp"], r)
+        unknown = [
+            fp for fp in first if not (fp in fp_seen and fp_seen[fp] < batch_id)
+        ]
+        if unknown and not mstate["complete"]:
+            # absence is not provable from a partial dict: pruned
+            # index scan for the unknown sliver
+            idx = spark.read.schema(_state_schema(batch)).parquet(docs_dir)
+            idx = idx.where(F.col("batch_id") < F.lit(batch_id)).select("fp")
+            if len(unknown) <= inline_max:
+                known_dup = {
+                    r[0] for r in idx.where(F.col("fp").isin(unknown)).collect()
+                }
+            else:
+                udf_ = spark.createDataFrame([(u,) for u in unknown], "fp string")
+                known_dup = {
+                    r[0]
+                    for r in idx.join(F.broadcast(udf_), "fp", "left_semi").collect()
+                }
+        else:
+            known_dup = set()
+        new_suspects = [
+            first[fp]
+            for fp in first
+            if fp not in known_dup and not (fp in fp_seen and fp_seen[fp] < batch_id)
+        ]
+        if new_suspects:
+            _append_rows_pyarrow(
+                batch_dir, new_suspects, survivors.schema, batch.columns
             )
-            _dbg(f"gate b{batch_id} py-bits", _t0)
-            _t0 = _dbg_now()
-            _write_bloom_words(spark, bloom_dir, batch_id, merged)
-            _dbg(f"gate b{batch_id} bloom-commit", _t0)
-            bloom_cache["batch_id"] = batch_id
-            bloom_cache["words"] = merged
-            bloom_cache["packed"] = _pack_bytes(merged)
-            _retire_bloom(spark, batch_id)
-            _dbg(f"gate b{batch_id} batch-total", _tb)
-            if rejects_dir is not None:
-                # read-back anti-join: rejected = batch rows minus the
-                # just-committed batch dir (opt-in, one extra action)
-                kept = spark.read.parquet(batch_dir).select(id_col)
-                batch.join(F.broadcast(kept), id_col, "left_anti").withColumn(
-                    "reason", F.lit("duplicate")
-                ).write.mode("overwrite").parquet(
-                    os.path.join(rejects_dir, f"batch_id={batch_id}")
-                )
+        mstate["has_state"] = True
+        _remember(accepted, batch_id)
+        _remember((r["_fp"] for r in new_suspects), batch_id)
+
+        merged = list(prev) if prev is not None else [0] * n_words
+        _py_set_bits(merged, accepted, m_bits, n_hashes)
+        _py_set_bits(merged, (r["_fp"] for r in new_suspects), m_bits, n_hashes)
+        _write_bloom_words(spark, bloom_dir, batch_id, merged)
+        bloom_cache["batch_id"] = batch_id
+        bloom_cache["words"] = merged
+        bloom_cache["packed"] = _pack_bytes(merged)
+        _retire_bloom(spark, batch_id)
+        if rejects_dir is not None:
+            # read-back anti-join: rejected = batch rows minus the
+            # just-committed batch dir (opt-in, one extra action)
+            kept = spark.read.parquet(batch_dir).select(id_col)
+            quarantine(
+                batch.join(F.broadcast(kept), id_col, "left_anti"),
+                "duplicate", rejects_dir, batch_id,
+            )
 
     def _retire_bloom(spark: SparkSession, batch_id: int) -> None:
         # retire stale cumulative filters: batch N reads exactly N-1,
@@ -652,78 +601,62 @@ def exact_dedup_gate_sink(
             if fs.exists(jold):
                 fs.delete(jold, False)
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        if mode == "micro":
-            _process_micro(batch, batch_id)
-        else:
-            _process_bulk_inner(batch, batch_id, batch.sparkSession)
-
-    def _process_bulk_inner(batch: DataFrame, batch_id: int, spark) -> None:
-        """Distributed gating step (module docstring ``mode='bulk'``):
-        exact tier via ``exact_gate_batch`` broadcast joins, bloom bits
-        via the sparse ``bit_or`` aggregation — no fp list ever
-        transits the driver."""
-        with scoped_shuffle_partitions(spark, shuffle_partitions):
-            docs_state = _read_state(
-                spark, docs_dir, before_batch=batch_id, schema=_state_schema(batch)
-            )
-            fps_index = docs_state.select("fp") if docs_state is not None else None
-            prev = _read_prev_bloom(spark, bloom_dir, batch_id, n_words)
-            bloom_row = (
-                spark.createDataFrame([(prev,)], "bloom array<long>")
-                if prev is not None
-                else None
-            )
-            b = batch.withColumn("_fp", fingerprint(text_col))
-            gate_caches: list[DataFrame] = []
-            survivors = exact_gate_batch(
+    def _process_bulk(batch: DataFrame, batch_id: int, cache: StageCache) -> None:
+        """Distributed gating step (sink docstring): exact tier via
+        ``exact_gate_batch`` broadcast joins, bloom bits via the sparse
+        ``bit_or`` aggregation — no fp list ever transits the driver."""
+        spark = batch.sparkSession
+        docs_state = _read_state(
+            spark, docs_dir, before_batch=batch_id, schema=_state_schema(batch)
+        )
+        fps_index = docs_state.select("fp") if docs_state is not None else None
+        prev = _read_prev_bloom(spark, bloom_dir, batch_id, n_words)
+        bloom_row = (
+            spark.createDataFrame([(prev,)], "bloom array<long>")
+            if prev is not None
+            else None
+        )
+        b = batch.withColumn("_fp", fingerprint(text_col))
+        survivors = cache(
+            exact_gate_batch(
                 b, fps_index, bloom_row, text_col, id_col, m_bits, n_hashes,
-                fingerprinted=True, caches=gate_caches,
-            ).persist()
-            try:
-                survivors.withColumnRenamed("_fp", "fp").write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(docs_dir, f"batch_id={batch_id}"))
-                if rejects_dir is not None:
-                    # original batch minus survivors: batch-internal dups
-                    # (window-dropped) AND state matches, both 'duplicate'
-                    batch.join(
-                        F.broadcast(survivors.select(F.col(id_col))),
-                        id_col,
-                        "left_anti",
-                    ).withColumn("reason", F.lit("duplicate")).write.mode(
-                        "overwrite"
-                    ).parquet(os.path.join(rejects_dir, f"batch_id={batch_id}"))
-                # the written filter must stay the OR of EVERY accepted
-                # fingerprint: with a predecessor, that's prev | new
-                # bits; with docs state but NO usable predecessor (lost
-                # file, or an m_bits change rejected by the size check),
-                # rebuild from the full index — writing new-batch bits
-                # alone would hand the NEXT batch a filter with false
-                # definitely-news, admitting duplicates one batch later
-                new_fps = survivors.select(F.col("_fp").alias("fp")).where(
-                    F.col("_fp").isNotNull()
-                )
-                bloom_src = (
-                    new_fps
-                    if prev is not None or fps_index is None
-                    else fps_index.where(F.col("fp").isNotNull()).union(new_fps)
-                )
-                merged = list(prev) if prev is not None else [0] * n_words
-                for r in _sparse_bloom_words(bloom_src, m_bits, n_hashes):
-                    merged[r["_w"]] |= r["_word"]
-                _write_bloom_words(spark, bloom_dir, batch_id, merged)
-                _retire_bloom(spark, batch_id)
-            finally:
-                survivors.unpersist()
-                for c in gate_caches:
-                    c.unpersist()
+                fingerprinted=True, caches=cache,
+            )
+        )
+        survivors.withColumnRenamed("_fp", "fp").write.mode("overwrite").parquet(
+            os.path.join(docs_dir, f"batch_id={batch_id}")
+        )
+        if rejects_dir is not None:
+            # original batch minus survivors: batch-internal dups
+            # (window-dropped) AND state matches, both 'duplicate'
+            quarantine(
+                batch.join(
+                    F.broadcast(survivors.select(F.col(id_col))), id_col, "left_anti"
+                ),
+                "duplicate", rejects_dir, batch_id,
+            )
+        # the written filter must stay the OR of EVERY accepted
+        # fingerprint: with a predecessor, that's prev | new bits; with
+        # docs state but NO usable predecessor (lost file, or an m_bits
+        # change rejected by the size check), rebuild from the full
+        # index — writing new-batch bits alone would hand the NEXT batch
+        # a filter with false definitely-news, admitting duplicates one
+        # batch later
+        new_fps = survivors.select(F.col("_fp").alias("fp")).where(
+            F.col("_fp").isNotNull()
+        )
+        bloom_src = (
+            new_fps
+            if prev is not None or fps_index is None
+            else fps_index.where(F.col("fp").isNotNull()).union(new_fps)
+        )
+        merged = list(prev) if prev is not None else [0] * n_words
+        for r in _sparse_bloom_words(bloom_src, m_bits, n_hashes):
+            merged[r["_w"]] |= r["_word"]
+        _write_bloom_words(spark, bloom_dir, batch_id, merged)
+        _retire_bloom(spark, batch_id)
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_micro_batches(
+        docs_stream, _process, checkpoint_dir, "append", trigger_available_now,
+        shuffle_partitions,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

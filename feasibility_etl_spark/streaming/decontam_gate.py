@@ -48,7 +48,8 @@ from ..operators.sketches import (
     _bloom_maybe_contains_md5,
     bloom_build,
 )
-from .conf import scoped_shuffle_partitions
+from ..plans.compose import StageCache
+from .conf import quarantine, spread, start_micro_batches
 
 
 def decontam_gate_batch(
@@ -116,8 +117,8 @@ def decontam_gate_sink(
     """Start the decontamination gate as a ``foreachBatch`` streaming
     query (tiers, layout and posture in the module docstring).
     ``eval_docs`` is a STATIC frame (the benchmark corpus); its gram set
-    and Bloom filter are built and persisted once here and reused by
-    every micro-batch. ``m_bits`` sizes the filter for the EVAL gram
+    and Bloom filter are built and persisted once here, reused by every
+    micro-batch and released when the query ends. ``m_bits`` sizes the filter for the EVAL gram
     count (~10 bits per gram for ~1% FPR).
 
     ``rejects_dir``: opt-in quarantine (the E-ISOLATE pattern at the
@@ -127,48 +128,34 @@ def decontam_gate_sink(
     vanishing. Off by default: it costs one extra action per batch."""
     docs_dir = os.path.join(base_dir, "docs")
     sh = F.array_distinct(shingles(F.col(text_col), n=ngram))
-    eval_grams = (
-        eval_docs.select(F.explode(sh).alias("_g")).distinct().persist()
+    sink_cache = StageCache()
+    eval_grams = sink_cache(eval_docs.select(F.explode(sh).alias("_g")).distinct())
+    bloom_row = sink_cache(
+        bloom_build(eval_grams, "_g", m_bits=m_bits, n_hashes=n_hashes)
     )
-    bloom_row = bloom_build(
-        eval_grams, "_g", m_bits=m_bits, n_hashes=n_hashes
-    ).persist()
-    eval_ids = eval_docs.select(id_col).distinct().persist()
+    eval_ids = sink_cache(eval_docs.select(id_col).distinct())
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        with scoped_shuffle_partitions(spark, shuffle_partitions):
-            width = shuffle_partitions or spark.sparkContext.defaultParallelism
-            rb = batch.repartition(width)
-            if rejects_dir is not None:
-                rb = rb.persist()
-            survivors = decontam_gate_batch(
-                rb, eval_grams, bloom_row,
-                text_col, id_col, ngram, m_bits, n_hashes,
-                eval_ids=eval_ids,
+    def _process(batch: DataFrame, batch_id: int, cache) -> None:
+        rb = spread(batch, shuffle_partitions)
+        if rejects_dir is not None:
+            rb = cache(rb)
+        survivors = decontam_gate_batch(
+            rb, eval_grams, bloom_row,
+            text_col, id_col, ngram, m_bits, n_hashes,
+            eval_ids=eval_ids,
+        )
+        if rejects_dir is not None:
+            survivors = cache(survivors)
+        survivors.write.mode("overwrite").parquet(
+            os.path.join(docs_dir, f"batch_id={batch_id}")
+        )
+        if rejects_dir is not None:
+            quarantine(
+                rb.join(F.broadcast(survivors.select(id_col)), id_col, "left_anti"),
+                "contaminated", rejects_dir, batch_id,
             )
-            if rejects_dir is not None:
-                survivors = survivors.persist()
-            try:
-                survivors.write.mode("overwrite").parquet(
-                    os.path.join(docs_dir, f"batch_id={batch_id}")
-                )
-                if rejects_dir is not None:
-                    rb.join(
-                        F.broadcast(survivors.select(id_col)), id_col, "left_anti"
-                    ).withColumn("reason", F.lit("contaminated")).write.mode(
-                        "overwrite"
-                    ).parquet(os.path.join(rejects_dir, f"batch_id={batch_id}"))
-            finally:
-                if rejects_dir is not None:
-                    survivors.unpersist()
-                    rb.unpersist()
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_micro_batches(
+        docs_stream, _process, checkpoint_dir, "append", trigger_available_now,
+        shuffle_partitions, sink_cache,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

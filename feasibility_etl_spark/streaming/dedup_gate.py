@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import incremental_near_dups, minhash_index
-from .conf import scoped_shuffle_partitions
+from .conf import quarantine, spread, start_micro_batches
 
 
 def _read_index(
@@ -190,77 +190,54 @@ def near_dup_gate_sink(
     stage (a file-source micro-batch arrives with as many partitions as
     trigger files — often 1-2 cores' worth of CPU otherwise).
 
-    ``shuffle_partitions``: scoped override of
-    ``spark.sql.shuffle.partitions`` while a micro-batch plans (restored
-    after). AQE is disabled under streaming queries, so nothing coalesces
-    the gate's post-shuffle partitions; a micro-batch is small by
-    construction, and running its handful of shuffles at the session's
-    batch-sized parallelism mostly schedules empty tasks. Set it near the
-    per-batch row count / target partition size; leave None to keep the
-    session setting (e.g. when micro-batches are themselves huge).
+    ``shuffle_partitions``: the scoped micro-batch override every sink
+    takes (rationale in ``streaming/conf.py``).
     """
     docs_dir = os.path.join(base_dir, "docs")
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
+    def _process(batch: DataFrame, batch_id: int, cache) -> None:
         spark = batch.sparkSession
-        with scoped_shuffle_partitions(spark, shuffle_partitions):
-            # A file-source micro-batch arrives with as many partitions
-            # as trigger FILES (often 1-2): left alone, the shingle+
-            # minhash stage — the gate's dominant CPU — runs on that
-            # many cores. Spread the batch across the gate's shuffle
-            # width first and cache it (every downstream reference —
-            # signatures, drop set, survivor write — reuses the spread).
-            width = shuffle_partitions or spark.sparkContext.defaultParallelism
-            rb = batch.repartition(width).persist()
-            index = _read_index(
-                spark,
-                docs_dir,
-                id_col=id_col,
-                id_type=batch.schema[id_col].dataType.simpleString(),
-                before_batch=batch_id,
+        # cached: every downstream reference — signatures, drop set,
+        # survivor write — reuses the spread
+        rb = cache(spread(batch, shuffle_partitions))
+        index = _read_index(
+            spark,
+            docs_dir,
+            id_col=id_col,
+            id_type=batch.schema[id_col].dataType.simpleString(),
+            before_batch=batch_id,
+        )
+        new_idx = cache(
+            minhash_index(rb, text_col, id_col, num_hashes, bands, shingle_n)
+        )
+        # drops is consumed exactly once (below), so it is neither
+        # persisted nor pre-materialized: the batch runs as ONE
+        # Python-sequenced action — the combined write — and every
+        # broadcast inside it builds without a driver round-trip
+        # between jobs. The round-4 two-write layout cost 2 writes +
+        # 2 eager drop broadcasts + a drops materialization, each a
+        # Python-side action with its own scheduling latency.
+        drops = drop_ids(
+            rb, index, text_col, id_col, threshold, num_hashes, bands,
+            shingle_n, new_index=new_idx,
+        )
+        if rejects_dir is not None:
+            # quarantine makes drops a two-consumer frame again
+            drops = cache(drops)
+        combined = (
+            rb.join(F.broadcast(new_idx), id_col)
+            .join(F.broadcast(drops), id_col, "left_anti")
+        )
+        combined.write.mode("overwrite").parquet(
+            os.path.join(docs_dir, f"batch_id={batch_id}")
+        )
+        if rejects_dir is not None:
+            quarantine(
+                rb.join(F.broadcast(drops), id_col, "left_semi"),
+                "near_duplicate", rejects_dir, batch_id,
             )
-            new_idx = minhash_index(
-                rb, text_col, id_col, num_hashes, bands, shingle_n
-            ).persist()
-            # drops is consumed exactly once (below), so it is neither
-            # persisted nor pre-materialized: the batch runs as ONE
-            # Python-sequenced action — the combined write — and every
-            # broadcast inside it builds without a driver round-trip
-            # between jobs. The round-4 two-write layout cost 2 writes +
-            # 2 eager drop broadcasts + a drops materialization, each a
-            # Python-side action with its own scheduling latency.
-            drops = drop_ids(
-                rb, index, text_col, id_col, threshold, num_hashes, bands,
-                shingle_n, new_index=new_idx,
-            )
-            if rejects_dir is not None:
-                # quarantine makes drops a two-consumer frame again
-                drops = drops.persist()
-            try:
-                combined = (
-                    rb.join(F.broadcast(new_idx), id_col)
-                    .join(F.broadcast(drops), id_col, "left_anti")
-                )
-                combined.write.mode("overwrite").parquet(
-                    os.path.join(docs_dir, f"batch_id={batch_id}")
-                )
-                if rejects_dir is not None:
-                    rb.join(F.broadcast(drops), id_col, "left_semi").withColumn(
-                        "reason", F.lit("near_duplicate")
-                    ).write.mode("overwrite").parquet(
-                        os.path.join(rejects_dir, f"batch_id={batch_id}")
-                    )
-            finally:
-                if rejects_dir is not None:
-                    drops.unpersist()
-                new_idx.unpersist()
-                rb.unpersist()
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_micro_batches(
+        docs_stream, _process, checkpoint_dir, "append", trigger_available_now,
+        shuffle_partitions,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -40,7 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.classifier import LinearTextModel, classifier_score
-from .conf import scoped_shuffle_partitions
+from ..plans.compose import StageCache
+from .conf import quarantine, spread, start_micro_batches
 
 
 def score_cut(
@@ -107,8 +108,9 @@ def quality_gate_sink(
 ):
     """Start the quality gate as a ``foreachBatch`` streaming query
     (tiers, layout and posture in the module docstring). ``model`` is a
-    TRAINED :class:`LinearTextModel`; its frames are persisted here and
-    reused by every micro-batch. The feature space resolves from the
+    TRAINED :class:`LinearTextModel`; its frames are persisted here,
+    reused by every micro-batch and released (unpersisted, also for the
+    caller) when the query ends. The feature space resolves from the
     MODEL (explicit ``num_buckets``/``word_ngrams`` must agree with
     training — ``classifier_score`` raises on a mismatch).
 
@@ -118,43 +120,30 @@ def quality_gate_sink(
     replay-idempotent). Off by default: it costs one extra action per
     batch."""
     docs_dir = os.path.join(base_dir, "docs")
+    sink_cache = StageCache()
     model = model._replace(
-        weights=model.weights.persist(), consts=model.consts.persist()
+        weights=sink_cache(model.weights), consts=sink_cache(model.consts)
     )
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        with scoped_shuffle_partitions(spark, shuffle_partitions):
-            width = shuffle_partitions or spark.sparkContext.defaultParallelism
-            rb = batch.repartition(width)
-            if rejects_dir is not None:
-                rb = rb.persist()
-            survivors = quality_gate_batch(
-                rb, model, threshold_e9, text_col, id_col,
-                num_buckets, word_ngrams,
+    def _process(batch: DataFrame, batch_id: int, cache) -> None:
+        rb = spread(batch, shuffle_partitions)
+        if rejects_dir is not None:
+            rb = cache(rb)
+        survivors = quality_gate_batch(
+            rb, model, threshold_e9, text_col, id_col, num_buckets, word_ngrams,
+        )
+        if rejects_dir is not None:
+            survivors = cache(survivors)
+        survivors.write.mode("overwrite").parquet(
+            os.path.join(docs_dir, f"batch_id={batch_id}")
+        )
+        if rejects_dir is not None:
+            quarantine(
+                rb.join(F.broadcast(survivors.select(id_col)), id_col, "left_anti"),
+                "low_quality", rejects_dir, batch_id,
             )
-            if rejects_dir is not None:
-                survivors = survivors.persist()
-            try:
-                survivors.write.mode("overwrite").parquet(
-                    os.path.join(docs_dir, f"batch_id={batch_id}")
-                )
-                if rejects_dir is not None:
-                    rb.join(
-                        F.broadcast(survivors.select(id_col)), id_col, "left_anti"
-                    ).withColumn("reason", F.lit("low_quality")).write.mode(
-                        "overwrite"
-                    ).parquet(os.path.join(rejects_dir, f"batch_id={batch_id}"))
-            finally:
-                if rejects_dir is not None:
-                    survivors.unpersist()
-                    rb.unpersist()
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_micro_batches(
+        docs_stream, _process, checkpoint_dir, "append", trigger_available_now,
+        shuffle_partitions, sink_cache,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
 from ..writer.scd2 import scd2_apply
-from .conf import scoped_shuffle_partitions
+from .conf import start_micro_batches
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -137,8 +137,8 @@ def scd2_sink(
     ``changes``: streaming frame of (natural_key, *tracked, ts_col)
     observations. ``hist_dir``: the history root (layout in the module
     docstring; read it back with :func:`read_scd2_history`).
-    ``shuffle_partitions``: scoped micro-batch override, same rationale
-    as ``near_dup_gate_sink``.
+    ``shuffle_partitions``: the scoped micro-batch override every sink
+    takes (rationale in ``streaming/conf.py``).
 
     Per-batch plan shape: ``scd2_apply`` folds the batch into the
     predecessor OPEN slice only (closed rows are pass-through by
@@ -152,40 +152,32 @@ def scd2_sink(
     closed_dir = f"{root}/closed"
     open_dir = f"{root}/open"
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
+    def _process(batch: DataFrame, batch_id: int, cache) -> None:
         spark = batch.sparkSession
-        with scoped_shuffle_partitions(spark, shuffle_partitions):
-            versions = _complete_versions(spark, open_dir)
-            prev = max((v for v in versions if v != batch_id), default=None)
-            prev_open = (
-                spark.read.parquet(f"{open_dir}/v={prev}") if prev is not None else None
-            )
-            folded = scd2_apply(
-                batch, natural_key, tracked, ts_col=ts_col, hist=prev_open
-            ).persist()
-            try:
-                # closed delta first (append-only; duplicates from replay are
-                # identical rows, healed on read), then the open-slice commit
-                # that makes it visible.
-                folded.where(~F.col("is_current")).withColumn(
-                    "batch_id", F.lit(batch_id)
-                ).write.mode("append").partitionBy("batch_id").parquet(closed_dir)
-                folded.where(F.col("is_current")).write.mode("overwrite").parquet(
-                    f"{open_dir}/v={batch_id}"
-                )
-            finally:
-                folded.unpersist()
-            keep = {batch_id} if prev is None else {prev, batch_id}
-            _retire_versions(spark, open_dir, keep)
+        versions = _complete_versions(spark, open_dir)
+        prev = max((v for v in versions if v != batch_id), default=None)
+        prev_open = (
+            spark.read.parquet(f"{open_dir}/v={prev}") if prev is not None else None
+        )
+        folded = cache(
+            scd2_apply(batch, natural_key, tracked, ts_col=ts_col, hist=prev_open)
+        )
+        # closed delta first (append-only; duplicates from replay are
+        # identical rows, healed on read), then the open-slice commit
+        # that makes it visible.
+        folded.where(~F.col("is_current")).withColumn(
+            "batch_id", F.lit(batch_id)
+        ).write.mode("append").partitionBy("batch_id").parquet(closed_dir)
+        folded.where(F.col("is_current")).write.mode("overwrite").parquet(
+            f"{open_dir}/v={batch_id}"
+        )
+        keep = {batch_id} if prev is None else {prev, batch_id}
+        _retire_versions(spark, open_dir, keep)
 
-    writer = (
-        changes.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_micro_batches(
+        changes, _process, checkpoint_dir, "update", trigger_available_now,
+        shuffle_partitions,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def compact_scd2_closed(

@@ -275,12 +275,8 @@ def denormalizing_sink(
     delivery; Spark serializes foreachBatch calls, so read-modify-write per
     batch is single-writer). Returns the StreamingQuery.
 
-    ``shuffle_partitions``: scoped override of
-    ``spark.sql.shuffle.partitions`` while a micro-batch plans (restored
-    after) — AQE is off under streaming queries, so the writer's joins
-    otherwise run batch-sized partition counts over micro-batch-sized
-    data. Size to the expected per-batch volume; None keeps the session
-    setting.
+    ``shuffle_partitions``: the scoped micro-batch override every sink
+    takes (rationale in ``streaming/conf.py``).
 
     ``fact_partitions``: output-file sizing for the fact append (guide
     §6 — small files hurt twice: driver listing/planning and per-file
@@ -296,24 +292,17 @@ def denormalizing_sink(
     fact's) and always land as one file per batch.
     """
     from ..writer.denormalized import commit_denormalized
-    from .conf import scoped_shuffle_partitions
+    from .conf import start_micro_batches
 
-    def process(batch_df, batch_id: int) -> None:
+    def process(batch_df, batch_id: int, cache) -> None:
         # every write is executor-side: a catch-up micro-batch after
         # downtime can be arbitrarily large, so nothing collects to the
         # driver
-        with scoped_shuffle_partitions(batch_df.sparkSession, shuffle_partitions):
-            commit_denormalized(
-                batch_df, specs, parquet_root, fact_key=fact_key,
-                required=required, fact_partitions=fact_partitions,
-            )
+        commit_denormalized(
+            batch_df, specs, parquet_root, fact_key=fact_key,
+            required=required, fact_partitions=fact_partitions,
+        )
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return start_micro_batches(
+        stream, process, checkpoint, "update", available_now, shuffle_partitions
     )
-    if available_now:
-        # drain-everything-then-stop mode (bench / backfill runs)
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

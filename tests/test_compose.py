@@ -114,28 +114,3 @@ def test_cut_collapses_plan_to_leaf_with_identical_values(spark):
         assert a == b == sum(s for _, s in expect)
     finally:
         cache.release()
-
-
-def test_cut_lazy_runs_no_jobs_and_restores_conf(spark):
-    # eager=False must (a) run ZERO jobs at construction, (b) restore the
-    # AQE/broadcast confs it temporarily disables for the frozen compile,
-    # (c) still produce identical values on first action
-    cache = StageCache()
-    sc = spark.sparkContext
-    before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    before_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    # settle any async job bookkeeping, then snapshot the job counter
-    spark.range(1).count()
-    base_jobs = sc._jsc.sc().dagScheduler().nextJobId()
-    try:
-        df = spark.range(100).withColumn("v", F.col("id") + 1)
-        leaf = cache.cut(df, eager=False)
-        after_jobs = sc._jsc.sc().dagScheduler().nextJobId()
-        assert after_jobs == base_jobs, "lazy cut ran a job at construction"
-        assert spark.conf.get("spark.sql.adaptive.enabled") == before_aqe
-        assert (
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before_bc
-        )
-        assert leaf.agg(F.sum("v")).collect()[0][0] == 100 * 101 // 2
-    finally:
-        cache.release()

@@ -1,4 +1,4 @@
-"""Opt-in reject quarantine for the three ingest gates: docs ∪ rejects
+"""Opt-in reject quarantine for the four ingest gates: docs ∪ rejects
 partition the input, reasons are correct, and the default leaves no
 rejects directory (no extra per-batch action)."""
 
@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import os
 
+from feasibility_etl_spark.operators.classifier import train_log_odds
 from feasibility_etl_spark.streaming.bloom_gate import exact_dedup_gate_sink
 from feasibility_etl_spark.streaming.decontam_gate import decontam_gate_sink
 from feasibility_etl_spark.streaming.dedup_gate import near_dup_gate_sink
+from feasibility_etl_spark.streaming.quality_gate import quality_gate_sink
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches the "
@@ -82,6 +84,32 @@ def test_decontam_gate_quarantine(spark, tmp_path):
     dropped = spark.read.parquet(rej).collect()
     assert [r.doc_id for r in dropped] == [1]
     assert dropped[0].reason == "contaminated"
+
+
+def test_quality_gate_quarantine(spark, tmp_path):
+    ref = spark.createDataFrame(
+        [(100, "clean prose about query engines and planners", 1),
+         (101, "careful prose describing shuffle exchange and partitions", 1),
+         (102, "buy cheap pills now click here winner prize", 0),
+         (103, "click now cheap winner prize pills offer offer", 0)],
+        "doc_id long, text string, label int",
+    )
+    model = train_log_odds(ref, "label", num_buckets=512)
+    src = _stage(spark, tmp_path, [[(1, "prose about planners and shuffle"),
+                                    (2, "cheap pills click prize now")],
+                                   [(3, "winner winner cheap offer click"),
+                                    (4, "careful prose about query engines")]])
+    base, rej = str(tmp_path / "g"), str(tmp_path / "rej")
+    quality_gate_sink(
+        src, model, 0, base, str(tmp_path / "ck"), num_buckets=512,
+        shuffle_partitions=4, rejects_dir=rej,
+    ).awaitTermination()
+    kept = _ids(spark, base + "/docs")
+    dropped = spark.read.parquet(rej).collect()
+    assert kept == [1, 4]
+    assert sorted(r.doc_id for r in dropped) == [2, 3]
+    assert {r.reason for r in dropped} == {"low_quality"}
+    assert all(r.text for r in dropped)
 
 
 def test_quarantine_off_by_default(spark, tmp_path):
