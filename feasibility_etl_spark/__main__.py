@@ -93,8 +93,8 @@ def cmd_query(args) -> int:
     df = ALL_QUERIES[args.id](spark, args.sf_dir)
     if args.out:
         df.write.mode("overwrite").parquet(args.out)
-        print(json.dumps({"rows": spark.read.parquet(args.out).count(),
-                          "out": args.out}))
+        back = spark.read.schema(df.schema).parquet(args.out)
+        print(json.dumps({"rows": back.count(), "out": args.out}))
     else:
         df.show(args.limit, truncate=False)
     if not reused:
@@ -110,8 +110,8 @@ def cmd_sql(args) -> int:
     df = spark.sql(args.sql)
     if args.out:
         df.write.mode("overwrite").parquet(args.out)
-        print(json.dumps({"rows": spark.read.parquet(args.out).count(),
-                          "out": args.out}))
+        back = spark.read.schema(df.schema).parquet(args.out)
+        print(json.dumps({"rows": back.count(), "out": args.out}))
     else:
         df.show(args.limit, truncate=False)
     if not reused:

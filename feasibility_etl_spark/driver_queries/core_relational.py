@@ -31,7 +31,7 @@ def q_s_jdbc_sink(spark: SparkSession, sf: str) -> DataFrame:
     path = _scratch_dir("feasibility_etl_spark_sink")
     orders = load(spark, sf, "orders").where(F.col("o_orderstatus") == "F")
     orders.write.mode("overwrite").parquet(path)
-    back = spark.read.parquet(path)
+    back = spark.read.schema(orders.schema).parquet(path)
     return back.agg(
         F.count(F.lit(1)).alias("n_rows"), _sum_cents("o_totalprice", "total_cents")
     )

@@ -3,24 +3,26 @@
 Engine policy (SURVEY.md §1.3): sources always declare explicit StructType
 schemas — never infer. The reference hardcodes its ingest schema as JSON
 field paths (/root/reference/etl.js:127-148); we declare ours as Spark
-StructTypes. Explicit schemas also let Catalyst prune parquet columns from
-the scan (ReadSchema pushdown) without a sampling pass.
-
-At 100 TB the fact tables (lineitem / orders / events / documents) arrive as
-many-file parquet datasets; ``load`` reads the path lazily and Catalyst
-handles partition pruning and predicate pushdown. Nothing here collects.
+StructTypes. A declared schema means building a frame runs no Spark job
+(an inferring read runs one per table) and lets Catalyst prune parquet
+columns from the scan (ReadSchema pushdown).
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # The driver's TPC-H-ish corpus (TESTDATA.md / FIXTURES.md §B) with types as
-# verified from the parquet footers. Timestamps are physical INT64 millis /
-# nanos; Spark reads both as TimestampType.
+# verified from the parquet footers. Timestamps are INT64 micros
+# (``timestamp[us]``, no zone), which Spark reads as the declared
+# TimestampType; ``load`` converts the older INT64 nanos ``events.ts``.
 TABLES: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -120,36 +122,62 @@ def schema_for(name: str) -> T.StructType:
     return TABLES[name]
 
 
+def _footer(path: str) -> pa.Schema:
+    """The arrow schema of the first data file at ``path``: the file itself,
+    or, for a Spark-written directory, the first file outside the entries
+    Spark's listing skips too (``_SUCCESS``, ``.crc`` files, ``_temporary/``).
+    INT96 timestamps (Spark's default output) read as micros, so only an
+    INT64 NANOS column shows up as ``timestamp[ns]``."""
+    fs, root = pafs.FileSystem.from_uri(path if "://" in path else os.path.abspath(path))
+    info = fs.get_file_info(root)
+    if info.type == pafs.FileType.Directory:
+        entries = fs.get_file_info(pafs.FileSelector(root, recursive=True))
+        files = sorted(
+            e.path for e in entries
+            if e.type == pafs.FileType.File
+            and not any(
+                part.startswith(("_", ".")) for part in os.path.relpath(e.path, root).split(os.sep)
+            )
+        )
+    else:
+        files = [root] if info.type == pafs.FileType.File else []
+    if not files:
+        raise FileNotFoundError(f"no parquet data file at {path}")
+    with fs.open_input_file(files[0]) as f:
+        return pq.ParquetFile(f, coerce_int96_timestamp_unit="us").schema_arrow
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one catalog table from ``sf_dir`` as a DataFrame.
 
-    Column pruning + filter pushdown happen at the scan via Catalyst; callers
-    should select/filter directly on the returned frame rather than caching.
+    The read declares ``TABLES[name]``, so building the frame runs no Spark
+    job. One footer read on the driver checks that every declared column is
+    in the file: a declared read would return nulls for a missing one, so it
+    raises instead. Column pruning and filter pushdown happen at the scan;
+    callers select and filter the returned frame rather than caching it.
 
-    ``events.ts`` has shipped in two physical encodings across testdata
-    generations: INT64 TIMESTAMP(NANOS) (which Spark refuses to read as a
-    timestamp — we read nanos as long via
-    ``spark.sql.legacy.parquet.nanosAsLong`` and floor-convert with
-    ``timestamp_micros(ts div 1000)``; integer division, since a double
-    round-trip loses precision above 2^53) and plain TIMESTAMP(MICROS)
-    (readable directly; NTZ/LTZ both normalized to session-tz TimestampType).
-    DuckDB floors ns→µs the same way, so both engines see identical
-    microsecond timestamps either way. We branch on the observed read dtype,
-    not the file footer, so the scan stays a single lazy parquet read.
+    ``events.ts`` has shipped as INT64 TIMESTAMP(NANOS) in older testdata,
+    which Spark refuses as a timestamp. The footer tells the encodings
+    apart: nanos are read as the declared ``long`` and floor-converted with
+    ``timestamp_micros(ts div 1000)`` (integer division: a double loses
+    precision above 2^53), as DuckDB floors ns to µs.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {sorted(TABLES)}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        from pyspark.sql import functions as F
-
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return spark.read.parquet(path)
+    schema, footer = TABLES[name], _footer(path)
+    missing = [f.name for f in schema if f.name not in footer.names]
+    if missing:
+        raise ValueError(f"table {name!r}: {path} lacks declared column(s) {missing}")
+    ts = footer.field("ts").type if name == "events" else None
+    if isinstance(ts, pa.TimestampType) and ts.unit == "ns":
+        read = T.StructType(
+            [T.StructField("ts", T.LongType()) if f.name == "ts" else f for f in schema]
+        )
+        return spark.read.schema(read).parquet(path).withColumn(
+            "ts", F.expr("timestamp_micros(ts div 1000)")
+        )
+    return spark.read.schema(schema).parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import sys
+import time
+import uuid
 from pathlib import Path
 
 import pytest
@@ -18,3 +20,25 @@ def spark():
     s = build_session("tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+def jobs_run_by(spark, fn):
+    """``(fn(), number of Spark jobs fn submitted)``, counted by job group.
+
+    The status tracker fills from the listener bus asynchronously, so a
+    marker job in a second group runs after ``fn``: once the tracker shows
+    it, every job ``fn`` started is visible too (one bus, in order)."""
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    group, marker = f"count-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        sc.setJobGroup(marker, marker)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setJobGroup(None, None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reached the status tracker"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))

@@ -14,6 +14,7 @@ from feasibility_etl_spark.operators.sketches import (
 )
 
 from conftest import SF0001
+from feasibility_etl_spark.sources.catalog import load
 
 M = 1 << 14  # 16 Kbit keeps tests fast; FPR governed by n/m as usual
 K = 5
@@ -76,7 +77,7 @@ def test_empty_input_is_all_zeros(spark, members):
 
 
 def test_bloom_decontaminate_matches_exact(spark):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     eval_docs = docs.where(F.col("doc_id") % 11 == 0)
     exact = decontaminate(docs, eval_docs)
     fast = bloom_decontaminate(docs, eval_docs)
@@ -88,7 +89,7 @@ def test_bloom_decontaminate_matches_exact(spark):
 def test_bloom_decontaminate_small_filter_still_exact(spark):
     # undersized filter → many false positives → more suspects take the
     # exact path; the OUTPUT contract must hold regardless of m_bits
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     eval_docs = docs.where(F.col("doc_id") % 11 == 0)
     exact = decontaminate(docs, eval_docs)
     fast = bloom_decontaminate(docs, eval_docs, m_bits=1 << 10)

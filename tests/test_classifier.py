@@ -17,6 +17,7 @@ from feasibility_etl_spark.operators.classifier import (
 )
 
 from conftest import SF0001
+from feasibility_etl_spark.sources.catalog import load
 
 B = 8  # tiny bucket space so collisions are exercised
 
@@ -149,7 +150,7 @@ def test_learns_lexical_signal_sf0001(spark):
     space, and the multinomial sum must exploit COUNTS, not presence.
     (The corpus's ``lang`` column is metadata over a shared vocabulary —
     deliberately NOT separable — so the label is text-derived.)"""
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet").select(
+    docs = load(spark, SF0001, "documents").select(
         "doc_id",
         "text",
         (

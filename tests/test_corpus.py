@@ -6,11 +6,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import SF0001
 from feasibility_etl_spark.operators.corpus import (
     decontaminate,
     pack_shards,
     split_corpus,
 )
+from feasibility_etl_spark.sources.catalog import load
 
 WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
 
@@ -217,9 +219,8 @@ def test_novelty_short_doc_whole_text_shingle(spark):
 
 def test_novelty_partitioning_invariant(spark):
     from feasibility_etl_spark.operators.corpus import novelty_signals
-    from conftest import SF0001
 
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     a = sorted(map(tuple, novelty_signals(docs).collect()))
     b = sorted(map(tuple, novelty_signals(docs.repartition(7, "source")).collect()))
     assert a == b
@@ -228,7 +229,7 @@ def test_novelty_partitioning_invariant(spark):
 def test_sample_k_exact_counts_and_nesting(spark):
     from feasibility_etl_spark.operators.corpus import sample_k, stratified_sample
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     out = sample_k(docs, "source", 7)
     counts = {r.source: r.n for r in out.groupBy("source").count()
               .withColumnRenamed("count", "n").collect()}
@@ -252,7 +253,7 @@ def test_sample_k_exact_counts_and_nesting(spark):
 def test_sample_k_deterministic_across_partitioning(spark):
     from feasibility_etl_spark.operators.corpus import sample_k
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     a = sorted(r.doc_id for r in sample_k(docs, "lang", 5).collect())
     b = sorted(r.doc_id for r in sample_k(docs.repartition(9), "lang", 5).collect())
     assert a == b
@@ -264,7 +265,7 @@ def test_contamination_scores_consistent_with_binary_decontam(spark):
         decontaminate,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     eval_docs = docs.where(F.col("doc_id") % 11 == 0)
     scores = {r.doc_id: r for r in contamination_scores(docs, eval_docs).collect()}
     kept = {r.doc_id for r in decontaminate(docs, eval_docs).collect()}

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from conftest import SF0001
+from feasibility_etl_spark.sources.catalog import load
 from feasibility_etl_spark.sources.csv import CORRUPT_COL, read_csv, write_csv
 
 DOC_SCHEMA = T.StructType(
@@ -46,7 +47,7 @@ def test_roundtrip_exact_with_quoting(spark, tmpdir):
 
 
 def test_documents_table_roundtrip(spark, tmpdir):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     path = os.path.join(tmpdir, "docs")
     write_csv(docs, path)
     back = read_csv(spark, path, DOC_SCHEMA)
@@ -74,7 +75,7 @@ def test_corrupt_isolation(spark, tmpdir):
 
 
 def test_partitioned_layout(spark, tmpdir):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     path = os.path.join(tmpdir, "bylang")
     write_csv(docs, path, partition_by=["lang"])
     langs = {r.lang for r in docs.select("lang").distinct().collect()}

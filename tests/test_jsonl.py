@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from conftest import SF0001
+from feasibility_etl_spark.sources.catalog import load
 from feasibility_etl_spark.sources.jsonl import (
     CORRUPT_COL,
     read_jsonl,
@@ -36,7 +37,7 @@ def tmpdir():
 
 
 def test_roundtrip_exact(spark, tmpdir):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     path = os.path.join(tmpdir, "docs")
     write_jsonl(docs, path)
     back = read_jsonl(spark, path, DOC_SCHEMA)
@@ -62,7 +63,7 @@ def test_corrupt_isolation(spark, tmpdir):
 
 
 def test_gzip_roundtrip(spark, tmpdir):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet").limit(50)
+    docs = load(spark, SF0001, "documents").limit(50)
     path = os.path.join(tmpdir, "gz")
     write_jsonl(docs, path, compression="gzip")
     assert any(f.endswith(".gz") for f in os.listdir(path))
@@ -71,7 +72,7 @@ def test_gzip_roundtrip(spark, tmpdir):
 
 
 def test_partitioned_layout(spark, tmpdir):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     path = os.path.join(tmpdir, "bylang")
     write_jsonl(docs, path, partition_by=["lang"], compression=None)
     subdirs = {d for d in os.listdir(path) if d.startswith("lang=")}

@@ -307,3 +307,21 @@ def test_etl_incremental_batch_job_budget(spark, tmp_path, capsys):
     capsys.readouterr()
     (row,) = tracker.metrics_df().collect()
     assert row["n_jobs"] <= ETL_BATCH_MAX_JOBS, row
+
+
+#: the perfbench query-mix ids (``perfbench/workloads.py:MIX_IDS``)
+MIX_IDS = ["FLAGSHIP", "VIEW-CTE", "VIEW-IDIOMATIC", "J-DIM-REPORTER", "J-ATTACH",
+           "A-WORKLOG", "A-PIVOT", "WIN-SESSION", "J-ASOF", "TEXT-BM25",
+           "SEARCH-RRF", "SIM-TOPK", "DEDUP-EXACT", "TEXT-LANGID", "SKETCH-HLL",
+           "CORPUS-PACK", "BPE-ENCODE", "CLS-SCORE"]
+
+
+@pytest.mark.parametrize("qid", MIX_IDS)
+def test_query_mix_frame_builds_with_no_jobs(spark, qid):
+    """Catalog reads declare their schema, so building a query-mix frame
+    runs no Spark job (an inferring read ran one per table)."""
+    from conftest import jobs_run_by
+
+    fn = flagship if qid == "FLAGSHIP" else ALL_QUERIES[qid]
+    _, n_jobs = jobs_run_by(spark, lambda: fn(spark, SF))
+    assert n_jobs == 0

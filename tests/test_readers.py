@@ -6,8 +6,10 @@ from __future__ import annotations
 import datetime as dt
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
+from conftest import SF0001, jobs_run_by
 from feasibility_etl_spark.sources.readers import (
     ISSUE_SCHEMA,
     project_issues,
@@ -71,8 +73,6 @@ def test_catalog_events_reads_both_ts_encodings(spark, tmp_path):
     # events.ts has shipped as INT64 TIMESTAMP(NANOS) and TIMESTAMP(MICROS)
     # across testdata generations; catalog.load must floor both to the
     # same microsecond timestamps (DuckDB floors ns→µs identically).
-    import shutil
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -96,8 +96,24 @@ def test_catalog_events_reads_both_ts_encodings(spark, tmp_path):
             use_deprecated_int96_timestamps=False, coerce_timestamps=None,
         )
     got = {}
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
     for enc in ("micros", "nanos"):
-        rows = load(spark, str(tmp_path / enc), "events").orderBy("event_id").collect()
-        got[enc] = [r.ts for r in rows]
-        assert dict(load(spark, str(tmp_path / enc), "events").dtypes)["ts"] == "timestamp"
+        before = spark.conf.get(conf, None)
+        df, n_jobs = jobs_run_by(spark, lambda: load(spark, str(tmp_path / enc), "events"))
+        # the encoding is read from the footer: no session conf, no Spark job
+        assert spark.conf.get(conf, None) == before
+        assert n_jobs == 0
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got[enc] = [r.ts for r in df.orderBy("event_id").collect()]
     assert got["micros"] == got["nanos"] == micros
+
+
+def test_catalog_missing_declared_column_fails_loudly(spark, tmp_path):
+    # a declared read would return nulls for a column the file lacks
+    from feasibility_etl_spark.sources.catalog import load
+
+    load(spark, SF0001, "documents").drop("n_chars").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    with pytest.raises(ValueError, match=r"'documents'.*n_chars"):
+        load(spark, str(tmp_path), "documents")

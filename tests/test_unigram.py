@@ -14,6 +14,7 @@ from feasibility_etl_spark.operators.unigram import (
     viterbi_word,
     vocab_from_counts,
 )
+from feasibility_etl_spark.sources.catalog import load
 
 
 def test_viterbi_prefers_high_prob_long_piece():
@@ -52,7 +53,7 @@ def test_em_training_finds_repeated_substring():
 
 
 def test_training_deterministic_and_bounded(spark):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     v1 = unigram_train(docs, vocab_size=80, seed_size=150, max_words=500)
     v2 = unigram_train(
         docs.repartition(5), vocab_size=80, seed_size=150, max_words=500
@@ -62,7 +63,7 @@ def test_training_deterministic_and_bounded(spark):
 
 
 def test_encode_matches_driver_reference_and_roundtrips(spark):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     pieces = unigram_train(docs, vocab_size=80, seed_size=150, max_words=500)
     out = {r.doc_id: r for r in unigram_encode(docs, pieces).collect()}
     lp = dict(pieces)
@@ -77,7 +78,7 @@ def test_encode_matches_driver_reference_and_roundtrips(spark):
 
 
 def test_encode_partitioning_invariant(spark):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     pieces = unigram_train(docs, vocab_size=60, seed_size=100, max_words=300)
     a = sorted(
         (r.doc_id, tuple(r.ug_tokens))
@@ -102,7 +103,7 @@ def test_demo_pieces_provenance_and_dyadic(spark):
         unigram_train,
     )
 
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet").where(
+    docs = load(spark, SF0001, "documents").where(
         F.trim("text") != ""
     )
     trained = unigram_train(docs, vocab_size=120, seed_size=200, max_words=2000)

@@ -15,6 +15,7 @@ from feasibility_etl_spark.operators.wordpiece import (
     wordpiece_train,
     _wp_syms,
 )
+from feasibility_etl_spark.sources.catalog import load
 
 
 def test_training_hand_derived_likelihood_not_frequency():
@@ -53,12 +54,12 @@ def test_greedy_unk_on_unseen_char():
 
 
 def test_demo_vocab_provenance(spark):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     assert wordpiece_train(docs, num_merges=24) == DEMO_WP_VOCAB
 
 
 def test_encode_roundtrip_and_unk_free_on_training_corpus(spark):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     out = wordpiece_encode(docs, DEMO_WP_VOCAB).collect()
     assert len(out) == docs.count()
     joined = {r.doc_id: r.wp_tokens for r in out}
@@ -85,7 +86,7 @@ def test_encode_roundtrip_and_unk_free_on_training_corpus(spark):
 
 
 def test_encode_partitioning_invariant(spark):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     a = sorted(
         (r.doc_id, tuple(r.wp_tokens))
         for r in wordpiece_encode(docs, DEMO_WP_VOCAB).collect()
@@ -100,7 +101,7 @@ def test_encode_partitioning_invariant(spark):
 
 
 def test_training_repartition_deterministic(spark):
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    docs = load(spark, SF0001, "documents")
     assert wordpiece_train(docs.repartition(5), num_merges=8) == wordpiece_train(
         docs.coalesce(1), num_merges=8
     )
