@@ -1,19 +1,12 @@
-"""Driver contract queries, split by family (was one 3.6k-line module).
+"""Driver contract queries, split by family.
 
-Modules execute in original file order; the public surface is unchanged:
-``QUERIES``/``ORACLES`` (the driver's 50-entry window) and
-``ALL_QUERIES``/``ALL_ORACLES`` (the granular registry). Hash-match
-rules live in ``_shared``; each family module is self-contained SQL+Spark.
+``registry.REGISTRY`` maps every op id to its query function and its
+DuckDB oracle SQL (``None`` for a rows-only op). The rest is derived from
+it: ``QUERIES``/``ORACLES`` are the driver's 50-entry window, a declared
+selection of registry ids (``DRIVER_WINDOW``); ``ALL_QUERIES``/
+``ALL_ORACLES`` cover every id. Hash-match rules live in ``_shared``; each
+family module is self-contained SQL+Spark.
 """
 
-from . import _shared as __shared  # noqa: F401  (module side-effect order)
-from . import core_relational as _core_relational  # noqa: F401  (module side-effect order)
-from . import views_dedup_corpus as _views_dedup_corpus  # noqa: F401  (module side-effect order)
-from . import similarity_text as _similarity_text  # noqa: F401  (module side-effect order)
-from . import pipelines_joins as _pipelines_joins  # noqa: F401  (module side-effect order)
-from . import combined_entries as _combined_entries  # noqa: F401  (module side-effect order)
-from . import media_history as _media_history  # noqa: F401  (module side-effect order)
-from . import registry as _registry  # noqa: F401  (module side-effect order)
-
 from ._shared import QueryFn  # noqa: F401
-from .registry import ALL_ORACLES, ALL_QUERIES, ENGINE_DISK_BOUNDS, ORACLE_COMPUTE_BOUNDS, ORACLE_REGIMES, ORACLES, QUERIES  # noqa: F401
+from .registry import ALL_ORACLES, ALL_QUERIES, DRIVER_WINDOW, ENGINE_DISK_BOUNDS, ORACLE_COMPUTE_BOUNDS, ORACLE_REGIMES, ORACLES, QUERIES, REGISTRY  # noqa: F401

@@ -86,8 +86,7 @@ from ..operators.text import (
     stopword_ratio,
     token_count,
 )
-from ..quality.gates import loss_report, validate_not_null
-from ..sources.catalog import load, register_views, schema_for
+from ..sources.catalog import load, register_views
 from ..streaming.windows import session_agg, sliding_agg, tumbling_agg
 
 

@@ -9,10 +9,10 @@ from .similarity_text import ORACLE_TEXT_FINGERPRINT, ORACLE_TEXT_LANGID, ORACLE
 
 # ----------------------------------------------- combined registry entries
 #
-# The driver's correctness gate records a bounded number of registry rows
-# (round 1 captured exactly the first 50), so single-scan scalar ops that
-# share a base table register as ONE wide query — each op keeps its own
-# aliased column — and same-schema variant families union with a tag column.
+# The driver's correctness gate records a bounded number of entries (at
+# most 50), so single-scan scalar ops that share a base table register as
+# ONE wide query — each op keeps its own aliased column — and same-schema
+# variant families union with a tag column.
 # COVERAGE.md maps every SURVEY §2 / extension ID to its (entry, columns).
 # Spark side stays a single scan per entry; the oracle composes the singleton
 # oracle SQLs as CTE subqueries (DuckDB plan quality is irrelevant — it's the
@@ -82,10 +82,10 @@ FROM customer
 
 
 def q_f_customer_wide(spark: SparkSession, sf: str) -> DataFrame:
-    """F-CUSTOMER + A-LINKED (registry compaction, round 4): both live at
-    customer grain, so one wide driver entry joins the scalar-function
-    columns with the 0-on-empty linked rollup — one extra customer-keyed
-    join, no change to either op's semantics."""
+    """F-CUSTOMER + A-LINKED: both live at customer grain, so one wide
+    driver entry joins the scalar-function columns with the 0-on-empty
+    linked rollup — one extra customer-keyed join, no change to either
+    op's semantics."""
     return q_f_customer(spark, sf).join(q_a_linked(spark, sf), "c_custkey")
 
 
@@ -963,4 +963,154 @@ JOIN t_c ON t_tok.doc_id = t_c.doc_id
 JOIN t_p ON t_tok.doc_id = t_p.doc_id
 JOIN t_r ON t_tok.doc_id = t_r.doc_id
 JOIN t_b ON t_tok.doc_id = t_b.doc_id
+"""
+
+
+def q_text_repetition(spark: SparkSession, sf: str) -> DataFrame:
+    """TEXT-REPETITION granular: Gopher-style repetition mass per doc.
+
+    The fold is zero-shuffle and CPU-dense, so parallelism equals input
+    splits; the bench corpus is ONE unsplittable row group, which would
+    serialize the whole operator on one core. Spreading a ~MB input
+    first is a negligible shuffle; a 100 TB corpus has thousands of
+    splits and skips this."""
+    docs = load(spark, sf, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    # the vectorized twin (r10): same values as repetition_signals
+    # (parity-pinned; the relational form remains the oracle-shaped
+    # formulation), ~3.6× faster — the TEXT-WINNOW precedent
+    from ..operators.text import repetition_signals_arrow
+
+    return repetition_signals_arrow(docs, top_ns=(2, 3), dup_ns=(2, 5))
+
+
+def q_e_profile(spark: SparkSession, sf: str) -> DataFrame:
+    """E-PROFILE granular: one-pass column profiling of the deterministic
+    orders projection (see q_e_audit for the hash rules)."""
+    from ..quality.profile import profile_columns
+
+    proj = load(spark, sf, "orders").select(
+        "o_orderkey",
+        "o_orderstatus",
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_date"),
+    )
+    return profile_columns(proj)
+
+
+def q_text_bm25(spark: SparkSession, sf: str) -> DataFrame:
+    """TEXT-BM25 granular: every doc scored against the fixed query
+    (rounded to 9 dp — see the ln() note in q_text_profile)."""
+    from ..operators.search import bm25_scores
+
+    return bm25_scores(load(spark, sf, "documents"), list(BM25_TERMS)).select(
+        "doc_id", F.round("bm25", 9).alias("bm25")
+    )
+
+
+def q_text_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
+    """TEXT-BM25-TOPK's part='bm25': top-10 retrieval for the fixed query.
+    Ranks over the 9-dp-ROUNDED score (ties broken by doc_id) so both
+    engines order identical values — full-precision order could differ
+    across engines exactly where two scores round together (see the ln()
+    note in q_text_profile). Executes as TakeOrderedAndProject
+    (plan-asserted for the operator in tests/test_search.py); rank comes
+    from the sorted k-row array (bm25_topk's no-window formulation)."""
+    from ..operators.search import bm25_scores
+
+    scored = bm25_scores(load(spark, sf, "documents"), list(BM25_TERMS)).select(
+        "doc_id", F.round("bm25", 9).alias("bm25")
+    )
+    top = scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(10)
+    item = F.struct((-F.col("bm25")).alias("_negs"), F.col("doc_id").alias("_id"))
+    packed = top.agg(F.sort_array(F.collect_list(item)).alias("_top"))
+    return packed.select(F.posexplode("_top").alias("_pos", "_row")).select(
+        F.col("_row._id").alias("doc_id"),
+        (-F.col("_row._negs")).alias("bm25"),
+        (F.col("_pos") + 1).cast("long").alias("rank"),
+    )
+
+
+ORACLE_TEXT_BM25_TOPK = f"""
+SELECT doc_id, bm25,
+       CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS rank
+FROM ({_bm25_oracle()})
+ORDER BY bm25 DESC, doc_id LIMIT 10
+"""
+
+
+def q_search_rrf(spark: SparkSession, sf: str) -> DataFrame:
+    """SEARCH-RRF granular: hybrid retrieval — the fixed BM25 query's
+    top-20 (ranked over 9-dp-rounded scores, the family's engine-stable
+    ordering) fused with the vec_id=0 embedding query's exact-cosine
+    top-20 via Reciprocal Rank Fusion (k=60), final top-10. The fused
+    score is a fixed-order sum of 1/(60+rank) doubles from exact integer
+    ranks — bit-stable, so the oracle hash-matches; cosine ranks are
+    bit-equal per the SIM-TOPK discipline."""
+    from ..operators.search import _ranked_take, bm25_scores, rrf_fuse
+    from ..operators.similarity import cosine_topk
+
+    docs = load(spark, sf, "documents")
+    emb = load(spark, sf, "embeddings")
+    scored = bm25_scores(docs, list(BM25_TERMS)).select(
+        "doc_id", F.round("bm25", 9).alias("bm25")
+    )
+    bm = _ranked_take(scored, "bm25", "doc_id", 20).select("doc_id", "rank")
+    qv = emb.where(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    cs = cosine_topk(emb, qv, k=20).select(F.col("vec_id").alias("doc_id"), "rank")
+    return rrf_fuse([bm, cs], id_col="doc_id", k=60, topk=10)
+
+
+ORACLE_SEARCH_RRF = f"""
+WITH bmscore AS ({_bm25_oracle()}),
+bm AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS r
+       FROM bmscore ORDER BY bm25 DESC, doc_id LIMIT 20),
+q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+cscored AS (
+  SELECT c.vec_id AS cid,
+    list_sum(list_transform(range(1, len(c.embedding) + 1),
+      i -> CAST(c.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE))) /
+    (sqrt(list_sum(list_transform(range(1, len(c.embedding) + 1),
+       i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))) *
+     sqrt(list_sum(list_transform(range(1, len(q.qv) + 1),
+       i -> CAST(q.qv[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE))))) AS cos_sim
+  FROM embeddings c CROSS JOIN q WHERE c.vec_id != 0
+),
+cs AS (SELECT cid, CAST(row_number() OVER (ORDER BY cos_sim DESC, cid) AS BIGINT) AS r
+       FROM cscored ORDER BY cos_sim DESC, cid LIMIT 20),
+fused AS (
+  SELECT COALESCE(bm.doc_id, cs.cid) AS doc_id,
+         COALESCE(CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + CAST(bm.r AS DOUBLE)),
+                  CAST(0.0 AS DOUBLE))
+       + COALESCE(CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + CAST(cs.r AS DOUBLE)),
+                  CAST(0.0 AS DOUBLE)) AS rrf
+  FROM bm FULL OUTER JOIN cs ON bm.doc_id = cs.cid
+)
+SELECT doc_id, rrf,
+       CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS BIGINT) AS rank
+FROM fused ORDER BY rrf DESC, doc_id LIMIT 10
+"""
+
+
+def q_search_suite(spark: SparkSession, sf: str) -> DataFrame:
+    """TEXT-BM25-TOPK (driver combined entry): ``part='bm25'`` is the
+    classic top-10 retrieval, ``part='rrf'`` the hybrid BM25+cosine RRF
+    fusion (see q_search_rrf) — one entry verifies both retrieval
+    surfaces, keeping the driver registry at 50."""
+    bm = q_text_bm25_topk(spark, sf).select(
+        F.lit("bm25").alias("part"), "doc_id", F.col("bm25").alias("score"), "rank"
+    )
+    rrf = q_search_rrf(spark, sf).select(
+        F.lit("rrf").alias("part"), "doc_id", F.col("rrf").alias("score"), "rank"
+    )
+    return bm.unionByName(rrf)
+
+
+ORACLE_SEARCH_SUITE = f"""
+SELECT 'bm25' AS part, doc_id, bm25 AS score, rank FROM ({ORACLE_TEXT_BM25_TOPK})
+UNION ALL
+SELECT 'rrf' AS part, doc_id, rrf AS score, rank FROM ({ORACLE_SEARCH_RRF})
 """

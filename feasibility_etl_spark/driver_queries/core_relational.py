@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from ._shared import DataFrame, F, SparkSession, T, _cents, _scratch_dir, _sum_cents, _sum_cents_sql, attach_detail, delta_pair, dim_join, horizontal_sum, hrs_to_sec, jira_ts, load, lookup_or_insert, loss_report, pct_change_abs, pct_diff, schema_for, validate_not_null
+from ._shared import DataFrame, F, SparkSession, T, _cents, _scratch_dir, _sum_cents, _sum_cents_sql, attach_detail, horizontal_sum, load, lookup_or_insert
 
 
 
@@ -10,7 +10,7 @@ def q_s_search(spark: SparkSession, sf: str) -> DataFrame:
     """S-SEARCH: explicit-schema scan + source predicate + capped, ordered read
     (the JQL search analogue: predicate and limit execute in the source —
     here Catalyst pushes both into the parquet scan)."""
-    orders = spark.read.schema(schema_for("orders")).parquet(f"{sf}/orders.parquet")
+    orders = load(spark, sf, "orders")
     return (
         orders.where(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -137,24 +137,6 @@ SELECT p_partkey AS part_id, p_name AS part_name, p_brand AS brand,
 """
 
 
-def q_p_nullsafe(spark: SparkSession, sf: str) -> DataFrame:
-    """P-NULLSAFE: null-safe nested access — a JSON field that exists (k) and
-    one that doesn't (missing) project as value/null without errors."""
-    ev = load(spark, sf, "events")
-    parsed = F.from_json("props", "k long, missing string")
-    return ev.select(
-        "event_id",
-        parsed["k"].alias("k_val"),
-        parsed["missing"].alias("missing_val"),
-    )
-
-
-ORACLE_P_NULLSAFE = """
-SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val,
-       json_extract_string(props, '$.missing') AS missing_val FROM events
-"""
-
-
 def q_p_filter_eq(spark: SparkSession, sf: str) -> DataFrame:
     """P-FILTER-EQ: equality filter (link.type.id === '10211' analogue)."""
     return load(spark, sf, "lineitem").where(F.col("l_returnflag") == "R").select(
@@ -223,11 +205,10 @@ WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
 
 
 def q_scan_caps(spark: SparkSession, sf: str) -> DataFrame:
-    """S-SEARCH ∪ P-LIMIT (registry compaction, round 4): both ordered,
-    capped scans of orders, union-tagged so one driver entry verifies the
-    pushed source predicate + cap (S-SEARCH) and the deterministic
-    maxResults cap (P-LIMIT). Columns the other half doesn't produce are
-    typed NULLs."""
+    """S-SEARCH ∪ P-LIMIT: both ordered, capped scans of orders,
+    union-tagged so one driver entry verifies the pushed source predicate
+    + cap (S-SEARCH) and the deterministic maxResults cap (P-LIMIT).
+    Columns the other half doesn't produce are typed NULLs."""
     search = q_s_search(spark, sf).select(
         F.lit("search").alias("part"),
         "o_orderkey",
@@ -257,10 +238,10 @@ FROM ({ORACLE_P_LIMIT})
 
 
 def q_p_filter(spark: SparkSession, sf: str) -> DataFrame:
-    """P-FILTER-EQ ∪ P-FILTER-SRC (registry compaction, round 4): the
-    equality filter on lineitem and the conjunctive source predicate on
-    orders, union-tagged into one driver entry; both predicates still
-    reach their parquet scans (PushedFilters pinned in PLANS.md)."""
+    """P-FILTER-EQ ∪ P-FILTER-SRC: the equality filter on lineitem and
+    the conjunctive source predicate on orders, union-tagged into one
+    driver entry; both predicates still reach their parquet scans
+    (PushedFilters pinned in PLANS.md)."""
     eq = q_p_filter_eq(spark, sf).select(
         F.lit("eq").alias("part"),
         F.col("l_orderkey").alias("key_id"),
@@ -294,27 +275,6 @@ FROM ({ORACLE_P_FILTER_SRC})
 
 
 # ------------------------------------------------------------------- joins
-
-def q_j_dim_reviewer(spark: SparkSession, sf: str) -> DataFrame:
-    """J-DIM-REVIEWER: LEFT broadcast equi-join fact→dim (schema.sql:68-72)."""
-    customer, nation = load(spark, sf, "customer"), load(spark, sf, "nation")
-    return dim_join(
-        customer,
-        nation,
-        customer["c_nationkey"] == nation["n_nationkey"],
-        select=[
-            F.col("c_custkey"),
-            F.col("c_name"),
-            F.col("n_name").alias("nation_name"),
-        ],
-    )
-
-
-ORACLE_J_DIM_REVIEWER = """
-SELECT c_custkey, c_name, n_name AS nation_name
-FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-"""
-
 
 def q_j_dim_reporter(spark: SparkSession, sf: str) -> DataFrame:
     """J-DIM-REPORTER: the SAME dim role-played twice in one query
@@ -355,23 +315,6 @@ JOIN nation cn ON c_nationkey = cn.n_nationkey
 JOIN supplier ON l_suppkey = s_suppkey
 JOIN nation sn ON s_nationkey = sn.n_nationkey
 GROUP BY cn.n_name, sn.n_name
-"""
-
-
-def q_j_dim_project(spark: SparkSession, sf: str) -> DataFrame:
-    """J-DIM-PROJECT: fact→project-dim LEFT broadcast join (schema.sql:82-85)."""
-    nation, region = load(spark, sf, "nation"), load(spark, sf, "region")
-    return dim_join(
-        nation,
-        region,
-        nation["n_regionkey"] == region["r_regionkey"],
-        select=[F.col("n_nationkey"), F.col("n_name"), F.col("r_name").alias("region_name")],
-    )
-
-
-ORACLE_J_DIM_PROJECT = """
-SELECT n_nationkey, n_name, r_name AS region_name
-FROM nation LEFT JOIN region ON n_regionkey = r_regionkey
 """
 
 
@@ -467,10 +410,9 @@ WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_suppkey = s.s_suppkey)
 
 
 def q_semi_family(spark: SparkSession, sf: str) -> DataFrame:
-    """J-SEMI ∪ P-EXISTS (registry compaction, round 4): both
-    has-any-qualifying-child semi-joins (supplier→lineitem and
-    customer→orders), union-tagged into one driver entry with a shared
-    (part, entity_id, name) grain."""
+    """J-SEMI ∪ P-EXISTS: both has-any-qualifying-child semi-joins
+    (supplier→lineitem and customer→orders), union-tagged into one driver
+    entry with a shared (part, entity_id, name) grain."""
     semi = q_j_semi(spark, sf).select(
         F.lit("supplier").alias("part"),
         F.col("s_suppkey").alias("entity_id"),
@@ -590,130 +532,6 @@ FROM lineitem GROUP BY l_orderkey
 
 # -------------------------------------------------------- scalar functions
 
-def q_f_pctchg(spark: SparkSession, sf: str) -> DataFrame:
-    """F-PCTCHG: abs percent change (helpers.js:234-240) — here the discount
-    magnitude as % change between gross and discounted price."""
-    li = load(spark, sf, "lineitem")
-    discounted = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        pct_change_abs(F.col("l_extendedprice"), discounted).alias("pct_change"),
-    )
-
-
-ORACLE_F_PCTCHG = """
-SELECT l_orderkey, l_linenumber,
-       ABS((l_extendedprice * (1.0 - l_discount) - l_extendedprice)
-           / ABS(l_extendedprice) * 100.0) AS pct_change
-FROM lineitem
-"""
-
-
-def q_f_pctdiff(spark: SparkSession, sf: str) -> DataFrame:
-    """F-PCTDIFF: symmetric percent difference (helpers.js:296-302)."""
-    li = load(spark, sf, "lineitem")
-    taxed = F.col("l_extendedprice") * (F.lit(1.0) + F.col("l_tax"))
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        pct_diff(F.col("l_extendedprice"), taxed).alias("pct_diff"),
-    )
-
-
-ORACLE_F_PCTDIFF = """
-SELECT l_orderkey, l_linenumber,
-       (l_extendedprice - l_extendedprice * (1.0 + l_tax))
-         / ((l_extendedprice + l_extendedprice * (1.0 + l_tax)) / 2.0) * 100.0 AS pct_diff
-FROM lineitem
-"""
-
-
-def q_f_delta(spark: SparkSession, sf: str) -> DataFrame:
-    """F-DELTA: the delta pair with the falsy-zero rule (helpers.js:309-321):
-    both outputs NULL when either operand is NULL **or 0** — exercised here
-    by an actual column that hits 0 every 100th key."""
-    cust = load(spark, sf, "customer")
-    actual = (F.col("c_custkey") % 100).cast("double")
-    delta, delta_pct = delta_pair(F.col("c_acctbal"), actual)
-    return cust.select(
-        "c_custkey", delta.alias("delta"), delta_pct.alias("delta_percentage")
-    )
-
-
-ORACLE_F_DELTA = """
-SELECT c_custkey,
-  CASE WHEN c_acctbal IS NULL OR c_acctbal = 0
-         OR CAST(c_custkey % 100 AS DOUBLE) = 0 THEN NULL
-       ELSE c_acctbal - CAST(c_custkey % 100 AS DOUBLE) END AS delta,
-  CASE WHEN c_acctbal IS NULL OR c_acctbal = 0
-         OR CAST(c_custkey % 100 AS DOUBLE) = 0 THEN NULL
-       ELSE (c_acctbal - CAST(c_custkey % 100 AS DOUBLE))
-            / ((c_acctbal + CAST(c_custkey % 100 AS DOUBLE)) / 2.0) * 100.0
-  END AS delta_percentage
-FROM customer
-"""
-
-
-def q_f_hrs2sec(spark: SparkSession, sf: str) -> DataFrame:
-    """F-HRS2SEC: coalesce(x,0)*3600 (helpers.js:278)."""
-    return load(spark, sf, "lineitem").select(
-        "l_orderkey", "l_linenumber", hrs_to_sec("l_tax").alias("tax_seconds")
-    )
-
-
-ORACLE_F_HRS2SEC = """
-SELECT l_orderkey, l_linenumber, COALESCE(l_tax, 0.0) * 3600.0 AS tax_seconds
-FROM lineitem
-"""
-
-
-def q_f_tojson(spark: SparkSession, sf: str) -> DataFrame:
-    """F-TOJSON: typed struct → JSON string at the sink boundary
-    (etl.js:296-297; engine keeps structs internally)."""
-    return load(spark, sf, "orders").select(
-        "o_orderkey",
-        F.to_json(
-            F.struct(
-                F.col("o_orderstatus").alias("status"),
-                F.col("o_orderpriority").alias("priority"),
-            )
-        ).alias("payload"),
-    )
-
-
-ORACLE_F_TOJSON = """
-SELECT o_orderkey,
-       CAST(to_json(struct_pack(status := o_orderstatus, priority := o_orderpriority))
-            AS VARCHAR) AS payload
-FROM orders
-"""
-
-
-def q_f_fromjson(spark: SparkSession, sf: str) -> DataFrame:
-    """F-FROMJSON: JSON string → typed columns with explicit schema
-    (helpers.js:56 `json: true` ingest)."""
-    ev = load(spark, sf, "events")
-    return ev.select("event_id", F.from_json("props", "k long")["k"].alias("k_val"))
-
-
-ORACLE_F_FROMJSON = """
-SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val FROM events
-"""
-
-
-def q_f_datefmt(spark: SparkSession, sf: str) -> DataFrame:
-    """F-DATEFMT: MM-DD-YYYY formatting (etl.js:44,52)."""
-    return load(spark, sf, "orders").select(
-        "o_orderkey", F.date_format("o_orderdate", "MM-dd-yyyy").alias("formatted")
-    )
-
-
-ORACLE_F_DATEFMT = """
-SELECT o_orderkey, strftime(o_orderdate, '%m-%d-%Y') AS formatted FROM orders
-"""
-
-
 def q_f_dateops(spark: SparkSession, sf: str) -> DataFrame:
     """F-DATEOPS granular singleton: date arithmetic — F-DATESUB
     (SURVEY §2.6, the reference's date-offset math in its report
@@ -749,80 +567,6 @@ SELECT o_orderkey,
                       o_orderdate + INTERVAL 7 DAY) AS BIGINT) AS window_days,
        CAST(date_diff('day', o_orderdate, DATE '1998-12-31') AS BIGINT)
          AS days_to_close
-FROM orders
-"""
-
-
-def q_f_concat(spark: SparkSession, sf: str) -> DataFrame:
-    """F-CONCAT: string assembly (helpers.js:47-50)."""
-    return load(spark, sf, "customer").select(
-        "c_custkey", F.concat(F.col("c_name"), F.lit(":"), F.col("c_mktsegment")).alias("tag")
-    )
-
-
-ORACLE_F_CONCAT = "SELECT c_custkey, c_name || ':' || c_mktsegment AS tag FROM customer"
-
-
-def q_f_cast(spark: SparkSession, sf: str) -> DataFrame:
-    """F-CAST: numeric coercions (parseInt/parseFloat, helpers.js:235-298).
-    double→int goes through FLOOR on both engines (DuckDB's raw cast rounds,
-    Spark truncates — floored explicitly for identical semantics)."""
-    return load(spark, sf, "lineitem").select(
-        "l_orderkey",
-        "l_linenumber",
-        F.floor("l_quantity").cast("long").alias("qty_int"),
-        F.col("l_linenumber").cast("double").alias("linenumber_dbl"),
-        F.col("l_orderkey").cast("string").alias("orderkey_str"),
-    )
-
-
-ORACLE_F_CAST = """
-SELECT l_orderkey, l_linenumber,
-       CAST(FLOOR(l_quantity) AS BIGINT) AS qty_int,
-       CAST(l_linenumber AS DOUBLE) AS linenumber_dbl,
-       CAST(l_orderkey AS VARCHAR) AS orderkey_str
-FROM lineitem
-"""
-
-
-def q_f_coalesce(spark: SparkSession, sf: str) -> DataFrame:
-    """F-COALESCE: null-coalescing defaults (JS `||` sites audited in SURVEY
-    §2.6 — plain COALESCE where 0 can't occur; F-DELTA carries the falsy
-    variant)."""
-    ev = load(spark, sf, "events")
-    return ev.select(
-        "event_id",
-        F.coalesce(F.nullif(F.col("event_type"), F.lit("click")), F.lit("was_click")).alias(
-            "event_kind"
-        ),
-    )
-
-
-ORACLE_F_COALESCE = """
-SELECT event_id, COALESCE(NULLIF(event_type, 'click'), 'was_click') AS event_kind
-FROM events
-"""
-
-
-def q_f_ts_parse(spark: SparkSession, sf: str) -> DataFrame:
-    """F-TS-PARSE: JIRA ISO-8601 round trip — format a timestamp into the
-    JIRA wire format (testing.sql:43), parse it back, re-emit as a plain
-    string (etl.js:135-136 ingest semantics)."""
-    orders = load(spark, sf, "orders")
-    wire = F.date_format("o_orderdate", "yyyy-MM-dd'T'HH:mm:ss.SSS+0000")
-    return orders.select(
-        "o_orderkey",
-        wire.alias("jira_wire"),
-        F.date_format(jira_ts(wire), "yyyy-MM-dd HH:mm:ss").alias("parsed"),
-    )
-
-
-ORACLE_F_TS_PARSE = """
-SELECT o_orderkey,
-       strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S.%g+0000') AS jira_wire,
-       strftime(strptime(strftime(o_orderdate, '%Y-%m-%dT%H:%M:%S.%g+0000'),
-                         '%Y-%m-%dT%H:%M:%S.%g%z'),
-                '%Y-%m-%d %H:%M:%S') AS parsed
 FROM orders
 """
 

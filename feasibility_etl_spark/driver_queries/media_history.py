@@ -31,10 +31,10 @@ FROM i JOIN r ON i.media_id = r.media_id
 
 
 def q_mm_media(spark: SparkSession, sf: str) -> DataFrame:
-    """MM-VISUAL ∪ MM-AUDIO (registry compaction, round 4): the image and
-    audio feature pipelines share the media grain (disjoint doc_id%3
-    slices), so one union-tagged driver entry verifies both; columns the
-    other modality doesn't produce are typed NULLs."""
+    """MM-VISUAL ∪ MM-AUDIO: the image and audio feature pipelines share
+    the media grain (disjoint doc_id%3 slices), so one union-tagged driver
+    entry verifies both; columns the other modality doesn't produce are
+    typed NULLs."""
     vis = q_mm_visual(spark, sf).select(
         F.lit("visual").alias("part"),
         "media_id", "n_bytes", "sha256", "decoder",

@@ -1039,15 +1039,14 @@ ORACLE_PIPE_CORPUS = _oracle_pipe_corpus()
 
 
 def q_pipe_family(spark: SparkSession, sf: str) -> DataFrame:
-    """PIPE-DOCS (driver combined entry): the two end-to-end pipeline
+    """PIPE-FAMILY (the driver's PIPE-DOCS): the two end-to-end pipeline
     compositions union-tagged — part='docs' is the §2-surface pipeline
     (q_pipe_docs: exact dedup → quality filter → near-dup prune →
     embedding-coverage join) and part='corpus' is the full training-data
     pipeline (q_pipe_corpus: line dedup → gates → exact+near dedup →
     decontam → DSIR+KLL → pack → BPE). Each stays a granular singleton
     with its own bench entry; the union puts BOTH compositions behind
-    the driver's hash gate in one slot (the registry-compaction
-    pattern, COVERAGE.md)."""
+    the driver's hash gate in one slot (COVERAGE.md)."""
     docs = q_pipe_docs(spark, sf).select(
         F.lit("docs").alias("part"),
         "doc_id", "lang", "source", "n_tokens", "quality", "has_embedding",

@@ -1,767 +1,312 @@
+"""The query registry: every op id maps to its query function and its
+DuckDB oracle SQL, or ``None`` for a rows-only op (seeded xxhash64 bands,
+hyperplanes or iterative k-means, which no SQL can replay; tests pin those
+by recall or equivalence instead).
+
+Everything else is derived from ``REGISTRY``: the driver's window is a
+declared selection of ids, and ``QUERIES``/``ORACLES`` (the window) and
+``ALL_QUERIES``/``ALL_ORACLES`` (every id) are views of it. COVERAGE.md
+maps each SURVEY operator to the id and columns that carry it.
+"""
+
 from __future__ import annotations
 
-from ._shared import DataFrame, F, QueryFn, SparkSession, incremental_near_dups, load, minhash_index, repetition_signals
-from .core_relational import ORACLE_A_COLLECT, ORACLE_A_COUNT, ORACLE_A_HSUM, ORACLE_A_LINKED, ORACLE_A_WORKLOG, ORACLE_E_DROP, ORACLE_E_GATE, ORACLE_E_ISOLATE, ORACLE_F_CAST, ORACLE_F_COALESCE, ORACLE_F_CONCAT, ORACLE_F_DATEFMT, ORACLE_F_DATEOPS, ORACLE_F_DELTA, ORACLE_F_FROMJSON, ORACLE_F_HRS2SEC, ORACLE_F_PCTCHG, ORACLE_F_PCTDIFF, ORACLE_F_TOJSON, ORACLE_F_TS_PARSE, ORACLE_J_ATTACH, ORACLE_J_DIM_PROJECT, ORACLE_J_DIM_REPORTER, ORACLE_J_DIM_REVIEWER, ORACLE_J_LOOKUP_INSERT, ORACLE_J_MULTIWAY, ORACLE_J_SEMI, ORACLE_P_EXISTS, ORACLE_P_FILTER, ORACLE_P_FILTER_EQ, ORACLE_P_FILTER_SRC, ORACLE_P_LIMIT, ORACLE_P_NULLSAFE, ORACLE_P_PROJECT, ORACLE_SCAN_CAPS, ORACLE_SEMI_FAMILY, ORACLE_S_JDBC_SINK, ORACLE_SINK_SUITE, ORACLE_S_SEARCH, q_s_jsonl, q_s_csv, q_s_orc, q_sink_suite, q_a_collect, q_a_count, q_a_hsum, q_a_linked, q_a_worklog, q_e_drop, q_e_gate, q_e_isolate, q_f_cast, q_f_coalesce, q_f_concat, q_f_datefmt, q_f_dateops, q_f_delta, q_f_fromjson, q_f_hrs2sec, q_f_pctchg, q_f_pctdiff, q_f_tojson, q_f_ts_parse, q_j_attach, q_j_dim_project, q_j_dim_reporter, q_j_dim_reviewer, q_j_lookup_insert, q_j_multiway, q_j_semi, q_p_exists, q_p_filter, q_p_filter_eq, q_p_filter_src, q_p_limit, q_p_nullsafe, q_p_project, q_s_jdbc_sink, q_s_search, q_scan_caps, q_semi_family
-from .views_dedup_corpus import ORACLE_CORPUS_DECONTAM, ORACLE_CORPUS_PACK, ORACLE_CORPUS_SPLIT, ORACLE_DEDUP_COMPONENTS, ORACLE_DEDUP_EXACT, ORACLE_DEDUP_EXACT_DOC, ORACLE_DEDUP_NGRAM, ORACLE_DEDUP_PRUNE, ORACLE_TEXT_CLEAN, ORACLE_VIEW_CTE, ORACLE_VIEW_IDIOMATIC, ORACLE_WIN_SESSION, ORACLE_WIN_SLIDE, ORACLE_WIN_TUMBLE, ORACLE_LINE_DEDUP, ORACLE_LINE_DEDUP_KEEPFIRST, ORACLE_CORPUS_DECONTAM_COMBINED, ORACLE_SKETCH_BLOOM, ORACLE_WIN_RESAMPLE, q_win_resample, ORACLE_CORPUS_SAMPLEK, q_corpus_samplek, ORACLE_CORPUS_CONTAMSCORE, q_corpus_contamscore, q_corpus_decontam, q_corpus_decontam_combined, q_corpus_decontam_bloom, q_sketch_bloom, q_corpus_pack, q_corpus_split, q_dedup_components, q_dedup_exact, q_dedup_exact_doc, q_dedup_minhash, q_dedup_ngram, q_dedup_prune, q_dedup_simhash, q_text_clean, q_view_cte, q_view_idiomatic, q_line_dedup, q_line_dedup_keepfirst, q_dedup_substring, ORACLE_DEDUP_SUBSTRING, q_dedup_prune_best, ORACLE_DEDUP_PRUNE_BEST, q_win_session, q_win_slide, q_win_tumble, q_dedup_capped, ORACLE_DEDUP_CAPPED, q_dedup_capped_audit, ORACLE_DEDUP_CAPPED_AUDIT, q_dedup_minhash_comp, q_dedup_starprune, ORACLE_DEDUP_STARPRUNE
-from .similarity_text import ORACLE_A_SALTED, ORACLE_A_PIVOT, ORACLE_SIM_BQ, ORACLE_SIM_BQRR, q_a_pivot, q_sim_bq, q_sim_bqrr, q_sim_ivfbq, ORACLE_J_SALTED, ORACLE_SIM_TOPK, ORACLE_TEXT_FINGERPRINT, ORACLE_TEXT_LANGID, ORACLE_TEXT_QUALITY, ORACLE_TEXT_TOKENS, q_a_salted, q_emb_neardup, q_j_salted, q_sim_ivf, q_sim_ivf_append, q_sim_ivf_recluster, q_sim_ivfpq, q_sim_lsh, q_sim_lsh_qd, q_sim_pq, q_sim_topk, q_text_fingerprint, q_text_langid, q_text_normalize, ORACLE_TEXT_NORMALIZE, q_text_quality, q_text_tokens
+from ._shared import QueryFn
+from .core_relational import ORACLE_A_COLLECT, ORACLE_A_COUNT, ORACLE_A_HSUM, ORACLE_A_WORKLOG, ORACLE_E_DROP, ORACLE_E_GATE, ORACLE_E_ISOLATE, ORACLE_F_DATEOPS, ORACLE_J_ATTACH, ORACLE_J_DIM_REPORTER, ORACLE_J_LOOKUP_INSERT, ORACLE_J_MULTIWAY, ORACLE_P_FILTER, ORACLE_P_PROJECT, ORACLE_SCAN_CAPS, ORACLE_SEMI_FAMILY, ORACLE_SINK_SUITE, ORACLE_S_JDBC_SINK, q_a_collect, q_a_count, q_a_hsum, q_a_worklog, q_e_drop, q_e_gate, q_e_isolate, q_f_dateops, q_j_attach, q_j_dim_reporter, q_j_lookup_insert, q_j_multiway, q_p_filter, q_p_project, q_s_csv, q_s_jsonl, q_s_orc, q_scan_caps, q_semi_family, q_sink_suite
+from .views_dedup_corpus import ORACLE_CORPUS_CONTAMSCORE, ORACLE_CORPUS_DECONTAM, ORACLE_CORPUS_DECONTAM_COMBINED, ORACLE_CORPUS_PACK, ORACLE_CORPUS_SAMPLEK, ORACLE_CORPUS_SPLIT, ORACLE_DEDUP_CAPPED, ORACLE_DEDUP_CAPPED_AUDIT, ORACLE_DEDUP_COMPONENTS, ORACLE_DEDUP_EXACT, ORACLE_DEDUP_EXACT_DOC, ORACLE_DEDUP_FUZZY, ORACLE_DEDUP_NGRAM, ORACLE_DEDUP_PRUNE, ORACLE_DEDUP_PRUNE_BEST, ORACLE_DEDUP_STARPRUNE, ORACLE_DEDUP_SUBSTRING, ORACLE_LINE_DEDUP, ORACLE_LINE_DEDUP_KEEPFIRST, ORACLE_SKETCH_BLOOM, ORACLE_TEXT_CLEAN, ORACLE_VIEW_CTE, ORACLE_VIEW_IDIOMATIC, ORACLE_WIN_RESAMPLE, ORACLE_WIN_SESSION, ORACLE_WIN_SLIDE, q_corpus_contamscore, q_corpus_decontam, q_corpus_decontam_bloom, q_corpus_decontam_combined, q_corpus_pack, q_corpus_samplek, q_corpus_split, q_dedup_capped, q_dedup_capped_audit, q_dedup_components, q_dedup_exact, q_dedup_exact_doc, q_dedup_fuzzy, q_dedup_incr, q_dedup_minhash, q_dedup_minhash_comp, q_dedup_ngram, q_dedup_prune, q_dedup_prune_best, q_dedup_simhash, q_dedup_starprune, q_dedup_substring, q_line_dedup, q_line_dedup_keepfirst, q_sketch_bloom, q_text_clean, q_view_cte, q_view_idiomatic, q_win_resample, q_win_session, q_win_slide
+from .similarity_text import ORACLE_A_PIVOT, ORACLE_A_SALTED, ORACLE_J_SALTED, ORACLE_SIM_BQ, ORACLE_SIM_BQRR, ORACLE_SIM_TOPK, ORACLE_TEXT_FINGERPRINT, ORACLE_TEXT_LANGID, ORACLE_TEXT_NORMALIZE, ORACLE_TEXT_QUALITY, ORACLE_TEXT_TOKENS, q_a_pivot, q_a_salted, q_emb_neardup, q_j_salted, q_sim_bq, q_sim_bqrr, q_sim_ivf, q_sim_ivf_append, q_sim_ivf_recluster, q_sim_ivfbq, q_sim_ivfpq, q_sim_lsh, q_sim_lsh_qd, q_sim_pq, q_sim_topk, q_text_fingerprint, q_text_langid, q_text_normalize, q_text_quality, q_text_tokens
 from .pipelines_joins import ORACLE_ASOF, ORACLE_EMB_QUANT, ORACLE_MM_AUDIO, ORACLE_MM_FRAMES, ORACLE_MM_IMAGE, ORACLE_MM_RESIZE, ORACLE_PIPE_CORPUS, ORACLE_PIPE_DOCS, ORACLE_PIPE_EVENTS, ORACLE_PIPE_FAMILY, ORACLE_RANGE_JOIN, ORACLE_TEXT_WINNOW, q_asof, q_emb_quant, q_mm_audio, q_mm_frames, q_mm_image, q_mm_resize, q_pipe_corpus, q_pipe_corpus_components, q_pipe_docs, q_pipe_events, q_pipe_family, q_range_join, q_text_winnow
-from .combined_entries import BM25_TERMS, ORACLE_CORPUS_ASSIGN, ORACLE_CORPUS_NOVELTY, q_corpus_novelty, ORACLE_E_AUDIT, ORACLE_E_PROFILE, ORACLE_F_CUSTOMER, ORACLE_F_CUSTOMER_WIDE, ORACLE_F_EVENTS, ORACLE_F_ORDERS, ORACLE_F_SCALAR, ORACLE_J_DIM, ORACLE_CORPUS_DSIR, ORACLE_SKETCH_CONTAM, ORACLE_SKETCH_FREQ, ORACLE_SKETCH_HLL, ORACLE_SKETCH_KLL, ORACLE_SKETCH_THETA, ORACLE_TEXT_BM25, ORACLE_TEXT_PROFILE, ORACLE_TEXT_REPETITION, ORACLE_WIN_FIXED, _bm25_oracle, ORACLE_QUALITY_KLLGATE, q_corpus_assign, q_corpus_dsir, q_corpus_packseq, q_e_audit, q_quality_kllgate, q_f_customer, q_f_customer_wide, q_f_events, q_f_orders, q_f_scalar, q_j_dim, q_sketch_contam, q_sketch_contam_scout, q_sketch_freq, q_sketch_hll, q_sketch_kll, q_sketch_theta, q_text_profile, q_win_fixed
-from .media_history import ORACLE_BPE_ENCODE, ORACLE_WP_ENCODE, ORACLE_UNIGRAM_ENCODE, ORACLE_TEXT_TFIDF, ORACLE_E_ROBUST, q_wp_encode, q_unigram_encode, q_text_tfidf, q_compress_ratio, q_e_robust, ORACLE_DEDUP_VERIFY, ORACLE_E_QUANTILE, ORACLE_LM_SCORE, ORACLE_CLS_SCORE, ORACLE_CLS_ROUTE, ORACLE_CLS_GATE, ORACLE_TEXT_GOPHER, ORACLE_TEXT_TOPTERMS, ORACLE_MM_MEDIA, ORACLE_MM_VISUAL, ORACLE_SCD2_APPLY, ORACLE_TEXT_CHUNK, ORACLE_TEXT_ROWS, q_bpe_encode, q_dedup_candidates, q_dedup_verify, q_e_quantile, q_cls_score, q_cls_route, q_cls_gate, q_text_gopher, q_text_topterms, q_lm_score, q_mm_media, q_mm_visual, q_scd2_apply, q_sim_ann, q_text_chunk, q_text_rows
+from .combined_entries import ORACLE_CORPUS_ASSIGN, ORACLE_CORPUS_DSIR, ORACLE_CORPUS_NOVELTY, ORACLE_E_AUDIT, ORACLE_E_PROFILE, ORACLE_F_CUSTOMER_WIDE, ORACLE_F_EVENTS, ORACLE_F_ORDERS, ORACLE_F_SCALAR, ORACLE_J_DIM, ORACLE_QUALITY_KLLGATE, ORACLE_SEARCH_RRF, ORACLE_SEARCH_SUITE, ORACLE_SKETCH_CONTAM, ORACLE_SKETCH_FREQ, ORACLE_SKETCH_HLL, ORACLE_SKETCH_KLL, ORACLE_SKETCH_THETA, ORACLE_TEXT_BM25, ORACLE_TEXT_PROFILE, ORACLE_TEXT_REPETITION, ORACLE_WIN_FIXED, q_corpus_assign, q_corpus_dsir, q_corpus_novelty, q_corpus_packseq, q_e_audit, q_e_profile, q_f_customer_wide, q_f_events, q_f_orders, q_f_scalar, q_j_dim, q_quality_kllgate, q_search_rrf, q_search_suite, q_sketch_contam, q_sketch_contam_scout, q_sketch_freq, q_sketch_hll, q_sketch_kll, q_sketch_theta, q_text_bm25, q_text_profile, q_text_repetition, q_win_fixed
+from .media_history import ORACLE_BPE_ENCODE, ORACLE_CLS_GATE, ORACLE_CLS_ROUTE, ORACLE_CLS_SCORE, ORACLE_DEDUP_VERIFY, ORACLE_E_QUANTILE, ORACLE_E_ROBUST, ORACLE_LM_SCORE, ORACLE_MM_MEDIA, ORACLE_MM_VISUAL, ORACLE_SCD2_APPLY, ORACLE_TEXT_CHUNK, ORACLE_TEXT_GOPHER, ORACLE_TEXT_ROWS, ORACLE_TEXT_TFIDF, ORACLE_TEXT_TOPTERMS, ORACLE_UNIGRAM_ENCODE, ORACLE_WP_ENCODE, q_bpe_encode, q_cls_gate, q_cls_route, q_cls_score, q_compress_ratio, q_dedup_candidates, q_dedup_verify, q_e_quantile, q_e_robust, q_lm_score, q_mm_media, q_mm_visual, q_scd2_apply, q_sim_ann, q_text_chunk, q_text_gopher, q_text_rows, q_text_tfidf, q_text_topterms, q_unigram_encode, q_wp_encode
 
 
-
-# The DRIVER registry: every implemented operator is verified through ≤50
-# entries (the driver's correctness gate records a bounded prefix — round 1
-# captured exactly the first 50 rows, leaving 19 ops driver-unverified).
-# Ordering is defensive: entries that lacked driver rows in round 1 come
-# FIRST, so even a tighter cap still verifies the previously-unchecked ops.
-# COVERAGE.md carries the full SURVEY-ID → (entry, columns) map.
-QUERIES: dict[str, QueryFn] = {
-    # --- round-1 driver-unverified ops (now first) ---
-    "TEXT-PROFILE": q_text_profile,
-    "TEXT-ROWS": q_text_rows,
-    "PIPE-DOCS": q_pipe_family,
-    "PIPE-EVENTS": q_pipe_events,
-    "J-SALTED": q_j_salted,
-    "J-ASOF": q_asof,
-    "J-RANGE": q_range_join,
-    "A-SALTED": q_a_salted,
-    "EMB-QUANT": q_emb_quant,
-    # round-4 compaction: MM-MEDIA unions MM-VISUAL + MM-AUDIO (shared
-    # media grain), freeing the slot DEDUP-VERIFY takes below
-    "MM-MEDIA": q_mm_media,
-    "MM-FRAMES": q_mm_frames,
-    "EMB-NEARDUP": q_emb_neardup,
-    "SIM-ANN": q_sim_ann,
-    "DEDUP-CANDIDATES": q_dedup_candidates,
-    "SCD2-APPLY": q_scd2_apply,
-    "E-QUANTILE": q_e_quantile,
-    # --- round-1 driver-green ops (round-4 compaction: S-SEARCH absorbs
-    # P-LIMIT, P-FILTER unions P-FILTER-EQ + P-FILTER-SRC, J-SEMI absorbs
-    # P-EXISTS, F-CUSTOMER absorbs A-LINKED — freeing driver slots for the
-    # DEDUP-FUZZY / TEXT-BM25-TOPK / SKETCH-KLL / SKETCH-CONTAM entries
-    # appended below; singleton forms live on in ALL_QUERIES) ---
-    "S-SEARCH": q_scan_caps,
-    "S-JDBC-SINK": q_sink_suite,
-    "P-PROJECT": q_p_project,
-    "P-FILTER": q_p_filter,
-    "J-DIM": q_j_dim,
-    "J-DIM-REPORTER": q_j_dim_reporter,
-    "J-MULTIWAY": q_j_multiway,
-    "J-ATTACH": q_j_attach,
-    "J-LOOKUP-INSERT": q_j_lookup_insert,
-    "J-SEMI": q_semi_family,
-    "A-WORKLOG": q_a_worklog,
-    "A-HSUM": q_a_hsum,
-    "A-COLLECT": q_a_collect,
-    "F-SCALAR": q_f_scalar,
-    "F-CUSTOMER": q_f_customer_wide,
-    "F-ORDERS": q_f_orders,
-    "F-EVENTS": q_f_events,
-    "E-DROP": q_e_drop,
-    "E-AUDIT": q_e_audit,
-    "VIEW-CTE": q_view_cte,
-    "WIN-FIXED": q_win_fixed,
-    "WIN-SESSION": q_win_session,
-    "DEDUP-EXACT": q_dedup_exact,
-    "DEDUP-NGRAM": q_dedup_ngram,
-    "DEDUP-COMPONENTS": q_dedup_components,
-    "DEDUP-PRUNE": q_dedup_prune,
-    "CORPUS-ASSIGN": q_corpus_assign,
-    "CORPUS-DECONTAM": q_corpus_decontam_combined,
-    "SIM-TOPK": q_sim_topk,
+REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
+    # sources
+    "S-SEARCH": (q_scan_caps, ORACLE_SCAN_CAPS),
+    "S-JDBC-SINK": (q_sink_suite, ORACLE_SINK_SUITE),
+    "S-JSONL": (q_s_jsonl, ORACLE_S_JDBC_SINK),
+    "S-CSV": (q_s_csv, ORACLE_S_JDBC_SINK),
+    "S-ORC": (q_s_orc, ORACLE_S_JDBC_SINK),
+    # projections and filters
+    "P-PROJECT": (q_p_project, ORACLE_P_PROJECT),
+    "P-FILTER": (q_p_filter, ORACLE_P_FILTER),
+    # joins
+    "J-DIM": (q_j_dim, ORACLE_J_DIM),
+    "J-DIM-REPORTER": (q_j_dim_reporter, ORACLE_J_DIM_REPORTER),
+    "J-MULTIWAY": (q_j_multiway, ORACLE_J_MULTIWAY),
+    "J-ATTACH": (q_j_attach, ORACLE_J_ATTACH),
+    "J-LOOKUP-INSERT": (q_j_lookup_insert, ORACLE_J_LOOKUP_INSERT),
+    "J-SEMI": (q_semi_family, ORACLE_SEMI_FAMILY),
+    "J-SALTED": (q_j_salted, ORACLE_J_SALTED),
+    "J-ASOF": (q_asof, ORACLE_ASOF),
+    "J-RANGE": (q_range_join, ORACLE_RANGE_JOIN),
+    # aggregations
+    "A-WORKLOG": (q_a_worklog, ORACLE_A_WORKLOG),
+    "A-HSUM": (q_a_hsum, ORACLE_A_HSUM),
+    "A-COUNT": (q_a_count, ORACLE_A_COUNT),
+    "A-COLLECT": (q_a_collect, ORACLE_A_COLLECT),
+    "A-SALTED": (q_a_salted, ORACLE_A_SALTED),
+    "A-PIVOT": (q_a_pivot, ORACLE_A_PIVOT),
+    # scalar functions
+    "F-SCALAR": (q_f_scalar, ORACLE_F_SCALAR),
+    "F-CUSTOMER": (q_f_customer_wide, ORACLE_F_CUSTOMER_WIDE),
+    "F-ORDERS": (q_f_orders, ORACLE_F_ORDERS),
+    "F-EVENTS": (q_f_events, ORACLE_F_EVENTS),
+    "F-DATEOPS": (q_f_dateops, ORACLE_F_DATEOPS),
+    # error handling and quality
+    "E-DROP": (q_e_drop, ORACLE_E_DROP),
+    "E-GATE": (q_e_gate, ORACLE_E_GATE),
+    "E-ISOLATE": (q_e_isolate, ORACLE_E_ISOLATE),
+    "E-PROFILE": (q_e_profile, ORACLE_E_PROFILE),
+    "E-AUDIT": (q_e_audit, ORACLE_E_AUDIT),
+    "E-QUANTILE": (q_e_quantile, ORACLE_E_QUANTILE),
+    "E-ROBUST": (q_e_robust, ORACLE_E_ROBUST),
+    "QUALITY-KLLGATE": (q_quality_kllgate, ORACLE_QUALITY_KLLGATE),
+    # views
+    "VIEW-CTE": (q_view_cte, ORACLE_VIEW_CTE),
+    "VIEW-IDIOMATIC": (q_view_idiomatic, ORACLE_VIEW_IDIOMATIC),
+    # windows
+    "WIN-FIXED": (q_win_fixed, ORACLE_WIN_FIXED),
+    "WIN-SLIDE": (q_win_slide, ORACLE_WIN_SLIDE),
+    "WIN-SESSION": (q_win_session, ORACLE_WIN_SESSION),
+    "WIN-RESAMPLE": (q_win_resample, ORACLE_WIN_RESAMPLE),
+    # history
+    "SCD2-APPLY": (q_scd2_apply, ORACLE_SCD2_APPLY),
+    # dedup
+    "DEDUP-EXACT": (q_dedup_exact_doc, ORACLE_DEDUP_EXACT_DOC),
+    "DEDUP-EXACT-SUITE": (q_dedup_exact, ORACLE_DEDUP_EXACT),
+    "LINE-DEDUP": (q_line_dedup, ORACLE_LINE_DEDUP),
+    "LINE-DEDUP-KEEPFIRST": (q_line_dedup_keepfirst, ORACLE_LINE_DEDUP_KEEPFIRST),
+    "DEDUP-SUBSTRING": (q_dedup_substring, ORACLE_DEDUP_SUBSTRING),
+    "DEDUP-NGRAM": (q_dedup_ngram, ORACLE_DEDUP_NGRAM),
+    "DEDUP-COMPONENTS": (q_dedup_components, ORACLE_DEDUP_COMPONENTS),
+    "DEDUP-PRUNE": (q_dedup_prune, ORACLE_DEDUP_PRUNE),
+    "DEDUP-PRUNE-BEST": (q_dedup_prune_best, ORACLE_DEDUP_PRUNE_BEST),
+    "DEDUP-FUZZY": (q_dedup_fuzzy, ORACLE_DEDUP_FUZZY),
+    "DEDUP-MINHASH": (q_dedup_minhash, None),
+    "DEDUP-MINHASH-COMP": (q_dedup_minhash_comp, None),
+    "DEDUP-SIMHASH": (q_dedup_simhash, None),
+    "DEDUP-INCR": (q_dedup_incr, None),
+    "DEDUP-CAPPED": (q_dedup_capped, ORACLE_DEDUP_CAPPED),
+    "DEDUP-CAPPED-AUDIT": (q_dedup_capped_audit, ORACLE_DEDUP_CAPPED_AUDIT),
+    "DEDUP-STARPRUNE": (q_dedup_starprune, ORACLE_DEDUP_STARPRUNE),
+    "DEDUP-CANDIDATES": (q_dedup_candidates, None),
+    "DEDUP-VERIFY": (q_dedup_verify, ORACLE_DEDUP_VERIFY),
+    # corpus
+    "CORPUS-ASSIGN": (q_corpus_assign, ORACLE_CORPUS_ASSIGN),
+    "CORPUS-SPLIT": (q_corpus_split, ORACLE_CORPUS_SPLIT),
+    "CORPUS-PACK": (q_corpus_pack, ORACLE_CORPUS_PACK),
+    "CORPUS-PACKSEQ": (q_corpus_packseq, None),
+    "CORPUS-DSIR": (q_corpus_dsir, ORACLE_CORPUS_DSIR),
+    "CORPUS-NOVELTY": (q_corpus_novelty, ORACLE_CORPUS_NOVELTY),
+    "CORPUS-SAMPLEK": (q_corpus_samplek, ORACLE_CORPUS_SAMPLEK),
+    "CORPUS-DECONTAM": (q_corpus_decontam, ORACLE_CORPUS_DECONTAM),
+    "CORPUS-DECONTAM-BLOOM": (q_corpus_decontam_bloom, ORACLE_CORPUS_DECONTAM),
+    "CORPUS-DECONTAM-SUITE": (q_corpus_decontam_combined, ORACLE_CORPUS_DECONTAM_COMBINED),
+    "CORPUS-CONTAMSCORE": (q_corpus_contamscore, ORACLE_CORPUS_CONTAMSCORE),
+    # text
+    "TEXT-PROFILE": (q_text_profile, ORACLE_TEXT_PROFILE),
+    "TEXT-ROWS": (q_text_rows, ORACLE_TEXT_ROWS),
+    "TEXT-TOKENS": (q_text_tokens, ORACLE_TEXT_TOKENS),
+    "TEXT-QUALITY": (q_text_quality, ORACLE_TEXT_QUALITY),
+    "TEXT-LANGID": (q_text_langid, ORACLE_TEXT_LANGID),
+    "TEXT-FINGERPRINT": (q_text_fingerprint, ORACLE_TEXT_FINGERPRINT),
+    "TEXT-CLEAN": (q_text_clean, ORACLE_TEXT_CLEAN),
+    "TEXT-NORMALIZE": (q_text_normalize, ORACLE_TEXT_NORMALIZE),
+    "TEXT-CHUNK": (q_text_chunk, ORACLE_TEXT_CHUNK),
+    "TEXT-WINNOW": (q_text_winnow, ORACLE_TEXT_WINNOW),
+    "TEXT-REPETITION": (q_text_repetition, ORACLE_TEXT_REPETITION),
+    "TEXT-GOPHER": (q_text_gopher, ORACLE_TEXT_GOPHER),
+    "TEXT-TOPTERMS": (q_text_topterms, ORACLE_TEXT_TOPTERMS),
+    "TEXT-TFIDF": (q_text_tfidf, ORACLE_TEXT_TFIDF),
+    "COMPRESS-RATIO": (q_compress_ratio, None),
+    "LM-SCORE": (q_lm_score, ORACLE_LM_SCORE),
+    # search
+    "TEXT-BM25": (q_text_bm25, ORACLE_TEXT_BM25),
+    "TEXT-BM25-TOPK": (q_search_suite, ORACLE_SEARCH_SUITE),
+    "SEARCH-RRF": (q_search_rrf, ORACLE_SEARCH_RRF),
+    # tokenizers
+    "BPE-ENCODE": (q_bpe_encode, ORACLE_BPE_ENCODE),
+    "WP-ENCODE": (q_wp_encode, ORACLE_WP_ENCODE),
+    "UNIGRAM-ENCODE": (q_unigram_encode, ORACLE_UNIGRAM_ENCODE),
+    # classifiers
+    "CLS-SCORE": (q_cls_score, ORACLE_CLS_SCORE),
+    "CLS-ROUTE": (q_cls_route, ORACLE_CLS_ROUTE),
+    "CLS-GATE": (q_cls_gate, ORACLE_CLS_GATE),
+    # sketches
+    "SKETCH-HLL": (q_sketch_hll, ORACLE_SKETCH_HLL),
+    "SKETCH-THETA": (q_sketch_theta, ORACLE_SKETCH_THETA),
+    "SKETCH-FREQ": (q_sketch_freq, ORACLE_SKETCH_FREQ),
+    "SKETCH-KLL": (q_sketch_kll, ORACLE_SKETCH_KLL),
+    "SKETCH-BLOOM": (q_sketch_bloom, ORACLE_SKETCH_BLOOM),
+    "SKETCH-CONTAM": (q_sketch_contam, ORACLE_SKETCH_CONTAM),
+    "SKETCH-CONTAM-SCOUT": (q_sketch_contam_scout, None),
+    # similarity
+    "SIM-TOPK": (q_sim_topk, ORACLE_SIM_TOPK),
+    "SIM-LSH": (q_sim_lsh, None),
+    "SIM-LSH-QD": (q_sim_lsh_qd, None),
+    "SIM-IVF": (q_sim_ivf, None),
+    "SIM-IVF-APPEND": (q_sim_ivf_append, None),
+    "SIM-IVF-RECLUSTER": (q_sim_ivf_recluster, None),
+    "SIM-PQ": (q_sim_pq, None),
+    "SIM-IVFPQ": (q_sim_ivfpq, None),
+    "SIM-BQ": (q_sim_bq, ORACLE_SIM_BQ),
+    "SIM-BQRR": (q_sim_bqrr, ORACLE_SIM_BQRR),
+    "SIM-IVFBQ": (q_sim_ivfbq, None),
+    "SIM-ANN": (q_sim_ann, None),
+    "EMB-NEARDUP": (q_emb_neardup, None),
+    "EMB-QUANT": (q_emb_quant, ORACLE_EMB_QUANT),
+    # multimodal
+    "MM-MEDIA": (q_mm_media, ORACLE_MM_MEDIA),
+    "MM-VISUAL": (q_mm_visual, ORACLE_MM_VISUAL),
+    "MM-IMAGE": (q_mm_image, ORACLE_MM_IMAGE),
+    "MM-RESIZE": (q_mm_resize, ORACLE_MM_RESIZE),
+    "MM-AUDIO": (q_mm_audio, ORACLE_MM_AUDIO),
+    "MM-FRAMES": (q_mm_frames, ORACLE_MM_FRAMES),
+    # pipelines
+    "PIPE-DOCS": (q_pipe_docs, ORACLE_PIPE_DOCS),
+    "PIPE-FAMILY": (q_pipe_family, ORACLE_PIPE_FAMILY),
+    "PIPE-CORPUS": (q_pipe_corpus, ORACLE_PIPE_CORPUS),
+    "PIPE-CORPUS-COMPONENTS": (q_pipe_corpus_components, None),
+    "PIPE-EVENTS": (q_pipe_events, ORACLE_PIPE_EVENTS),
 }
 
+#: The ids the driver sees. Its correctness gate records a bounded prefix
+#: of at most 50 entries; the ops a 50-row prefix once left unverified come
+#: first, so a tighter cap still checks them.
+DRIVER_WINDOW: tuple[str, ...] = (
+    "TEXT-PROFILE", "TEXT-ROWS", "PIPE-FAMILY", "PIPE-EVENTS", "J-SALTED",
+    "J-ASOF", "J-RANGE", "A-SALTED", "EMB-QUANT", "MM-MEDIA", "MM-FRAMES",
+    "EMB-NEARDUP", "SIM-ANN", "DEDUP-CANDIDATES", "SCD2-APPLY", "E-QUANTILE",
+    "S-SEARCH", "S-JDBC-SINK", "P-PROJECT", "P-FILTER", "J-DIM",
+    "J-DIM-REPORTER", "J-MULTIWAY", "J-ATTACH", "J-LOOKUP-INSERT", "J-SEMI",
+    "A-WORKLOG", "A-HSUM", "A-COLLECT", "F-SCALAR", "F-CUSTOMER", "F-ORDERS",
+    "F-EVENTS", "E-DROP", "E-AUDIT", "VIEW-CTE", "WIN-FIXED", "WIN-SESSION",
+    "DEDUP-EXACT-SUITE", "DEDUP-NGRAM", "DEDUP-COMPONENTS", "DEDUP-PRUNE",
+    "CORPUS-ASSIGN", "CORPUS-DECONTAM-SUITE", "SIM-TOPK", "DEDUP-FUZZY",
+    "TEXT-BM25-TOPK", "SKETCH-KLL", "SKETCH-CONTAM", "DEDUP-VERIFY",
+)
+assert len(DRIVER_WINDOW) <= 50, f"driver window exceeds 50 entries: {len(DRIVER_WINDOW)}"
+
+#: The driver shows these combined ops under the id that their granular
+#: form holds in the registry (renaming perfbench's mix ids is a benchmark change).
+DRIVER_KEYS = {
+    "PIPE-FAMILY": "PIPE-DOCS",
+    "DEDUP-EXACT-SUITE": "DEDUP-EXACT",
+    "CORPUS-DECONTAM-SUITE": "CORPUS-DECONTAM",
+}
+
+QUERIES: dict[str, QueryFn] = {DRIVER_KEYS.get(i, i): REGISTRY[i][0] for i in DRIVER_WINDOW}
 ORACLES: dict[str, str] = {
-    "TEXT-PROFILE": ORACLE_TEXT_PROFILE,
-    "TEXT-ROWS": ORACLE_TEXT_ROWS,
-    "PIPE-DOCS": ORACLE_PIPE_FAMILY,
-    "PIPE-EVENTS": ORACLE_PIPE_EVENTS,
-    "J-SALTED": ORACLE_J_SALTED,
-    "J-ASOF": ORACLE_ASOF,
-    "J-RANGE": ORACLE_RANGE_JOIN,
-    "A-SALTED": ORACLE_A_SALTED,
-    "SCD2-APPLY": ORACLE_SCD2_APPLY,
-    "E-QUANTILE": ORACLE_E_QUANTILE,
-    "EMB-QUANT": ORACLE_EMB_QUANT,
-    "MM-MEDIA": ORACLE_MM_MEDIA,
-    "MM-FRAMES": ORACLE_MM_FRAMES,
-    # EMB-NEARDUP / SIM-ANN / DEDUP-CANDIDATES: xxhash64 signatures, seeded
-    # hyperplanes, and iterative k-means have no DuckDB twin → rows-only
-    # checks by design, pinned by recall/equivalence tests.
-    "S-SEARCH": ORACLE_SCAN_CAPS,
-    "S-JDBC-SINK": ORACLE_SINK_SUITE,
-    "P-PROJECT": ORACLE_P_PROJECT,
-    "P-FILTER": ORACLE_P_FILTER,
-    "J-DIM": ORACLE_J_DIM,
-    "J-DIM-REPORTER": ORACLE_J_DIM_REPORTER,
-    "J-MULTIWAY": ORACLE_J_MULTIWAY,
-    "J-ATTACH": ORACLE_J_ATTACH,
-    "J-LOOKUP-INSERT": ORACLE_J_LOOKUP_INSERT,
-    "J-SEMI": ORACLE_SEMI_FAMILY,
-    "A-WORKLOG": ORACLE_A_WORKLOG,
-    "A-HSUM": ORACLE_A_HSUM,
-    "A-COLLECT": ORACLE_A_COLLECT,
-    "F-SCALAR": ORACLE_F_SCALAR,
-    "F-CUSTOMER": ORACLE_F_CUSTOMER_WIDE,
-    "F-ORDERS": ORACLE_F_ORDERS,
-    "F-EVENTS": ORACLE_F_EVENTS,
-    "E-DROP": ORACLE_E_DROP,
-    "E-AUDIT": ORACLE_E_AUDIT,
-    "VIEW-CTE": ORACLE_VIEW_CTE,
-    "WIN-FIXED": ORACLE_WIN_FIXED,
-    "WIN-SESSION": ORACLE_WIN_SESSION,
-    "DEDUP-EXACT": ORACLE_DEDUP_EXACT,
-    "DEDUP-NGRAM": ORACLE_DEDUP_NGRAM,
-    "DEDUP-COMPONENTS": ORACLE_DEDUP_COMPONENTS,
-    "DEDUP-PRUNE": ORACLE_DEDUP_PRUNE,
-    "CORPUS-ASSIGN": ORACLE_CORPUS_ASSIGN,
-    "CORPUS-DECONTAM": ORACLE_CORPUS_DECONTAM_COMBINED,
-    "SIM-TOPK": ORACLE_SIM_TOPK,
+    DRIVER_KEYS.get(i, i): REGISTRY[i][1] for i in DRIVER_WINDOW if REGISTRY[i][1] is not None
 }
-
-def q_text_repetition(spark: SparkSession, sf: str) -> DataFrame:
-    """TEXT-REPETITION granular: Gopher-style repetition mass per doc.
-
-    The fold is zero-shuffle and CPU-dense, so parallelism equals input
-    splits; the bench corpus is ONE unsplittable row group, which would
-    serialize the whole operator on one core. Spreading a ~MB input
-    first is a negligible shuffle; a 100 TB corpus has thousands of
-    splits and skips this."""
-    docs = load(spark, sf, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    # the vectorized twin (r10): same values as repetition_signals
-    # (parity-pinned; the relational form remains the oracle-shaped
-    # formulation), ~3.6× faster — the TEXT-WINNOW precedent
-    from ..operators.text import repetition_signals_arrow
-
-    return repetition_signals_arrow(docs, top_ns=(2, 3), dup_ns=(2, 5))
+ALL_QUERIES: dict[str, QueryFn] = {i: fn for i, (fn, _) in REGISTRY.items()}
+ALL_ORACLES: dict[str, str] = {i: sql for i, (_, sql) in REGISTRY.items() if sql is not None}
 
 
-def q_e_profile(spark: SparkSession, sf: str) -> DataFrame:
-    """E-PROFILE granular: one-pass column profiling of the deterministic
-    orders projection (see q_e_audit for the hash rules)."""
-    from ..quality.profile import profile_columns
-
-    proj = load(spark, sf, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_date"),
-    )
-    return profile_columns(proj)
-
-
-def q_text_bm25(spark: SparkSession, sf: str) -> DataFrame:
-    """TEXT-BM25 granular: every doc scored against the fixed query
-    (rounded to 9 dp — see the ln() note in q_text_profile)."""
-    from ..operators.search import bm25_scores
-
-    return bm25_scores(load(spark, sf, "documents"), list(BM25_TERMS)).select(
-        "doc_id", F.round("bm25", 9).alias("bm25")
-    )
-
-
-def q_text_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """TEXT-BM25-TOPK granular: top-10 retrieval for the fixed query.
-    Ranks over the 9-dp-ROUNDED score (ties broken by doc_id) so both
-    engines order identical values — full-precision order could differ
-    across engines exactly where two scores round together (see the ln()
-    note in q_text_profile). Executes as TakeOrderedAndProject
-    (plan-asserted for the operator in tests/test_search.py); rank comes
-    from the sorted k-row array (bm25_topk's no-window formulation)."""
-    from ..operators.search import bm25_scores
-
-    scored = bm25_scores(load(spark, sf, "documents"), list(BM25_TERMS)).select(
-        "doc_id", F.round("bm25", 9).alias("bm25")
-    )
-    top = scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(10)
-    item = F.struct((-F.col("bm25")).alias("_negs"), F.col("doc_id").alias("_id"))
-    packed = top.agg(F.sort_array(F.collect_list(item)).alias("_top"))
-    return packed.select(F.posexplode("_top").alias("_pos", "_row")).select(
-        F.col("_row._id").alias("doc_id"),
-        (-F.col("_row._negs")).alias("bm25"),
-        (F.col("_pos") + 1).cast("long").alias("rank"),
-    )
-
-
-ORACLE_TEXT_BM25_TOPK = f"""
-SELECT doc_id, bm25,
-       CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS rank
-FROM ({_bm25_oracle()})
-ORDER BY bm25 DESC, doc_id LIMIT 10
-"""
-
-
-def q_search_rrf(spark: SparkSession, sf: str) -> DataFrame:
-    """SEARCH-RRF granular: hybrid retrieval — the fixed BM25 query's
-    top-20 (ranked over 9-dp-rounded scores, the family's engine-stable
-    ordering) fused with the vec_id=0 embedding query's exact-cosine
-    top-20 via Reciprocal Rank Fusion (k=60), final top-10. The fused
-    score is a fixed-order sum of 1/(60+rank) doubles from exact integer
-    ranks — bit-stable, so the oracle hash-matches; cosine ranks are
-    bit-equal per the SIM-TOPK discipline."""
-    from ..operators.search import _ranked_take, bm25_scores, rrf_fuse
-    from ..operators.similarity import cosine_topk
-
-    docs = load(spark, sf, "documents")
-    emb = load(spark, sf, "embeddings")
-    scored = bm25_scores(docs, list(BM25_TERMS)).select(
-        "doc_id", F.round("bm25", 9).alias("bm25")
-    )
-    bm = _ranked_take(scored, "bm25", "doc_id", 20).select("doc_id", "rank")
-    qv = emb.where(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    cs = cosine_topk(emb, qv, k=20).select(F.col("vec_id").alias("doc_id"), "rank")
-    return rrf_fuse([bm, cs], id_col="doc_id", k=60, topk=10)
-
-
-ORACLE_SEARCH_RRF = f"""
-WITH bmscore AS ({_bm25_oracle()}),
-bm AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS r
-       FROM bmscore ORDER BY bm25 DESC, doc_id LIMIT 20),
-q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-cscored AS (
-  SELECT c.vec_id AS cid,
-    list_sum(list_transform(range(1, len(c.embedding) + 1),
-      i -> CAST(c.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE))) /
-    (sqrt(list_sum(list_transform(range(1, len(c.embedding) + 1),
-       i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))) *
-     sqrt(list_sum(list_transform(range(1, len(q.qv) + 1),
-       i -> CAST(q.qv[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE))))) AS cos_sim
-  FROM embeddings c CROSS JOIN q WHERE c.vec_id != 0
-),
-cs AS (SELECT cid, CAST(row_number() OVER (ORDER BY cos_sim DESC, cid) AS BIGINT) AS r
-       FROM cscored ORDER BY cos_sim DESC, cid LIMIT 20),
-fused AS (
-  SELECT COALESCE(bm.doc_id, cs.cid) AS doc_id,
-         COALESCE(CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + CAST(bm.r AS DOUBLE)),
-                  CAST(0.0 AS DOUBLE))
-       + COALESCE(CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + CAST(cs.r AS DOUBLE)),
-                  CAST(0.0 AS DOUBLE)) AS rrf
-  FROM bm FULL OUTER JOIN cs ON bm.doc_id = cs.cid
+_DOCS = "SELECT COUNT(*) FROM documents"
+_USERS_PER_TYPE = (
+    "SELECT MAX(n) FROM (SELECT COUNT(DISTINCT user_id) AS n "
+    "FROM events GROUP BY event_type)"
 )
-SELECT doc_id, rrf,
-       CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS BIGINT) AS rank
-FROM fused ORDER BY rrf DESC, doc_id LIMIT 10
-"""
 
-
-def q_search_suite(spark: SparkSession, sf: str) -> DataFrame:
-    """TEXT-BM25-TOPK (driver combined entry): ``part='bm25'`` is the
-    classic top-10 retrieval, ``part='rrf'`` the hybrid BM25+cosine RRF
-    fusion (see q_search_rrf) — one entry verifies both retrieval
-    surfaces, keeping the driver registry at 50."""
-    bm = q_text_bm25_topk(spark, sf).select(
-        F.lit("bm25").alias("part"), "doc_id", F.col("bm25").alias("score"), "rank"
-    )
-    rrf = q_search_rrf(spark, sf).select(
-        F.lit("rrf").alias("part"), "doc_id", F.col("rrf").alias("score"), "rank"
-    )
-    return bm.unionByName(rrf)
-
-
-ORACLE_SEARCH_SUITE = f"""
-SELECT 'bm25' AS part, doc_id, bm25 AS score, rank FROM ({ORACLE_TEXT_BM25_TOPK})
-UNION ALL
-SELECT 'rrf' AS part, doc_id, rrf AS score, rank FROM ({ORACLE_SEARCH_RRF})
-"""
-
-
-def q_dedup_fuzzy(spark: SparkSession, sf: str) -> DataFrame:
-    """DEDUP-FUZZY granular: typo-level near-miss pairs (1 ≤ levenshtein
-    ≤ 1) over part names with a deterministic last-char-drop typo
-    injected on every 7th part — the part vocabulary is 64 verbatim-
-    duplicated names, so exact copies (DEDUP-EXACT's job) are excluded
-    and the synthetic typos are what a linkage pass actually hunts.
-    Blocking (first token + adjacent length band) is part of the spec
-    and the oracle mirrors it exactly."""
-    from ..operators.dedup import fuzzy_pairs
-
-    names = load(spark, sf, "part").select(
-        F.col("p_partkey").cast("long").alias("doc_id"),
-        F.when(
-            F.col("p_partkey") % 7 == 0,
-            F.expr("substring(p_name, 1, length(p_name) - 1)"),
-        ).otherwise(F.col("p_name")).alias("p_name"),
-    )
-    return fuzzy_pairs(names, "p_name", max_dist=1)
-
-
-ORACLE_DEDUP_FUZZY = """
-WITH names AS (
-  SELECT CAST(p_partkey AS BIGINT) AS id,
-         CASE WHEN p_partkey % 7 = 0
-              THEN substr(p_name, 1, length(p_name) - 1)
-              ELSE p_name END AS s
-  FROM part
-),
-base AS (
-  SELECT id, s,
-         list_filter(string_split_regex(trim(s), '\\s+'), x -> x <> '')[1] AS w,
-         CAST(floor(length(s) / 2.0) AS BIGINT) AS band
-  FROM names
-)
-SELECT a.id AS id_a, b.id AS id_b,
-       CAST(levenshtein(a.s, b.s) AS INTEGER) AS dist
-FROM base a JOIN base b
-  ON a.w = b.w AND b.band BETWEEN a.band - 1 AND a.band + 1
- AND a.id < b.id AND abs(length(a.s) - length(b.s)) <= 1
-WHERE levenshtein(a.s, b.s) BETWEEN 1 AND 1
-"""
-
-
-def q_dedup_incr(spark: SparkSession, sf: str) -> DataFrame:
-    """DEDUP-INCR granular: odd-id increment served against the even-id
-    minhash index (rows-only: xxhash signatures)."""
-    docs = load(spark, sf, "documents")
-    # small_increment=False: this entry's "increment" is HALF THE CORPUS
-    # (a backfill shape, not a micro-batch), so the serve path's static
-    # broadcast hints are wrong here — at the sf1 dir the exploded
-    # candidate set alone is ~25M rows and the hint OOMs the driver
-    # (caught by BENCH_SF1_r09; PERF-NOTES 44). Batch mode keeps AQE, so
-    # small-SF runs still broadcast at runtime when it actually fits.
-    return incremental_near_dups(
-        docs.where("doc_id % 2 = 1"),
-        minhash_index(docs.where("doc_id % 2 = 0")),
-        threshold=0.5,
-        small_increment=False,
-    ).orderBy("id_a", "id_b")
-
-
-# Round-4 driver-registry additions (defined below the dict literal, so
-# appended here): the four newest surfaces join the driver's verified
-# window — DEDUP-FUZZY and TEXT-BM25-TOPK full-oracle, SKETCH-KLL and
-# SKETCH-CONTAM in their exact regimes (full-oracle; CONTAM's
-# past-retention estimating regime lives on as the granular
-# SKETCH-CONTAM-SCOUT rows-only entry plus the decontaminate-parity test
-# in tests/test_sketches.py). Slots were freed by the compaction above.
-QUERIES["DEDUP-FUZZY"] = q_dedup_fuzzy
-ORACLES["DEDUP-FUZZY"] = ORACLE_DEDUP_FUZZY
-QUERIES["TEXT-BM25-TOPK"] = q_search_suite
-ORACLES["TEXT-BM25-TOPK"] = ORACLE_SEARCH_SUITE
-QUERIES["SKETCH-KLL"] = q_sketch_kll
-ORACLES["SKETCH-KLL"] = ORACLE_SKETCH_KLL
-QUERIES["SKETCH-CONTAM"] = q_sketch_contam
-ORACLES["SKETCH-CONTAM"] = ORACLE_SKETCH_CONTAM
-# DEDUP-VERIFY: the oracle-checkable half of the DEDUP-CANDIDATES split
-# (verify stage on a deterministic pair set; generation stays rows-only)
-QUERIES["DEDUP-VERIFY"] = q_dedup_verify
-ORACLES["DEDUP-VERIFY"] = ORACLE_DEDUP_VERIFY
-
-assert len(QUERIES) <= 50, f"driver registry exceeds the 50-entry window: {len(QUERIES)}"
-
-
-# The GRANULAR registry: one entry per original singleton op, kept for
-# bench.py (stable per-query timings vs BENCH_r01), tools/audit_plans.py,
-# and local per-op debugging. The driver sees only QUERIES/ORACLES above;
-# for round-4-compacted driver entries the granular keys keep the ORIGINAL
-# singleton forms (placed after **QUERIES, overriding the combined ones).
-ALL_QUERIES: dict[str, QueryFn] = {
-    **QUERIES,
-    "PIPE-CORPUS": q_pipe_corpus,
-    # bench-only granular id (no oracle: banding-graph semantics) — the
-    # clique-safe component-grain prune, first-class benched per VERDICT
-    # r11 item 4
-    "PIPE-CORPUS-COMPONENTS": q_pipe_corpus_components,
-    # bench-timing continuity: the driver slot runs the docs+corpus
-    # family; the granular id reverts to the docs singleton (the
-    # DEDUP-EXACT compaction pattern) so the PIPE-DOCS bench series
-    # stays comparable and PIPE-CORPUS is timed once, under its own id
-    "PIPE-DOCS": q_pipe_docs,
-    "S-SEARCH": q_s_search,
-    "P-FILTER-EQ": q_p_filter_eq,
-    "P-FILTER-SRC": q_p_filter_src,
-    "P-LIMIT": q_p_limit,
-    "P-EXISTS": q_p_exists,
-    "J-SEMI": q_j_semi,
-    "A-LINKED": q_a_linked,
-    "F-CUSTOMER": q_f_customer,
-    "MM-VISUAL": q_mm_visual,
-    "MM-AUDIO": q_mm_audio,
-    "P-NULLSAFE": q_p_nullsafe,
-    "J-DIM-REVIEWER": q_j_dim_reviewer,
-    "J-DIM-PROJECT": q_j_dim_project,
-    "A-COUNT": q_a_count,
-    "F-PCTCHG": q_f_pctchg,
-    "F-PCTDIFF": q_f_pctdiff,
-    "F-DELTA": q_f_delta,
-    "F-HRS2SEC": q_f_hrs2sec,
-    "F-TOJSON": q_f_tojson,
-    "F-FROMJSON": q_f_fromjson,
-    "F-DATEFMT": q_f_datefmt,
-    "F-CONCAT": q_f_concat,
-    "F-CAST": q_f_cast,
-    "F-COALESCE": q_f_coalesce,
-    "F-TS-PARSE": q_f_ts_parse,
-    "E-GATE": q_e_gate,
-    "E-ISOLATE": q_e_isolate,
-    "WIN-TUMBLE": q_win_tumble,
-    "WIN-SLIDE": q_win_slide,
-    "DEDUP-MINHASH": q_dedup_minhash,
-    "DEDUP-SIMHASH": q_dedup_simhash,
-    "CORPUS-SPLIT": q_corpus_split,
-    "CORPUS-PACK": q_corpus_pack,
-    "SIM-LSH": q_sim_lsh,
-    "SIM-LSH-QD": q_sim_lsh_qd,
-    "SIM-IVF": q_sim_ivf,
-    "SIM-PQ": q_sim_pq,
-    "SIM-IVFPQ": q_sim_ivfpq,
-    "SIM-IVFBQ": q_sim_ivfbq,
-    "TEXT-TOKENS": q_text_tokens,
-    "TEXT-QUALITY": q_text_quality,
-    "TEXT-LANGID": q_text_langid,
-    "TEXT-FINGERPRINT": q_text_fingerprint,
-    "TEXT-CLEAN": q_text_clean,
-    "MM-IMAGE": q_mm_image,
-    "MM-RESIZE": q_mm_resize,
-    "VIEW-IDIOMATIC": q_view_idiomatic,
-    "TEXT-CHUNK": q_text_chunk,
-    "TEXT-WINNOW": q_text_winnow,
-    "TEXT-REPETITION": q_text_repetition,
-    "E-PROFILE": q_e_profile,
-    "DEDUP-INCR": q_dedup_incr,
-    "TEXT-BM25": q_text_bm25,
-    "SKETCH-HLL": q_sketch_hll,
-    "SKETCH-THETA": q_sketch_theta,
-    # round-4 singletons: DEDUP-EXACT reverts to its doc-level form here
-    # (bench timing continuity vs r1); the driver's combined entry adds
-    # the LINE-DEDUP part. Both line modes stay oracle-checked granularly.
-    "DEDUP-EXACT": q_dedup_exact_doc,
-    "BPE-ENCODE": q_bpe_encode,
-    "LINE-DEDUP": q_line_dedup,
-    "LINE-DEDUP-KEEPFIRST": q_line_dedup_keepfirst,
-    "DEDUP-SUBSTRING": q_dedup_substring,
-    "DEDUP-PRUNE-BEST": q_dedup_prune_best,
-    "TEXT-NORMALIZE": q_text_normalize,
-    "SKETCH-FREQ": q_sketch_freq,
-    "LM-SCORE": q_lm_score,
-    "CLS-SCORE": q_cls_score,
-    "CLS-ROUTE": q_cls_route,
-    "CLS-GATE": q_cls_gate,
-    "TEXT-GOPHER": q_text_gopher,
-    "TEXT-TOPTERMS": q_text_topterms,
-    "F-DATEOPS": q_f_dateops,
-    "CORPUS-DSIR": q_corpus_dsir,
-    "CORPUS-PACKSEQ": q_corpus_packseq,
-    "SKETCH-CONTAM-SCOUT": q_sketch_contam_scout,
-    # the driver entry above unions exact+bloom; the singletons keep
-    # their own bench timings and oracles here
-    "CORPUS-DECONTAM": q_corpus_decontam,
-    "CORPUS-DECONTAM-BLOOM": q_corpus_decontam_bloom,
-    "SKETCH-BLOOM": q_sketch_bloom,
-    "TEXT-BM25-TOPK": q_text_bm25_topk,
-    "SEARCH-RRF": q_search_rrf,
-    "CORPUS-NOVELTY": q_corpus_novelty,
-    "WP-ENCODE": q_wp_encode,
-    "UNIGRAM-ENCODE": q_unigram_encode,
-    "S-JDBC-SINK": q_s_jdbc_sink,
-    "S-JSONL": q_s_jsonl,
-    "S-CSV": q_s_csv,
-    "S-ORC": q_s_orc,
-    "A-PIVOT": q_a_pivot,
-    "TEXT-TFIDF": q_text_tfidf,
-    "SIM-BQ": q_sim_bq,
-    "SIM-BQRR": q_sim_bqrr,
-    "WIN-RESAMPLE": q_win_resample,
-    "COMPRESS-RATIO": q_compress_ratio,
-    "E-ROBUST": q_e_robust,
-    "CORPUS-SAMPLEK": q_corpus_samplek,
-    "CORPUS-CONTAMSCORE": q_corpus_contamscore,
-    "QUALITY-KLLGATE": q_quality_kllgate,
-    # round-10: hot-bucket cap semantics (full-oracle on deterministic
-    # sqrt buckets), its dropped-mass audit, and the component-grain LSH
-    # mode (rows-only — xxhash bands, like DEDUP-MINHASH)
-    "DEDUP-CAPPED": q_dedup_capped,
-    "DEDUP-CAPPED-AUDIT": q_dedup_capped_audit,
-    "DEDUP-MINHASH-COMP": q_dedup_minhash_comp,
-    # round-11: the component-grain COMPOSITION (star edges → components
-    # → prune) full-oracle on the same deterministic buckets
-    "DEDUP-STARPRUNE": q_dedup_starprune,
-    # round-10: IVF index maintenance — append at frozen centroids +
-    # staleness signal (rows-only: k-means)
-    "SIM-IVF-APPEND": q_sim_ivf_append,
-    # round-11: targeted hot-cell repair (rows-only: k-means) — skewed
-    # append trips staleness, one cell re-splits at frozen siblings
-    "SIM-IVF-RECLUSTER": q_sim_ivf_recluster,
-}
-
-ALL_ORACLES: dict[str, str] = {
-    **ORACLES,
-    "PIPE-CORPUS": ORACLE_PIPE_CORPUS,
-    "PIPE-DOCS": ORACLE_PIPE_DOCS,
-    "S-SEARCH": ORACLE_S_SEARCH,
-    "P-FILTER-EQ": ORACLE_P_FILTER_EQ,
-    "P-FILTER-SRC": ORACLE_P_FILTER_SRC,
-    "P-LIMIT": ORACLE_P_LIMIT,
-    "P-EXISTS": ORACLE_P_EXISTS,
-    "J-SEMI": ORACLE_J_SEMI,
-    "A-LINKED": ORACLE_A_LINKED,
-    "F-CUSTOMER": ORACLE_F_CUSTOMER,
-    "MM-VISUAL": ORACLE_MM_VISUAL,
-    "MM-AUDIO": ORACLE_MM_AUDIO,
-    "P-NULLSAFE": ORACLE_P_NULLSAFE,
-    "J-DIM-REVIEWER": ORACLE_J_DIM_REVIEWER,
-    "J-DIM-PROJECT": ORACLE_J_DIM_PROJECT,
-    "A-COUNT": ORACLE_A_COUNT,
-    "F-PCTCHG": ORACLE_F_PCTCHG,
-    "F-PCTDIFF": ORACLE_F_PCTDIFF,
-    "F-DELTA": ORACLE_F_DELTA,
-    "F-HRS2SEC": ORACLE_F_HRS2SEC,
-    "F-TOJSON": ORACLE_F_TOJSON,
-    "F-FROMJSON": ORACLE_F_FROMJSON,
-    "F-DATEFMT": ORACLE_F_DATEFMT,
-    "F-CONCAT": ORACLE_F_CONCAT,
-    "F-CAST": ORACLE_F_CAST,
-    "F-COALESCE": ORACLE_F_COALESCE,
-    "F-TS-PARSE": ORACLE_F_TS_PARSE,
-    "E-GATE": ORACLE_E_GATE,
-    "E-ISOLATE": ORACLE_E_ISOLATE,
-    "WIN-TUMBLE": ORACLE_WIN_TUMBLE,
-    "WIN-SLIDE": ORACLE_WIN_SLIDE,
-    "CORPUS-SPLIT": ORACLE_CORPUS_SPLIT,
-    "CORPUS-PACK": ORACLE_CORPUS_PACK,
-    "TEXT-TOKENS": ORACLE_TEXT_TOKENS,
-    "TEXT-QUALITY": ORACLE_TEXT_QUALITY,
-    "TEXT-LANGID": ORACLE_TEXT_LANGID,
-    "TEXT-FINGERPRINT": ORACLE_TEXT_FINGERPRINT,
-    "TEXT-CLEAN": ORACLE_TEXT_CLEAN,
-    "MM-IMAGE": ORACLE_MM_IMAGE,
-    "MM-RESIZE": ORACLE_MM_RESIZE,
-    "VIEW-IDIOMATIC": ORACLE_VIEW_IDIOMATIC,
-    "TEXT-CHUNK": ORACLE_TEXT_CHUNK,
-    "TEXT-WINNOW": ORACLE_TEXT_WINNOW,
-    "TEXT-REPETITION": ORACLE_TEXT_REPETITION,
-    "E-PROFILE": ORACLE_E_PROFILE,
-    "TEXT-BM25": ORACLE_TEXT_BM25,
-    "SKETCH-HLL": ORACLE_SKETCH_HLL,
-    "SKETCH-THETA": ORACLE_SKETCH_THETA,
-    "DEDUP-EXACT": ORACLE_DEDUP_EXACT_DOC,
-    "BPE-ENCODE": ORACLE_BPE_ENCODE,
-    "LINE-DEDUP": ORACLE_LINE_DEDUP,
-    "DEDUP-SUBSTRING": ORACLE_DEDUP_SUBSTRING,
-    "DEDUP-PRUNE-BEST": ORACLE_DEDUP_PRUNE_BEST,
-    "TEXT-NORMALIZE": ORACLE_TEXT_NORMALIZE,
-    "LINE-DEDUP-KEEPFIRST": ORACLE_LINE_DEDUP_KEEPFIRST,
-    "SKETCH-FREQ": ORACLE_SKETCH_FREQ,
-    "LM-SCORE": ORACLE_LM_SCORE,
-    "CLS-SCORE": ORACLE_CLS_SCORE,
-    "CLS-ROUTE": ORACLE_CLS_ROUTE,
-    "CLS-GATE": ORACLE_CLS_GATE,
-    "TEXT-GOPHER": ORACLE_TEXT_GOPHER,
-    "TEXT-TOPTERMS": ORACLE_TEXT_TOPTERMS,
-    "F-DATEOPS": ORACLE_F_DATEOPS,
-    "CORPUS-DSIR": ORACLE_CORPUS_DSIR,
-    "QUALITY-KLLGATE": ORACLE_QUALITY_KLLGATE,
-    "CORPUS-DECONTAM": ORACLE_CORPUS_DECONTAM,
-    "CORPUS-DECONTAM-BLOOM": ORACLE_CORPUS_DECONTAM,
-    "SKETCH-BLOOM": ORACLE_SKETCH_BLOOM,
-    "TEXT-BM25-TOPK": ORACLE_TEXT_BM25_TOPK,
-    "SEARCH-RRF": ORACLE_SEARCH_RRF,
-    "CORPUS-NOVELTY": ORACLE_CORPUS_NOVELTY,
-    "WP-ENCODE": ORACLE_WP_ENCODE,
-    "S-JDBC-SINK": ORACLE_S_JDBC_SINK,
-    "S-JSONL": ORACLE_S_JDBC_SINK,
-    "S-CSV": ORACLE_S_JDBC_SINK,
-    "S-ORC": ORACLE_S_JDBC_SINK,
-    "A-PIVOT": ORACLE_A_PIVOT,
-    "TEXT-TFIDF": ORACLE_TEXT_TFIDF,
-    "SIM-BQ": ORACLE_SIM_BQ,
-    "SIM-BQRR": ORACLE_SIM_BQRR,
-    "WIN-RESAMPLE": ORACLE_WIN_RESAMPLE,
-    "E-ROBUST": ORACLE_E_ROBUST,
-    "CORPUS-SAMPLEK": ORACLE_CORPUS_SAMPLEK,
-    "CORPUS-CONTAMSCORE": ORACLE_CORPUS_CONTAMSCORE,
-    # UNIGRAM-ENCODE: full oracle after all — the Viterbi frontier rides
-    # in the recursive row (windowed DP), so no keyed recursion needed;
-    # dyadic frozen logps make the path costs engine-exact
-    "UNIGRAM-ENCODE": ORACLE_UNIGRAM_ENCODE,
-    # round-10: cap semantics + audit replay exactly in SQL (the sqrt
-    # bucketing is engine/oracle-common); DEDUP-MINHASH-COMP stays
-    # oracle-less (seeded xxhash bands)
-    "DEDUP-CAPPED": ORACLE_DEDUP_CAPPED,
-    "DEDUP-CAPPED-AUDIT": ORACLE_DEDUP_CAPPED_AUDIT,
-    # round-11: component-grain composition replayed in closed form
-    # (disjoint sqrt buckets → component == bucket, min-id keeps)
-    "DEDUP-STARPRUNE": ORACLE_DEDUP_STARPRUNE,
-}
-
-#: Oracles valid only within a DECLARED REGIME. The KLL-thresholded
-#: gates are hash-exact while the sketch is in its exact regime (input
-#: rows ≤ k = 65535 — every driver-testdata SF); past it the sketch
-#: estimates (~0.01% rank error at this k, pinned in
-#: tests/test_sketches.py) and no ANSI-SQL oracle can replay the
-#: compaction path, so big-SF sweeps must record the weaker rows-only
-#: check INSTEAD of a false hash failure. Each entry maps to
-#: (duckdb_count_sql, max_rows, note).
+#: Oracles valid only within a declared regime: id -> (duckdb_count_sql,
+#: max_value, note). Past the bound a sketch estimates and no SQL can
+#: replay its compaction path, so a big-SF sweep records the rows-only
+#: check instead of a false hash failure.
 ORACLE_REGIMES: dict[str, tuple[str, int, str]] = {
-    "QUALITY-KLLGATE": (
-        "SELECT COUNT(*) FROM documents",
-        65535,
-        "KLL exact regime (rows <= k=65535)",
-    ),
-    "CLS-GATE": (
-        "SELECT COUNT(*) FROM documents",
-        65535,
-        "KLL exact regime (rows <= k=65535)",
-    ),
-    # SKETCH-KLL quantiles are order-statistic-exact while every
-    # per-event-type group fits the sketch's retention (k=65535 —
-    # sf0.1 has 30k rows/type); past it the compaction path estimates
-    # (~0.01% rank error, pinned in tests/test_sketches.py) and no SQL
-    # oracle can replay it. The sf1 scale dir has 300k rows/type.
+    # KLL-thresholded gates: exact while input rows <= k = 65535 (every
+    # driver-testdata SF); past it ~0.01% rank error, pinned in
+    # tests/test_sketches.py
+    "QUALITY-KLLGATE": (_DOCS, 65535, "KLL exact regime (rows <= k=65535)"),
+    "CLS-GATE": (_DOCS, 65535, "KLL exact regime (rows <= k=65535)"),
+    # KLL quantiles per event type: sf0.1 has 30k rows/type, the sf1
+    # scale dir 300k
     "SKETCH-KLL": (
         "SELECT MAX(n) FROM (SELECT COUNT(*) AS n FROM events "
         "GROUP BY event_type)",
         65535,
         "KLL exact regime (rows/group <= k=65535)",
     ),
-    # Theta sketches retain every hash while the per-key distinct count
-    # stays <= nominal entries k=4096 (lg_k=12, the Spark default); past
-    # it the sketch samples (theta < 1) and intersections estimate
-    # (~1.6% RSE, pinned in tests/test_sketches.py) — no SQL oracle can
-    # replay the sampled hash set. sf0.1 has 1.5k distinct users/type
-    # (exact); the sf1 scale dir has 15k (estimating).
+    # Theta sketches keep every hash while distinct users per type stay
+    # <= k = 4096 (lg_k=12); sf0.1 has 1.5k (exact), the sf1 dir 15k
+    # (~1.6% RSE, pinned in tests/test_sketches.py)
     "SKETCH-THETA": (
-        "SELECT MAX(n) FROM (SELECT COUNT(DISTINCT user_id) AS n "
-        "FROM events GROUP BY event_type)",
-        4096,
-        "Theta exact regime (distinct users/type <= k=4096)",
+        _USERS_PER_TYPE, 4096, "Theta exact regime (distinct users/type <= k=4096)"
     ),
-    # E-AUDIT unions the SKETCH-THETA rows (part='theta'), so it shares
-    # the Theta retention bound; every other part (gate/profile/hll/freq)
-    # keeps its own full-oracle singleton at any SF.
+    # E-AUDIT carries the SKETCH-THETA rows (part='theta')
     "E-AUDIT": (
-        "SELECT MAX(n) FROM (SELECT COUNT(DISTINCT user_id) AS n "
-        "FROM events GROUP BY event_type)",
+        _USERS_PER_TYPE,
         4096,
         "Theta exact regime (distinct users/type <= k=4096; theta part)",
     ),
 }
 
-#: Oracles whose SQL is exact at ANY scale but computationally
-#: infeasible for single-node DuckDB past a DECLARED input bound — the
-#: all-pairs-in-block Jaccard twins cost Σ_block (docs/block)² pair
-#: evaluations (each a list_intersect over ~100-token lists): trivial at
-#: 5k docs (sf0.1), ~8×10⁹ list intersections at the 500k-doc sf1 scale
-#: dir (observed: OOM-killed twice). The ENGINE side stays exact and
-#: scale-safe there (prefix-filtered candidates, see
-#: operators/dedup.py blocked_jaccard_pairs); past the bound the sweep
-#: records the oracle-infeasible outcome up front instead of burning
-#: ~2× the kill timeout rediscovering it. Same shape as ORACLE_REGIMES:
-#: name -> (duckdb_count_sql, max_value, note).
+#: Oracles exact at any scale but past one DuckDB node's compute or memory
+#: beyond a declared input bound (same shape as ORACLE_REGIMES). Each was
+#: OOM-killed or hit DuckDB's memory limit at the 500k-doc sf1 scale dir
+#: (DuckDB's list/regex allocations ignore ``memory_limit``); the engine
+#: side completed, and the sweep records the oracle as infeasible up front.
 ORACLE_COMPUTE_BOUNDS: dict[str, tuple[str, int, str]] = {
-    name: (
-        "SELECT COUNT(*) FROM documents",
-        60000,
-        "all-pairs-in-block oracle infeasible on one node past ~60k docs",
-    )
-    for name in (
-        "DEDUP-NGRAM",
-        "DEDUP-COMPONENTS",
-        "DEDUP-PRUNE",
-        "DEDUP-PRUNE-BEST",
-        "PIPE-DOCS",
-        "PIPE-CORPUS",
-    )
-}
-# The wide text-profile oracles explode the corpus into n-gram/token
-# CTEs that DuckDB joins 8-9 ways; its transient list/regex allocations
-# are not buffer-managed, so past ~60k docs the kernel OOM-killer takes
-# the process regardless of memory_limit (measured at the 500k-doc sf1
-# dir: TEXT-PROFILE/TEXT-REPETITION killed twice each, TEXT-ROWS out of
-# memory at a 24 GB cap after ~2 h). Every constituent op keeps its own
-# full-oracle singleton at that scale (TEXT-TOPTERMS exists for exactly
-# this), so the honest big-SF record is oracle-infeasible, declared.
-ORACLE_COMPUTE_BOUNDS.update({
-    name: (
-        "SELECT COUNT(*) FROM documents",
-        60000,
-        "multi-CTE corpus-exploding oracle exceeds host memory past ~60k docs",
-    )
-    for name in ("TEXT-PROFILE", "TEXT-REPETITION", "TEXT-ROWS")
-})
-# DEDUP-SUBSTRING's oracle replays token-level span removal with
-# corpus-exploding gram CTEs — kernel-OOM-killed twice at the 500k-doc
-# dir (unmanaged list/regex allocations ignore memory_limit); the
-# ENGINE side is two linear shuffles and completes. Full-oracle at
-# sf0.01/sf0.1 stands; past the bound the sweep records the Spark row
-# count with the declared-infeasible oracle.
-ORACLE_COMPUTE_BOUNDS["DEDUP-SUBSTRING"] = (
-    "SELECT COUNT(*) FROM documents",
-    60000,
-    "token-span-replay oracle exceeds host memory past ~60k docs",
-)
-# Discovered during the r8 sf1 sweep (recorded ad hoc there; declared
-# up front since r9 per the r8 verdict): BPE-ENCODE's oracle replays
-# iterative pair-merge over a per-doc token CTE and TEXT-TFIDF's
-# replays the (doc, term) tf/df/rank chain — both exceeded DuckDB's
-# 64 GB memory_limit at the 500k-doc dir while the ENGINE sides
-# completed (BPE 500k rows; tfidf shuffles (doc, term) pairs only).
-# Full-oracle stands at sf0.01/sf0.1 (≤5k docs).
-ORACLE_COMPUTE_BOUNDS.update({
+    # all-pairs-in-block Jaccard twins: sum over blocks of (docs/block)^2
+    # list intersections, ~8e9 at 500k docs
+    **dict.fromkeys(
+        ("DEDUP-NGRAM", "DEDUP-COMPONENTS", "DEDUP-PRUNE", "DEDUP-PRUNE-BEST",
+         "PIPE-DOCS", "PIPE-CORPUS", "PIPE-FAMILY"),
+        (_DOCS, 60000, "all-pairs-in-block oracle infeasible on one node past ~60k docs"),
+    ),
+    # wide text-profile oracles join 8-9 corpus-exploding CTEs; each of
+    # their constituent ops keeps its own singleton oracle at that scale
+    **dict.fromkeys(
+        ("TEXT-PROFILE", "TEXT-REPETITION", "TEXT-ROWS"),
+        (
+            _DOCS,
+            60000,
+            "multi-CTE corpus-exploding oracle exceeds host memory past ~60k docs",
+        ),
+    ),
+    # DEDUP-EXACT-SUITE carries the DEDUP-SUBSTRING rows (part='substr')
+    **dict.fromkeys(
+        ("DEDUP-SUBSTRING", "DEDUP-EXACT-SUITE"),
+        (_DOCS, 60000, "token-span-replay oracle exceeds host memory past ~60k docs"),
+    ),
     "BPE-ENCODE": (
-        "SELECT COUNT(*) FROM documents",
+        _DOCS,
         60000,
         "iterative pair-merge replay exceeds 64 GB DuckDB limit past "
         "~60k docs (measured OOM at 500k, r8 sweep)",
     ),
     "TEXT-TFIDF": (
-        "SELECT COUNT(*) FROM documents",
+        _DOCS,
         60000,
         "(doc, term) tf/df/rank replay exceeds 64 GB DuckDB limit past "
         "~60k docs (measured OOM at 500k, r8 sweep)",
     ),
-    # WP-ENCODE sat just under the wall in the r8 sweep (213.6 s ok at
-    # 500k docs) and crossed it in the r9 sweep on the same code — the
-    # greedy longest-match-first replay's peak is within host noise of
-    # the 64 GB limit, so the honest declaration is the same bound as
-    # its BPE sibling rather than a coin-flip record each round.
+    # its peak sits within host noise of the limit: ok once, OOM once
     "WP-ENCODE": (
-        "SELECT COUNT(*) FROM documents",
+        _DOCS,
         60000,
         "greedy longest-match replay peaks within noise of the 64 GB "
         "DuckDB limit past ~60k docs (ok r8, OOM r9 at 500k)",
     ),
-})
+}
 
-#: ENGINE-side declared bounds: entries whose SPARK plan is exact and
-#: cluster-scalable but exceeds ONE NODE's shuffle disk past the bound.
-#: The t=0.2 exact-Jaccard family's candidate stage is Σ prefix-df²
-#: pairs: at threshold 0.2 the PPJoin prefix keeps ~80% of every doc's
-#: tokens, so mid-frequency tokens in 33k-doc blocks yield ~10⁹
-#: candidates whose verify expansion is a >100 GB shuffle — measured:
-#: DEDUP-NGRAM at the 500k-doc sf1 dir died ENOSPC after filling a 56 GB
-#: blockmgr on this host's ~50 GB free disk. On a cluster that shuffle
-#: is unremarkable (and distributes); on one node it cannot complete.
-#: The t≥0.5 regime (PIPE-DOCS) prunes properly and is NOT bounded; the
-#: designed low-threshold path at scale is MinHash (DEDUP-MINHASH),
-#: which sweeps green at sf1. Recording the declared bound is the honest
-#: outcome for the single-node sweep — the judge can re-derive it from
-#: the DEDUP-NGRAM ENOSPC record and PERF-NOTES 29.
-ENGINE_DISK_BOUNDS: dict[str, tuple[str, int, str]] = {
-    name: (
-        "SELECT COUNT(*) FROM documents",
+#: Engine-side declared bounds: plans that are exact and cluster-scalable
+#: but exceed one node's shuffle disk past the bound. At Jaccard t=0.2 the
+#: PPJoin prefix keeps ~80% of each doc's tokens, so the candidate stage
+#: is ~1e9 pairs and a >100 GB verify shuffle (DEDUP-NGRAM filled a 56 GB
+#: blockmgr at the 500k-doc sf1 dir; PERF-NOTES 29). PIPE-DOCS runs at
+#: t=0.6 and still measured 10.3e9 prefix candidates there: ~12k distinct
+#: tokens over 500k docs make every token high-df, so no prefix can
+#: discriminate. MinHash (DEDUP-MINHASH) is the low-threshold path at scale.
+ENGINE_DISK_BOUNDS: dict[str, tuple[str, int, str]] = dict.fromkeys(
+    ("DEDUP-NGRAM", "DEDUP-COMPONENTS", "DEDUP-PRUNE", "DEDUP-PRUNE-BEST",
+     "PIPE-CORPUS", "PIPE-DOCS", "PIPE-FAMILY"),
+    (
+        _DOCS,
         60000,
         "exact-Jaccard verify shuffle exceeds one-node disk past ~60k "
         "docs of this corpus shape (cluster-scalable; MinHash is the "
         "designed low-threshold path)",
-    )
-    for name in (
-        "DEDUP-NGRAM",
-        "DEDUP-COMPONENTS",
-        "DEDUP-PRUNE",
-        "DEDUP-PRUNE-BEST",
-        "PIPE-CORPUS",
-        # PIPE-DOCS runs at t=0.6 and still measured 10.3e9 prefix
-        # candidates at sf1: the synthetic corpus has ~12k distinct
-        # tokens over 500k docs averaging 24 tokens, so every token is
-        # high-df and NO prefix (vocab << corpus) can discriminate —
-        # max prefix-df 8,800 in 33k-doc blocks. Prefix filtering needs
-        # vocab >> per-token df to bite; on natural text it does (rare
-        # words dominate), on this corpus shape nothing exact can.
-        "PIPE-DOCS",
-    )
-}
+    ),
+)

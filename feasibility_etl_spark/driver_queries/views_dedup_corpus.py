@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from ._shared import DataFrame, F, SparkSession, _sum_cents, _sum_cents_sql, blocked_jaccard_pairs, clean_text, connected_components, decontaminate, exact_dup_groups, load, near_dup_pairs, pack_shards, prune_components, register_views, session_agg, simhash_candidates, sliding_agg, split_corpus, token_count, tumbling_agg
+from ._shared import DataFrame, F, SparkSession, _sum_cents, _sum_cents_sql, blocked_jaccard_pairs, clean_text, connected_components, decontaminate, exact_dup_groups, incremental_near_dups, load, minhash_index, near_dup_pairs, pack_shards, prune_components, register_views, session_agg, simhash_candidates, sliding_agg, split_corpus, token_count, tumbling_agg
 from ..operators.dedup import shingles
 from ..operators.sketches import bloom_decontaminate
 
@@ -307,12 +307,12 @@ FROM c GROUP BY doc_id
 
 
 def q_dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
-    """DEDUP-EXACT: the exact-dedup family union-tagged — part='doc' covers
-    document-level hash-groupBy dedup (keeper + group size per normalized
-    fingerprint); part='line' covers LINE-DEDUP (CCNet/RefinedWeb
-    line-level boilerplate removal with rebuilt doc text, full oracle —
-    see q_line_dedup for the line-structuring construction); part='substr'
-    covers DEDUP-SUBSTRING (Lee-et-al exact substring dedup: duplicated
+    """DEDUP-EXACT-SUITE (the driver's DEDUP-EXACT): the exact-dedup
+    family union-tagged — part='doc' covers document-level hash-groupBy
+    dedup (keeper + group size per normalized fingerprint); part='line'
+    covers LINE-DEDUP (CCNet/RefinedWeb line-level boilerplate removal
+    with rebuilt doc text, full oracle — see q_line_dedup for the
+    line-structuring construction); part='substr' covers DEDUP-SUBSTRING (Lee-et-al exact substring dedup: duplicated
     k-token spans removed from non-canonical occurrences, doc rebuilt —
     n_lines carries n_tok, n_kept carries n_tok - n_removed)."""
     doc = exact_dup_groups(load(spark, sf, "documents")).select(
@@ -537,6 +537,67 @@ def q_dedup_minhash_comp(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.dedup import minhash_components
 
     return minhash_components(load(spark, sf, "documents")).orderBy("doc_id")
+
+
+def q_dedup_fuzzy(spark: SparkSession, sf: str) -> DataFrame:
+    """DEDUP-FUZZY granular: typo-level near-miss pairs (1 ≤ levenshtein
+    ≤ 1) over part names with a deterministic last-char-drop typo
+    injected on every 7th part — the part vocabulary is 64 verbatim-
+    duplicated names, so exact copies (DEDUP-EXACT's job) are excluded
+    and the synthetic typos are what a linkage pass actually hunts.
+    Blocking (first token + adjacent length band) is part of the spec
+    and the oracle mirrors it exactly."""
+    from ..operators.dedup import fuzzy_pairs
+
+    names = load(spark, sf, "part").select(
+        F.col("p_partkey").cast("long").alias("doc_id"),
+        F.when(
+            F.col("p_partkey") % 7 == 0,
+            F.expr("substring(p_name, 1, length(p_name) - 1)"),
+        ).otherwise(F.col("p_name")).alias("p_name"),
+    )
+    return fuzzy_pairs(names, "p_name", max_dist=1)
+
+
+ORACLE_DEDUP_FUZZY = """
+WITH names AS (
+  SELECT CAST(p_partkey AS BIGINT) AS id,
+         CASE WHEN p_partkey % 7 = 0
+              THEN substr(p_name, 1, length(p_name) - 1)
+              ELSE p_name END AS s
+  FROM part
+),
+base AS (
+  SELECT id, s,
+         list_filter(string_split_regex(trim(s), '\\s+'), x -> x <> '')[1] AS w,
+         CAST(floor(length(s) / 2.0) AS BIGINT) AS band
+  FROM names
+)
+SELECT a.id AS id_a, b.id AS id_b,
+       CAST(levenshtein(a.s, b.s) AS INTEGER) AS dist
+FROM base a JOIN base b
+  ON a.w = b.w AND b.band BETWEEN a.band - 1 AND a.band + 1
+ AND a.id < b.id AND abs(length(a.s) - length(b.s)) <= 1
+WHERE levenshtein(a.s, b.s) BETWEEN 1 AND 1
+"""
+
+
+def q_dedup_incr(spark: SparkSession, sf: str) -> DataFrame:
+    """DEDUP-INCR granular: odd-id increment served against the even-id
+    minhash index (rows-only: xxhash signatures)."""
+    docs = load(spark, sf, "documents")
+    # small_increment=False: this entry's "increment" is HALF THE CORPUS
+    # (a backfill shape, not a micro-batch), so the serve path's static
+    # broadcast hints are wrong here — at the sf1 dir the exploded
+    # candidate set alone is ~25M rows and the hint OOMs the driver
+    # (caught by BENCH_SF1_r09; PERF-NOTES 44). Batch mode keeps AQE, so
+    # small-SF runs still broadcast at runtime when it actually fits.
+    return incremental_near_dups(
+        docs.where("doc_id % 2 = 1"),
+        minhash_index(docs.where("doc_id % 2 = 0")),
+        threshold=0.5,
+        small_increment=False,
+    ).orderBy("id_a", "id_b")
 
 
 # ------------------------------------------------------- similarity search
@@ -869,7 +930,7 @@ WHERE d.doc_id NOT IN (SELECT doc_id FROM contaminated)
 
 
 def q_corpus_decontam_combined(spark: SparkSession, sf: str) -> DataFrame:
-    """CORPUS-DECONTAM (driver combined entry): the exact broadcast
+    """CORPUS-DECONTAM-SUITE (the driver's CORPUS-DECONTAM): the exact broadcast
     semi-join scrub (``part='exact'``) UNION the Bloom-prefiltered scale
     path (``part='bloom'``, sketches.bloom_decontaminate) — the contract
     is that both parts are row-identical, so ONE oracle SELECT serves

@@ -1,3 +1,3 @@
-from .catalog import TABLES, load, register_views, schema_for
+from .catalog import TABLES, load, register_views
 
-__all__ = ["TABLES", "load", "register_views", "schema_for"]
+__all__ = ["TABLES", "load", "register_views"]

@@ -118,10 +118,6 @@ TABLES: dict[str, T.StructType] = {
 }
 
 
-def schema_for(name: str) -> T.StructType:
-    return TABLES[name]
-
-
 def _footer(path: str) -> pa.Schema:
     """The arrow schema of the first data file at ``path``: the file itself,
     or, for a Spark-written directory, the first file outside the entries

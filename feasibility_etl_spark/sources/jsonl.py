@@ -8,7 +8,7 @@ Scale posture:
 
 - **Explicit schema always** (the signature requires it): schema
   inference is a full extra pass over 100 TB before the first real
-  read. `sources.catalog.schema_for` gives the testbed tables' schemas.
+  read. `sources.catalog.TABLES` holds the testbed tables' schemas.
 - **Malformed lines are data, not crashes**: the default PERMISSIVE
   mode lands bad lines in a corrupt-record column (the file-source twin
   of the E-ISOLATE validate-then-write gate) so one mangled crawl

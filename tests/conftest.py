@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import subprocess
 import sys
 import time
 import uuid
@@ -7,7 +8,10 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+# perfbench's modules (``from workloads import MIX_IDS``), read-only
+sys.path.append(str(ROOT / "perfbench"))
 
 from feasibility_etl_spark.session import build_session  # noqa: E402
 
@@ -19,7 +23,20 @@ SF001 = "/root/testdata/sf0.01"
 def spark():
     s = build_session("tests", master="local[4]", shuffle_partitions=4)
     yield s
+    # s.stop() leaves the JVM alive until it reads EOF on its stdin, which
+    # comes only as pytest exits: the JVM then outlives the run by seconds,
+    # holding its inherited stdout. Close that pipe here and wait for it.
+    gateway = s.sparkContext._gateway
     s.stop()
+    proc = getattr(gateway, "proc", None)
+    gateway.shutdown()
+    if proc is not None:
+        proc.stdin.close()
+        try:
+            proc.wait(timeout=30)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait(timeout=10)
 
 
 def jobs_run_by(spark, fn):

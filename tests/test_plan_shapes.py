@@ -21,6 +21,7 @@ import pytest
 
 from feasibility_etl_spark.driver_queries import ALL_QUERIES
 from feasibility_etl_spark.flagship import flagship
+from workloads import MIX_IDS  # the perfbench query-mix ids
 
 SF = "/root/testdata/sf0.001"
 
@@ -307,13 +308,6 @@ def test_etl_incremental_batch_job_budget(spark, tmp_path, capsys):
     capsys.readouterr()
     (row,) = tracker.metrics_df().collect()
     assert row["n_jobs"] <= ETL_BATCH_MAX_JOBS, row
-
-
-#: the perfbench query-mix ids (``perfbench/workloads.py:MIX_IDS``)
-MIX_IDS = ["FLAGSHIP", "VIEW-CTE", "VIEW-IDIOMATIC", "J-DIM-REPORTER", "J-ATTACH",
-           "A-WORKLOG", "A-PIVOT", "WIN-SESSION", "J-ASOF", "TEXT-BM25",
-           "SEARCH-RRF", "SIM-TOPK", "DEDUP-EXACT", "TEXT-LANGID", "SKETCH-HLL",
-           "CORPUS-PACK", "BPE-ENCODE", "CLS-SCORE"]
 
 
 @pytest.mark.parametrize("qid", MIX_IDS)

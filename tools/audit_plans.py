@@ -99,6 +99,9 @@ CARTESIAN_OK = {
     # Bloom broadcast attaches are the only nested-loop joins, never
     # corpus×corpus.
     "PIPE-CORPUS-COMPONENTS",
+    # PIPE-FAMILY unions PIPE-DOCS and PIPE-CORPUS; CORPUS-DECONTAM-SUITE
+    # carries CORPUS-DECONTAM-BLOOM's Bloom attach as its part='bloom'
+    "PIPE-FAMILY", "CORPUS-DECONTAM-SUITE",
     # CLS-SCORE: three 1-row scalar attaches (feature totals onto the
     # weight table, doc-count prior + default weight onto the scored
     # frame); the weight join proper is a broadcast hash equi-join on
@@ -156,7 +159,11 @@ PYTHON_OK = {"MM-IMAGE", "MM-AUDIO", "MM-RESIZE", "MM-VISUAL",
              # docs (the sliver; untouched docs stay JVM) via one
              # vectorized interval-coverage pass per Arrow batch
              # (commit d1c96e2, 4.33 → 2.51 s).
-             "DEDUP-SUBSTRING"}
+             "DEDUP-SUBSTRING",
+             # unions carrying a sanctioned stage: PIPE-FAMILY's
+             # part='corpus' is PIPE-CORPUS, DEDUP-EXACT-SUITE's
+             # part='substr' is DEDUP-SUBSTRING
+             "PIPE-FAMILY", "DEDUP-EXACT-SUITE"}
 
 
 def audit(name: str, plan: str) -> tuple[list[str], list[str]]:

@@ -9,9 +9,9 @@ authority.
 Usage: python tools/check_correctness.py [sf_dir] [QUERY ...]
        python tools/check_correctness.py --all [sf_dir] [QUERY ...]
 
-``--all`` checks the GRANULAR registry (every singleton op, including the
-ones the driver sees only through combined entries) instead of the driver
-contract.
+``--all`` checks every registry id (``ALL_QUERIES``/``ALL_ORACLES``)
+instead of the driver contract: the driver's 50 ops plus the granular
+singletons, the perfbench and bench ids among them.
 """
 
 from __future__ import annotations
@@ -44,6 +44,22 @@ def frame_fingerprint(cols: list[str], rows: list[tuple]) -> tuple[int, list[str
     return len(rows), sorted(cols), h
 
 
+TABLES = "region nation customer supplier part orders lineitem events documents embeddings"
+
+
+def create_views(con, sf_dir: str) -> None:
+    """One DuckDB view per catalog table of ``sf_dir``, named as the oracles
+    reference them."""
+    for t in TABLES.split():
+        # driver testdata is one file per table; Spark-written scale
+        # dirs (tools/make_scale_dir.py) are DIRECTORIES of part files
+        path = f"{sf_dir}/{t}.parquet"
+        pattern = f"{path}/*.parquet" if os.path.isdir(path) else path
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pattern}')"
+        )
+
+
 def main() -> int:
     argv = list(sys.argv[1:])
     use_all = "--all" in argv
@@ -72,16 +88,7 @@ def main() -> int:
     n_threads = int(os.environ.get("SPARK_GRAFT_DUCKDB_THREADS", "8"))
     con.execute(f"SET threads={n_threads}")
     con.execute("SET preserve_insertion_order=false")
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        # driver testdata is one file per table; Spark-written scale
-        # dirs (tools/make_scale_dir.py) are DIRECTORIES of part files
-        path = f"{sf_dir}/{t}.parquet"
-        pattern = f"{path}/*.parquet" if os.path.isdir(path) else path
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pattern}')"
-        )
+    create_views(con, sf_dir)
 
     if use_all:
         from feasibility_etl_spark.driver_queries import ALL_ORACLES, ALL_QUERIES
