@@ -77,7 +77,6 @@ from ..operators.text import (
     pii_counts,
     redact_pii,
     winnow_fingerprints_arrow,
-    winnow_fingerprints_rows,
     lang_id,
     mean_word_length,
     punct_ratio,

@@ -1015,21 +1015,14 @@ def q_text_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     engines order identical values — full-precision order could differ
     across engines exactly where two scores round together (see the ln()
     note in q_text_profile). Executes as TakeOrderedAndProject
-    (plan-asserted for the operator in tests/test_search.py); rank comes
-    from the sorted k-row array (bm25_topk's no-window formulation)."""
-    from ..operators.search import bm25_scores
+    (plan-asserted for ``search._ranked_take`` in tests/test_search.py);
+    rank comes from the sorted k-row array, no window."""
+    from ..operators.search import _ranked_take, bm25_scores
 
     scored = bm25_scores(load(spark, sf, "documents"), list(BM25_TERMS)).select(
         "doc_id", F.round("bm25", 9).alias("bm25")
     )
-    top = scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(10)
-    item = F.struct((-F.col("bm25")).alias("_negs"), F.col("doc_id").alias("_id"))
-    packed = top.agg(F.sort_array(F.collect_list(item)).alias("_top"))
-    return packed.select(F.posexplode("_top").alias("_pos", "_row")).select(
-        F.col("_row._id").alias("doc_id"),
-        (-F.col("_row._negs")).alias("bm25"),
-        (F.col("_pos") + 1).cast("long").alias("rank"),
-    )
+    return _ranked_take(scored, "bm25", "doc_id", 10)
 
 
 ORACLE_TEXT_BM25_TOPK = f"""

@@ -598,11 +598,9 @@ def q_e_gate(spark: SparkSession, sf: str) -> DataFrame:
     LAZY single-scan formulation (round 7): the report is one conditional
     aggregation — the previous two eager ``.count()`` actions at
     query-construction time scanned orders twice and ran inside bench's
-    timed window on every plan audit. Same IEEE double arithmetic as
-    ``quality.gates.loss_report`` (abs((after−before)/abs(before))·100),
-    so values hash-match the unchanged oracle. The driver-side
-    ``assert_loss_below`` abort API keeps its own eager semantics —
-    aborting IS an action."""
+    timed window on every plan audit. The loss is the reference's
+    abs((after−before)/abs(before))·100 (helpers.js:234-240) in IEEE
+    doubles, so values hash-match the oracle."""
     orders = load(spark, sf, "orders")
     loss = F.abs(
         (F.col("n_after") - F.col("n_before"))

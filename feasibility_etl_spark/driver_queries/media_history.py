@@ -627,12 +627,10 @@ def q_unigram_encode(spark: SparkSession, sf: str) -> DataFrame:
     vocabulary (dyadic logps), checked FULL-ORACLE: DuckDB replays the
     Viterbi DP with a windowed-frontier recursive CTE (see
     ORACLE_UNIGRAM_ENCODE — the frontier rides in the row, so no keyed
-    recursion is needed). Training itself stays pinned by
-    tests/test_unigram.py (reference parity, EM normalization,
-    provenance of the frozen vocab). NOTE (r12 session-7): the text-grain
+    recursion is needed). NOTE (r12 session-7): the text-grain
     serving rewrite applied to BPE-ENCODE/WP-ENCODE was A/B'd here too
     and REJECTED on measurement — ug_old 0.286 vs ug_new 0.299 s median
-    over 10 interleaved sf0.1 reps (tools/ab_encode_text_r12.py); the
+    over 10 interleaved sf0.1 reps; the
     Viterbi segmentations are piece-dense enough that the Python-side
     join loses what the Arrow boundary saves."""
     from ..operators.unigram import DEMO_UG_PIECES, unigram_encode
@@ -1240,7 +1238,7 @@ def q_e_robust(spark: SparkSession, sf: str) -> DataFrame:
     Full oracle: Spark's exact percentile and DuckDB's quantile_cont
     share linear interpolation (the E-QUANTILE precedent).
 
-    Plan note: naively CHAINING gates.winsorize -> gates.mad_outliers
+    Plan note: naively CHAINING a winsorize pass and a MAD-outlier pass
     duplicates each one's aggregate subtree (Spark does not reuse
     exchanges across differing parent aggregates — the LM/DSIR lesson),
     costing 8 exchanges / extra scans; this entry computes the three

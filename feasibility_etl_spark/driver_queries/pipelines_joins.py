@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from ._shared import DataFrame, F, SparkSession, Window, _cents, asof_join, audio_features, blocked_jaccard_pairs, exact_dedup, image_features, interval_overlap_join, load, media_from_documents, quality_score, quantize_int8, range_join, resize_images, sample_frames, session_agg, token_count, winnow_fingerprints_arrow, winnow_fingerprints_rows
+from ._shared import DataFrame, F, SparkSession, Window, _cents, asof_join, audio_features, blocked_jaccard_pairs, exact_dedup, image_features, interval_overlap_join, load, media_from_documents, quality_score, quantize_int8, range_join, resize_images, sample_frames, session_agg, token_count, winnow_fingerprints_arrow
 from .similarity_text import _QUALITY_SQL_FRAGMENTS
 
 
@@ -494,8 +494,8 @@ def q_text_winnow(spark: SparkSession, sf: str) -> DataFrame:
     fingerprint — the partial-overlap detector md5 can't be. Fixed
     base/modulus arithmetic reproduced exactly by the DuckDB oracle.
     Served by the Arrow/numpy path (rolling-hash + sliding-min per doc
-    batch, zero data shuffles — 57x-family speedup at sf1); the
-    relational twin winnow_fingerprints_rows stays parity-pinned."""
+    batch, zero data shuffles — 57x-family speedup at sf1), pinned to
+    a pure-Python model in tests."""
     docs = load(spark, sf, "documents")
     return winnow_fingerprints_arrow(docs)
 
@@ -756,7 +756,7 @@ def pipe_corpus_stage_frames(spark: SparkSession, sf: str, near_dup: str = "pair
     # whose logical subtree is the bulk of the 13k-line composed plan.
     # cut() here (r12 session 3) truncates that subtree from every
     # downstream analyzer/optimizer walk: interleaved A/B (3 reps, both
-    # orders, tools/ab_pipe_cut2_r12.py) measured construction+action
+    # orders) measured construction+action
     # 16.5–17.7 s → 10.7–11.7 s at sf0.1 with the composed noop action
     # dropping 9.7–10.0 → 1.5–1.8 s — the d4/d5 work executes exactly
     # once either way (d5 was persisted before; checkpoint blocks serve

@@ -1,15 +1,13 @@
 from .scalar import (
-    basic_auth_header,
     delta_pair,
     hrs_to_sec,
     jira_ts,
     pct_change_abs,
     pct_diff,
 )
-from .json_fns import ISSUE_LINKS_TYPE, WORKLOG_TYPE, links_from_json, worklog_from_json
+from .json_fns import ISSUE_LINKS_TYPE, WORKLOG_TYPE
 
 __all__ = [
-    "basic_auth_header",
     "delta_pair",
     "hrs_to_sec",
     "jira_ts",
@@ -17,6 +15,4 @@ __all__ = [
     "pct_diff",
     "ISSUE_LINKS_TYPE",
     "WORKLOG_TYPE",
-    "links_from_json",
-    "worklog_from_json",
 ]

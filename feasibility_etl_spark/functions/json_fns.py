@@ -1,4 +1,4 @@
-"""Typed nested-JSON schemas + parse/serialize helpers (F-FROMJSON/F-TOJSON).
+"""Typed nested-JSON schemas for F-FROMJSON/F-TOJSON.
 
 The reference keeps two nested shapes in flight and stringifies them only at
 the sink (/root/reference/etl.js:296-297). The engine keeps them as typed
@@ -11,8 +11,6 @@ testing.sql:43-44 (SURVEY.md §1.2).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: ``{worklog: [{author, timespent, unit, id}...], total}`` — null (not
@@ -56,13 +54,3 @@ ISSUE_LINKS_TYPE = T.MapType(
         ]
     ),
 )
-
-
-def worklog_from_json(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.from_json(c, WORKLOG_TYPE)
-
-
-def links_from_json(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.from_json(c, ISSUE_LINKS_TYPE)

@@ -77,18 +77,6 @@ def hrs_to_sec(col: Column | str) -> Column:
     return F.coalesce(_c(col).cast("double"), F.lit(0.0)) * F.lit(3600.0)
 
 
-def basic_auth_header(user: Column | str, password: Column | str) -> Column:
-    """``"Basic " + base64(user + ":" + password)`` (helpers.js:30-33, F-B64).
-
-    Edge-adapter concern (HTTP source auth), kept as a Column expr so batch
-    credential material never round-trips through Python.
-    """
-    return F.concat(
-        F.lit("Basic "),
-        F.base64(F.concat(_c(user), F.lit(":"), _c(password)).cast("binary")),
-    )
-
-
 #: JIRA ISO-8601 timestamp format with 4-digit offset, e.g.
 #: ``2015-06-12T17:16:51.263+0000`` (reference sample: testing.sql:43).
 JIRA_TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSZ"

@@ -17,8 +17,8 @@ behind the UI/REST API — present even with ``spark.ui.enabled=false``)
 and folds the group's stage metrics into one row: records/bytes
 in/out, shuffle read/write, executor time, wall time, Janino compiles.
 ``metrics_df()`` returns the collected rows as a DataFrame, so pipeline
-health checks are ordinary queries (``loss_report``-style gates over
-metrics instead of logs).
+health checks are ordinary queries (loss-percentage gates over metrics
+instead of logs).
 
 Driver-side by design: metrics rows are one-per-tracked-query (bounded
 by the program, not the data), and the status store read is a handful

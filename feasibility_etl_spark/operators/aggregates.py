@@ -44,23 +44,6 @@ def worklog_rollup(entries: Column | str, timespent_field: str = "timespent") ->
     )
 
 
-def worklog_rollup_relational(
-    detail: DataFrame,
-    group_key: str,
-    timespent_col: str,
-) -> DataFrame:
-    """Relational-route A-WORKLOG: detail table → per-key totals.
-
-    ``groupBy(key).sum`` — partial (map-side) aggregation then a shuffle on
-    the key. Groups with no rows simply don't appear, which reproduces the
-    null-on-empty rule after the parent LEFT-joins this result back.
-    """
-    return detail.groupBy(group_key).agg(
-        F.sum(F.col(timespent_col)).alias("total"),
-        F.count(F.lit(1)).alias("n_entries"),
-    )
-
-
 def linked_total(links: Column | str, total_path: str = "worklog.total") -> Column:
     """A-LINKED: sum of ``link.worklog.total`` over a map's values, null-skipped.
 

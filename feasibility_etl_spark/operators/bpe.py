@@ -1,20 +1,9 @@
-"""Byte-pair-encoding tokenizer: distributed training statistics + an
-Arrow-batched encoder — the real-subword upgrade over text.py's BPE-ish
-regex token ESTIMATE (``bpe_ish_token_count``), for pipelines that need the
-actual token stream (packing to context windows, per-token billing, vocab
+"""Byte-pair-encoding tokenizer: an Arrow-batched encoder over a frozen
+merge list — the real-subword upgrade over text.py's BPE-ish regex token
+ESTIMATE (``bpe_ish_token_count``), for pipelines that need the actual
+token stream (packing to context windows, per-token billing, vocab
 coverage audits).
 
-Split of labor, matching how production BPE trainers work (Sennrich et al.
-2016; HF tokenizers):
-
-- **Corpus-scale pass (distributed)**: the word-frequency table. One
-  explode + groupBy over the corpus — shuffle carries (word, count), never
-  documents. This is the sufficient statistic for BPE training.
-- **Merge loop (driver, bounded)**: classic greedy pair-merging over the
-  word-frequency table. The table is vocabulary-sized, not corpus-sized,
-  and is capped (``max_words`` most frequent, ``min_count`` floor) so the
-  loop's input is bounded regardless of corpus scale — the same
-  count-table-in-one-process shape every real tokenizer trainer uses.
 - **Encode (distributed)**: Arrow-batched ``mapInPandas``; the merge
   ranks broadcast once per executor; a per-batch word cache exploits the
   Zipf distribution (each distinct word is encoded once per batch).
@@ -26,7 +15,7 @@ token stream is unambiguous when space-joined (symbols cannot contain
 whitespace).
 
 Encode-equivalence note (exploited by the driver oracle): for a merge
-list produced by training, every pair's constituent symbols exist only
+list produced by BPE training, every pair's constituent symbols exist only
 via strictly earlier merges, so applying merges IN RANK ORDER, each
 exhaustively left-to-right, yields the same symbols as the classic
 best-rank-first loop implemented here. That rank-order fold is pure
@@ -37,75 +26,14 @@ a replace can never match across symbol boundaries).
 
 from __future__ import annotations
 
-from collections import Counter
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text import tokens
-
 END = "</w>"
 SEP = "\x1f"  # unit separator: frames symbols in the oracle's string form
-
-
-def word_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    min_count: int = 1,
-    max_words: int = 1_000_000,
-) -> DataFrame:
-    """Distributed word-frequency table: ``(word, n)``, capped to the
-    ``max_words`` most frequent (count-desc, word-asc tiebreak — a
-    deterministic TakeOrdered, no global sort) with ``n >= min_count``.
-    The only corpus-scale stage of BPE training."""
-    wc = (
-        df.select(F.explode(tokens(F.lower(F.trim(F.col(text_col))))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") >= min_count)
-    )
-    return wc.orderBy(F.col("n").desc(), F.col("word")).limit(max_words)
-
-
-def bpe_train(
-    df: DataFrame,
-    num_merges: int,
-    text_col: str = "text",
-    min_count: int = 1,
-    max_words: int = 1_000_000,
-) -> list[tuple[str, str]]:
-    """Train a BPE merge list on the corpus → ``[(left, right), ...]`` in
-    rank order. Ties break deterministically (highest count, then
-    lexicographically smallest pair), so training is reproducible across
-    runs and partitionings."""
-    vocab = {
-        tuple(r["word"]) + (END,): r["n"]
-        for r in word_counts(df, text_col, min_count, max_words).collect()
-    }
-    return merges_from_word_counts(vocab, num_merges)
-
-
-def merges_from_word_counts(
-    vocab: dict[tuple[str, ...], int], num_merges: int
-) -> list[tuple[str, str]]:
-    """The driver-side greedy merge loop over a symbolized word-count
-    table. Pair stats are recomputed per round — O(rounds × table), clear
-    and obviously correct; the table is bounded by ``max_words``."""
-    vocab = dict(vocab)
-    merges: list[tuple[str, str]] = []
-    for _ in range(num_merges):
-        pairs: Counter[tuple[str, str]] = Counter()
-        for syms, n in vocab.items():
-            for i in range(len(syms) - 1):
-                pairs[(syms[i], syms[i + 1])] += n
-        if not pairs:
-            break
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        vocab = {_merge_word(syms, best): n for syms, n in vocab.items()}
-    return merges
 
 
 def _merge_word(syms: tuple[str, ...], pair: tuple[str, str]) -> tuple[str, ...]:
@@ -138,67 +66,6 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> tuple[str, ...]
     return syms
 
 
-BPE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("bpe_tokens", T.ArrayType(T.StringType())),
-        T.StructField("n_bpe_tokens", T.LongType()),
-    ]
-)
-
-
-def bpe_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    parallelism: int | None = None,
-) -> DataFrame:
-    """Encode documents with a trained merge list →
-    ``(doc_id, bpe_tokens, n_bpe_tokens)``.
-
-    Arrow-batched ``mapInPandas`` (codec-tier Python, the sanctioned
-    boundary): the ranks dict ships once per executor via a Spark
-    broadcast, and a per-batch word→symbols cache collapses the Zipf head
-    so each distinct word is encoded once per batch. Unknown characters
-    pass through as single-character symbols — BPE degrades, never drops.
-    ``parallelism`` repartitions ahead of the Python stage (like
-    image_features) so CPU-bound encode spreads across executors
-    independent of file layout.
-    """
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        tokens(F.lower(F.trim(F.col(text_col)))).alias("_toks"),
-    )
-    if parallelism:
-        src = src.repartition(parallelism, "doc_id")
-    bc = df.sparkSession.sparkContext.broadcast(
-        {tuple(p): i for i, p in enumerate(merges)}
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        ranks = bc.value
-        cache: dict[str, tuple[str, ...]] = {}
-        for pdf in batches:
-            out = []
-            for did, toks in zip(pdf["doc_id"], pdf["_toks"]):
-                syms: list[str] = []
-                for w in toks if toks is not None else []:
-                    enc = cache.get(w)
-                    if enc is None:
-                        enc = encode_word(w, ranks)
-                        cache[w] = enc
-                    syms.extend(enc)
-                out.append((did, syms, len(syms)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "bpe_tokens", "n_bpe_tokens"]
-            )
-
-    return src.mapInPandas(run, BPE_SCHEMA)
-
-
 BPE_TEXT_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -222,16 +89,19 @@ def bpe_encode_text(
     id_col: str = "doc_id",
     parallelism: int | None = None,
 ) -> DataFrame:
-    """:func:`bpe_encode` at the text grain → ``(doc_id, bpe_text,
-    n_bpe_tokens)`` with ``bpe_text = array_join(bpe_tokens, ' ')`` —
-    row-identical to composing the two (symbols cannot contain whitespace,
-    so the space-joined string is a lossless encoding of the symbol array).
+    """Encode documents with a merge list → ``(doc_id, bpe_text,
+    n_bpe_tokens)``: ``bpe_text`` is the doc's words' :func:`encode_word`
+    symbols joined by single spaces (symbols cannot contain whitespace, so
+    the joined string is a lossless encoding of the symbol sequence).
+    Unknown characters pass through as single-character symbols — BPE
+    degrades, never drops. ``parallelism`` repartitions ahead of the
+    Python stage so CPU-bound encode spreads independent of file layout.
 
-    This is the shape every consumer in the repo actually wants, and it is
-    cheaper at the Arrow boundary in BOTH directions (guide §2.3/§4 —
-    narrower exchange types, pass only what the Python stage needs): the
-    doc ships as ONE lowered/trimmed string instead of an array-of-words
-    (one offset vector instead of per-token offsets), the whitespace split
+    The text grain is cheap at the Arrow boundary in BOTH directions
+    (guide §2.3/§4 — narrower exchange types, pass only what the Python
+    stage needs): the doc ships as ONE lowered/trimmed string instead of
+    an array-of-words (one offset vector instead of per-token offsets),
+    the merge ranks broadcast once per executor, the whitespace split
     happens in Python (same ASCII ``\\s`` class Spark's `split` uses), and
     one joined string per doc comes back instead of an array of symbol
     strings. Unicode-sensitive lower/trim stay in the JVM so the token
@@ -281,23 +151,11 @@ def bpe_encode_text(
     return src.mapInPandas(run, BPE_TEXT_SCHEMA)
 
 
-def bpe_token_count(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-doc true BPE token count — the exact sibling of
-    ``text.bpe_ish_token_count``'s estimate."""
-    return bpe_encode(df, merges, text_col, id_col).select(
-        "doc_id", "n_bpe_tokens"
-    )
-
-
-# Frozen demo merge table: ``bpe_train(documents @ sf0.001, num_merges=24)``
-# — frozen as a literal (rather than trained in-plan) so the driver's
-# DuckDB oracle can replay encoding as deterministic string rewriting;
-# training itself is pinned by reference-parity tests, not an oracle.
+# Frozen demo merge table: BPE training (highest pair count, then the
+# lexicographically smallest pair) on documents @ sf0.001, 24 merges —
+# frozen as a literal so the driver's DuckDB oracle can replay encoding as
+# deterministic string rewriting; tests/test_bpe.py re-derives it with a
+# reference trainer.
 DEMO_MERGES: list[tuple[str, str]] = [
     ("e", "r"), ("e", "</w>"), ("n", "</w>"), ("o", "r"), ("t", "</w>"),
     ("er", "</w>"), ("o", "w"), ("ow", "</w>"), ("l", "u"), ("i", "n"),

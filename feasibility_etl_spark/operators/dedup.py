@@ -338,55 +338,6 @@ def shingles(text: Column | str, n: int = 3) -> Column:
     return F.when(F.size(toks) < n, F.array(F.concat_ws(" ", toks))).otherwise(full)
 
 
-def tune_minhash_bands(
-    threshold: float,
-    num_hashes: int = 32,
-    fp_weight: float = 1.0,
-    fn_weight: float = 1.0,
-) -> tuple[int, int]:
-    """Pick ``(bands, rows_per_band)`` for a banded MinHash index so the
-    LSH S-curve ``P(pair bucketed | J=s) = 1 - (1 - s^rows)^bands`` best
-    separates pairs at the target Jaccard ``threshold`` (Leskovec/
-    Rajaraman/Ullman, MMDS 3rd ed. §3.4.3): minimizes the integrated
-    false-positive mass ``∫_0^t P(s) ds`` (below-threshold pairs that
-    still collide — every one multiplies the exact-verify join's input)
-    plus the false-negative mass ``∫_t^1 (1 - P(s)) ds`` (true pairs the
-    bands never co-bucket — unrecoverable recall loss at corpus scale),
-    weighted by ``fp_weight``/``fn_weight``. Only exact divisor pairs
-    (``bands * rows == num_hashes``) are considered — partial signature
-    use wastes hashes already computed.
-
-    Driver-side arithmetic over ≤ num_hashes candidates (no Spark job);
-    call it once when sizing an index, e.g.
-    ``bands, _ = tune_minhash_bands(0.5, 32)`` → ``(8, 4)`` — the
-    repo's own default geometry, which is why 32/8 is the default.
-    Skew the weights when the corpus shape demands it: a clique-heavy
-    corpus (see PERF-NOTES 43) pays per CANDIDATE, so ``fp_weight > 1``
-    buys fewer verify pairs at some recall cost.
-    """
-    if not 0.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-    best: tuple[float, int, int] | None = None
-    steps = 1000
-    for rows in range(1, num_hashes + 1):
-        if num_hashes % rows:
-            continue
-        bands = num_hashes // rows
-        fp = fn = 0.0
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = 1.0 - (1.0 - s**rows) ** bands
-            if s < threshold:
-                fp += p
-            else:
-                fn += 1.0 - p
-        err = (fp * fp_weight + fn * fn_weight) / steps
-        if best is None or err < best[0]:
-            best = (err, bands, rows)
-    assert best is not None
-    return best[1], best[2]
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -582,30 +533,14 @@ def minhash_candidates(
     carries bucket-sized groups, never the corpus cross-product.
 
     ``max_bucket_size``: the hot-bucket cap (see
-    :func:`capped_bucket_pairs` for semantics and the scale rationale;
-    :func:`minhash_hot_buckets` for the dropped-mass audit). Default None
+    :func:`capped_bucket_pairs` for semantics and the scale rationale).
+    Default None
     preserves the uncapped candidate set; clique-heavy corpora
     (boilerplate replicas) should either cap or switch to
     :func:`minhash_components`.
     """
     banded = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n)
     return capped_bucket_pairs(banded, id_col, max_bucket_size)
-
-
-def minhash_hot_buckets(
-    df: DataFrame,
-    max_bucket_size: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Dropped-mass audit for ``minhash_candidates(...,
-    max_bucket_size=...)``: the (band, band_hash) buckets the cap
-    excludes, each with ``bucket_size`` and the un-emitted pair count."""
-    banded = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n)
-    return hot_buckets(banded, max_bucket_size)
 
 
 def minhash_components(
@@ -1274,7 +1209,7 @@ def minhash_index(
     serve time (cheap, map-side) instead of storing the index exploded;
     column pruning means a serve scan reads ``sig`` only for the ids that
     actually reach the estimation join. Persist with a plain parquet
-    write (or exploded + ``write_bucketed`` on band_hash to pre-pay the
+    write (or exploded and bucketed on band_hash to pre-pay the
     candidate-join shuffle when the increment:corpus ratio is tiny).
     """
     rows_per_band = num_hashes // bands

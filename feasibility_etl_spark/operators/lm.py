@@ -110,29 +110,6 @@ def train_backoff_lm(
     return BackoffLM(unigrams=uni, bigrams=big, n_tokens=n)
 
 
-def merge_lms(*lms: BackoffLM) -> BackoffLM:
-    """Combine models trained on disjoint shards/days into one — counts
-    are mergeable exactly like the sketch family, so a 100 TB corpus
-    trains per partition and rolls up without re-scanning anything:
-    ``merge_lms(train(day1), train(day2)) == train(day1 ∪ day2)``
-    count-for-count (pinned in tests). Also the incremental path: keep
-    the count tables persisted, train only the new shard, merge."""
-    if len(lms) == 1:
-        return lms[0]
-    uni = lms[0].unigrams
-    big = lms[0].bigrams
-    n = lms[0].n_tokens
-    for lm in lms[1:]:
-        uni = uni.unionByName(lm.unigrams)
-        big = big.unionByName(lm.bigrams)
-        n = n.unionByName(lm.n_tokens)
-    return BackoffLM(
-        unigrams=uni.groupBy("w").agg(F.sum("c_uni").alias("c_uni")),
-        bigrams=big.groupBy("w1", "w2").agg(F.sum("c_big").alias("c_big")),
-        n_tokens=n.agg(F.sum("n_train_tokens").alias("n_train_tokens")),
-    )
-
-
 def score_stupid_backoff(
     docs: DataFrame,
     lm: BackoffLM,

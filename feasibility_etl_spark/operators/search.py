@@ -127,33 +127,17 @@ def bm25_scores(
     return scored.select(id_col, *extra, score.alias("bm25"))
 
 
-def bm25_topk(
-    df: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Top-k retrieval: ``(id_col, bm25, rank)``, score-desc with id-asc
-    tie-break (re-runs and engines agree). Executes as
-    TakeOrderedAndProject — per-partition partial top-k, merged k rows on
-    the driver, no global sort (plan-asserted in tests).
+def _ranked_take(scored: DataFrame, score_col: str, id_col: str, k: int) -> DataFrame:
+    """Top-``k`` of ``scored`` as ``(id_col, score_col, rank)``,
+    score-desc with id-asc tie-break (re-runs and engines agree). Executes
+    as TakeOrderedAndProject — per-partition partial top-k, merged k rows
+    on the driver, no global sort (plan-asserted in tests).
 
     Rank is derived from the ordered take itself: the k rows fold into
-    one sorted array (``sort_array`` over ``struct(-bm25, id)`` — score
-    desc, id asc) and ``posexplode`` numbers them. No window function, so
-    no unpartitioned WindowExec (which would log a move-everything-to-
-    one-partition warning on every run for what is a k-row operation)."""
-    scored = bm25_scores(df, query_terms, text_col, id_col, k1, b)
-    return _ranked_take(scored, "bm25", id_col, k)
-
-
-def _ranked_take(scored: DataFrame, score_col: str, id_col: str, k: int) -> DataFrame:
-    """Top-``k`` of ``scored`` as ``(id_col, score_col, rank)`` — ordered
-    take (TakeOrderedAndProject) + sorted-array posexplode rank, the
-    family's no-WindowExec formulation (see bm25_topk)."""
+    one sorted array (``sort_array`` over ``struct(-score, id)``) and
+    ``posexplode`` numbers them. No window function, so no unpartitioned
+    WindowExec (which would log a move-everything-to-one-partition
+    warning on every run for what is a k-row operation)."""
     top = scored.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)
     item = F.struct((-F.col(score_col)).alias("_negs"), F.col(id_col).alias("_id"))
     packed = top.agg(F.sort_array(F.collect_list(item)).alias("_top"))
@@ -204,83 +188,3 @@ def rrf_fuse(
         score = term if score is None else score + term
     scored = joined.select(F.col(id_col), score.alias(score_col))
     return _ranked_take(scored, score_col, id_col, topk)
-
-
-def hybrid_topk(
-    docs: DataFrame,
-    embeddings: DataFrame,
-    query_terms: list[str],
-    query_vec_df: DataFrame,
-    k: int = 10,
-    pool: int = 20,
-    rrf_k: int = 60,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vec_id: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Hybrid retrieval for ONE query: BM25 over ``docs`` and exact
-    cosine over ``embeddings`` (ids shared with ``docs``), each taking a
-    ``pool``-deep list, fused with RRF → ``(id_col, rrf, rank)`` top-k.
-
-    ``query_vec_df`` is a single-row ``(query_id, query_vec)`` frame (the
-    semantic twin of ``query_terms``). For multi-query batches run the
-    retrievers with their native multi-query support and fuse per query
-    partition — the single-query form keeps the operator compositional.
-    """
-    from .similarity import cosine_topk
-
-    lex = bm25_topk(docs, query_terms, k=pool, text_col=text_col, id_col=id_col)
-    sem = cosine_topk(
-        embeddings, query_vec_df, k=pool, corpus_id=vec_id, corpus_vec=vec_col
-    ).select(F.col(vec_id).alias(id_col), "rank")
-    return rrf_fuse(
-        [lex.select(id_col, "rank"), sem], id_col=id_col, k=rrf_k, topk=k
-    )
-
-
-def rrf_fuse_grouped(
-    rankings: list[DataFrame],
-    query_col: str = "query_id",
-    id_col: str = "doc_id",
-    k: int = 60,
-    topk: int = 10,
-    score_col: str = "rrf",
-) -> DataFrame:
-    """Per-query Reciprocal Rank Fusion over MULTI-query ranked lists —
-    the batch form of :func:`rrf_fuse`: each input carries
-    ``(query_col, id_col, rank)`` for many queries at once (the shape
-    ``cosine_topk``/``bm25`` batch retrieval produces), fusion joins on
-    (query, doc), and the final top-k ranks WITHIN each query partition.
-
-    The full-outer joins key on (query, doc) pairs — pool-sized per
-    query, so the fused frame is ``n_queries × pool`` rows and the rank
-    window streams per query; nothing here scales with the corpus.
-    Determinism matches rrf_fuse (fixed-order sum of 1/(k+rank) doubles,
-    id-asc ties)."""
-    if not rankings:
-        raise ValueError("rrf_fuse_grouped needs at least one ranking")
-    keys = [query_col, id_col]
-    renamed = [
-        r.select(*keys, F.col("rank").alias(f"_r{i}"))
-        for i, r in enumerate(rankings)
-    ]
-    joined = renamed[0]
-    for nxt in renamed[1:]:
-        joined = joined.join(nxt, keys, "full_outer")
-    score = None
-    for i in range(len(renamed)):
-        term = F.coalesce(
-            F.lit(1.0) / (F.lit(float(k)) + F.col(f"_r{i}").cast("double")),
-            F.lit(0.0),
-        )
-        score = term if score is None else score + term
-    from pyspark.sql.window import Window
-
-    scored = joined.select(*keys, score.alias(score_col))
-    w = Window.partitionBy(query_col).orderBy(
-        F.desc(score_col), F.asc(id_col)
-    )
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(
-        F.col("rank") <= topk
-    )

@@ -480,9 +480,8 @@ def assign_cells(
     New vectors therefore still assign without a KMeans model object,
     without a join, and without a window shuffle: the scale path for
     appending a daily drop to a billion-vector index is a map over the
-    drop alone. :func:`_assign_cells_sql` keeps the pure-column twin
-    (used where Arrow is unavailable); parity between the two and with
-    MLlib ``model.transform`` is pinned in tests/test_similarity.py."""
+    drop alone. Parity with MLlib ``model.transform`` is pinned in
+    tests/test_similarity.py."""
     import numpy as np
 
     cents = sorted(((int(cell), list(map(float, c))) for cell, c in centroids))
@@ -513,38 +512,6 @@ def assign_cells(
             )
 
     return df.select(id_col, vec_col).mapInPandas(assign, out_schema)
-
-
-def _assign_cells_sql(
-    df: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Pure-column twin of :func:`assign_cells`: ``array_min`` over
-    per-cell ``(dist², cell)`` structs — struct ordering gives the
-    euclidean argmin with lowest-cell tie-break. Semantically identical
-    (parity test-pinned) but n_cells interpreted HOFs per row, measured
-    ~1.7× slower on the bench corpus (tools/ab_ivf_assign_r12.py); kept
-    for environments without Arrow and as the oracle for the fast path."""
-    pairs = [
-        F.struct(
-            F.aggregate(
-                F.zip_with(
-                    F.col(vec_col),
-                    F.array(*[F.lit(float(x)) for x in c]),
-                    lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("d2"),
-            F.lit(int(cell)).alias("c"),
-        )
-        for cell, c in centroids
-    ]
-    return df.select(
-        F.col(id_col), F.col(vec_col), F.array_min(F.array(*pairs))["c"].alias("_cell")
-    )
 
 
 def ivf_append(

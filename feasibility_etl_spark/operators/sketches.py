@@ -83,23 +83,13 @@ def quantile_sketches(
     sketch_col: str = "kll",
 ) -> DataFrame:
     """Per-key KLL quantile sketch of a LONG column — the mergeable
-    percentile companion to the HLL family: build per shard/day, merge
-    with :func:`merge_quantile_sketches`, read quantiles anywhere. Exact
+    percentile companion to the HLL family: build per key, read
+    quantiles with :func:`with_quantiles`. Exact
     ``percentile`` needs a per-key sort; ``approx_percentile`` is
     one-shot. Normalized rank error at k=800 ≈ 0.6% (pinned in tests)."""
     return df.groupBy(*keys).agg(
         F.kll_sketch_agg_bigint(F.col(col), F.lit(k)).alias(sketch_col)
     )
-
-
-def merge_quantile_sketches(
-    df: DataFrame,
-    keys: list[str],
-    sketch_col: str = "kll",
-) -> DataFrame:
-    """Merge KLL sketches to coarser keys without re-scanning the data."""
-    agg = F.kll_merge_agg_bigint(F.col(sketch_col)).alias(sketch_col)
-    return df.groupBy(*keys).agg(agg) if keys else df.agg(agg)
 
 
 def with_quantiles(
@@ -309,7 +299,7 @@ def pairwise_overlap(
 
 
 # ---------------------------------------------------------------------------
-# Bloom filters — mergeable no-false-negative membership sketches
+# Bloom filters — no-false-negative membership sketches
 # ---------------------------------------------------------------------------
 #
 # Representation: one ``array<long>`` column of ``m_bits / 32`` words, each
@@ -448,55 +438,6 @@ def bloom_build(
             *keys,
             "_s",
             F.transform(F.col("_sw"), lambda s: s.getField("_word")).alias(
-                "_seg"
-            ),
-        )
-    )
-    packed = F.flatten(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("_s"), F.col("_seg")))),
-            lambda s: s.getField("_seg"),
-        )
-    ).alias(bloom_col)
-    return segs.groupBy(*keys).agg(packed) if keys else segs.agg(packed)
-
-
-def bloom_merge(
-    df: DataFrame,
-    keys: list[str] | None = None,
-    bloom_col: str = "bloom",
-) -> DataFrame:
-    """OR shard-built filters up to coarser ``keys`` (per-day → all-time)
-    without re-scanning the data — word-aligned posexplode + per-index
-    ``bit_or``, dense order restored by the same SEGMENTED
-    sort-then-flatten shape as ``bloom_build`` (r8 ADVICE: the previous
-    single-task ``collect_list + array_sort`` over all m/32 words was
-    exactly the linear-in-m serial tail PERF-NOTES 36 measured at 9.3 s
-    for m=2^28 and removed from the build — merging shard filters at
-    large m must not re-pay it). Word indices group into 4096-word
-    segments sorted in parallel; the final per-key task only sorts the
-    (segment, array) pairs and flattens. All inputs must share
-    ``m_bits`` (same array length — inputs are dense, so every segment
-    is complete and no zero-fill union is needed)."""
-    keys = keys or []
-    seg_bits = 12  # 4096 words (16 KB) per segment task, as bloom_build
-    words = (
-        df.select(*keys, F.posexplode(bloom_col).alias("_i", "_v"))
-        .groupBy(*keys, "_i")
-        .agg(F.bit_or("_v").alias("_word"))
-    )
-    segs = (
-        words.withColumn("_s", F.shiftright(F.col("_i"), seg_bits))
-        .groupBy(*keys, "_s")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_i"), F.col("_word")))
-            ).alias("_iw")
-        )
-        .select(
-            *keys,
-            "_s",
-            F.transform(F.col("_iw"), lambda s: s.getField("_word")).alias(
                 "_seg"
             ),
         )

@@ -142,141 +142,20 @@ WINNOW_BASE = 31
 WINNOW_MOD = 1_000_000_007
 
 
-def winnow_fingerprints(
-    text: Column | str, k: int = 8, w: int = 4
-) -> Column:
-    """Winnowing document fingerprints → array<long> (sorted, distinct).
-
-    The local-fingerprinting scheme (Schleimer/Wilkerson/Aiken, SIGMOD'03):
-    hash every character k-gram with a polynomial rolling hash, then keep
-    the minimum of each window of ``w`` consecutive hashes — any shared
-    substring of length ≥ k+w-1 between two documents is guaranteed to
-    share a fingerprint, so partial overlap is detectable without aligning
-    whole documents (md5 ``fingerprint`` only catches full-content dups).
-
-    Pure Column exprs, all linear passes: the text is split into a
-    codepoint array ONCE, then the k-gram hashes accumulate through k
-    shifted-copy ``zip_with`` passes (one multiply-add per element per
-    pass) — NEVER per-index ``substr``, whose start-seek is O(i) on UTF-8
-    and turns the whole thing O(len²·k) (measured 200× slower at sf0.1).
-    The w-window minima use the same shifted-``zip_with`` pattern with
-    ``least``. Docs shorter than k chars yield an empty set; shorter than
-    k+w-1 yield the single global minimum. Deterministic: fixed
-    base/modulus, no seeds.
-    """
-    c = F.lower(F.col(text) if isinstance(text, str) else text)
-    n = F.length(c)
-    pows = [pow(WINNOW_BASE, j, WINNOW_MOD) for j in range(k)]
-
-    # codepoint(<2^21) × pow(<2^30) summed k times stays far under 2^63 —
-    # no overflow under ANSI mode, and the oracle's BIGINT math agrees
-    codes = F.transform(F.split(c, ""), lambda ch: F.ascii(ch).cast("long"))
-    big = F.greatest(F.size(codes), F.lit(1))
-    def _muladd(p: int):
-        pl = F.lit(p).cast("long")
-        return lambda a, b: a + b * pl
-
-    acc = F.transform(codes, lambda x: x * F.lit(pows[0]).cast("long"))
-    for j in range(1, k):
-        acc = F.zip_with(acc, F.slice(codes, j + 1, big), _muladd(pows[j]))
-    hashes = F.when(n < k, F.array().cast("array<long>")).otherwise(
-        F.transform(
-            F.slice(acc, 1, F.greatest(n - (k - 1), F.lit(1))),
-            lambda h: h % WINNOW_MOD,
-        )
-    )
-    mins = hashes
-    for s in range(2, w + 1):
-        mins = F.zip_with(
-            mins,
-            F.slice(hashes, s, F.greatest(F.size(hashes), F.lit(1))),
-            lambda a, b: F.least(a, b),
-        )
-    # zip_with pads the short side with null and `least` SKIPS nulls (it
-    # returns the smallest non-null operand), so the tail of `mins` holds
-    # partial-window minima, not nulls — slice to the exact full-window
-    # count rather than filtering
-    windowed = F.slice(mins, 1, F.size(hashes) - (w - 1))
-    full = F.when(F.size(hashes) == 0, F.array().cast("array<long>")).otherwise(
-        F.when(F.size(hashes) < w, F.array(F.array_min(hashes))).otherwise(windowed)
-    )
-    return F.array_sort(F.array_distinct(full))
-
-
-def winnow_fingerprints_rows(
-    df, text_col: str = "text", id_col: str = "doc_id", k: int = 8, w: int = 4
-):
-    """Winnowing fingerprints, relationally → DataFrame (id, fp) rows.
-
-    Same values as ``winnow_fingerprints`` (asserted equal in tests), built
-    for scale: posexplode the codepoint array once, then the k-gram hash is
-    ``sum_j lead(code, j)·B^j`` and the window minimum is ``min() OVER
-    (ROWS BETWEEN CURRENT ROW AND w-1 FOLLOWING)`` — two codegen'd window
-    passes over one shuffle on the doc id, zero interpreted per-element
-    lambdas. The HOF formulation spends ~15 interpreted array passes per
-    doc (measured 30 s at sf0.1 vs ~2 s for this one); window exec is the
-    fast path for any sliding computation longer than a few elements.
-
-    Docs shorter than k chars emit nothing; with fewer than w hashes the
-    single global minimum is the fingerprint (matching the Column version).
-
-    Partitioning: the doc frame is repartitioned on ``id_col`` BEFORE the
-    char explode. This (1) satisfies the window's required distribution up
-    front, so the shuffle moves compressed documents, not the ~1-row-per-
-    char exploded stream (orders of magnitude more bytes), and (2) spreads
-    the explode itself across the cluster instead of leaving it serialized
-    inside however few tasks the scan produced (at sf0.1 the single-file
-    scan pinned the explode to ONE task). The partition count is explicit
-    (defaultParallelism): AQE sizes post-shuffle partitions from the
-    PRE-explode bytes and would coalesce the small doc shuffle back to one
-    task, re-serializing the ~1-row-per-char blow-up it can't see coming.
-    """
-    from pyspark.sql.window import Window
-
-    pows = [pow(WINNOW_BASE, j, WINNOW_MOD) for j in range(k)]
-    c = F.lower(F.col(text_col))
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-    chars = df.select(
-        F.col(id_col),
-        F.length(c).alias("_n"),
-        F.posexplode(F.split(c, "")).alias("_pos", "_ch"),
-    ).select(
-        id_col, "_n", "_pos", F.ascii("_ch").cast("long").alias("_code")
-    )
-    seq = Window.partitionBy(id_col).orderBy("_pos")
-    h = sum(
-        F.lead("_code", j).over(seq) * F.lit(pows[j]).cast("long") for j in range(k)
-    )
-    hashes = (
-        chars.withColumn("_h", h % WINNOW_MOD)
-        .where(F.col("_pos") <= F.col("_n") - k)  # full k-grams only
-        .select(id_col, "_n", "_pos", "_h")
-    )
-    frame = Window.partitionBy(id_col).orderBy("_pos").rowsBetween(0, w - 1)
-    whole = Window.partitionBy(id_col)
-    mins = hashes.select(
-        F.col(id_col),
-        F.col("_pos"),
-        (F.col("_n") - (k - 1)).alias("_n_h"),  # number of k-gram hashes
-        F.min("_h").over(frame).alias("_winmin"),
-        F.min("_h").over(whole).alias("_globalmin"),
-    )
-    fp = F.when(F.col("_n_h") < w, F.col("_globalmin")).otherwise(F.col("_winmin"))
-    valid = F.when(F.col("_n_h") < w, F.col("_pos") == 0).otherwise(
-        F.col("_pos") <= F.col("_n_h") - w
-    )
-    return mins.where(valid).select(F.col(id_col), fp.alias("fp")).distinct()
-
-
 def winnow_fingerprints_arrow(
     df, text_col: str = "text", id_col: str = "doc_id", k: int = 8, w: int = 4
 ):
     """Winnowing fingerprints via numpy rolling-hash + sliding-min inside
-    ``mapInPandas`` → DataFrame (id, fp) rows. Same values as
-    ``winnow_fingerprints_rows`` (parity-pinned in tests; the relational
-    twin stays as the oracle-shaped formulation).
+    ``mapInPandas`` → DataFrame (id, fp) rows — the local-fingerprinting
+    scheme (Schleimer/Wilkerson/Aiken, SIGMOD'03): hash every character
+    k-gram with a polynomial rolling hash, then keep the minimum of each
+    window of ``w`` consecutive hashes, so any shared substring of length
+    ≥ k+w-1 between two documents is guaranteed to share a fingerprint
+    (md5 ``fingerprint`` only catches full-content dups). Deterministic:
+    fixed base/modulus, no seeds. Pinned against a pure-Python model in
+    tests and against the DuckDB oracle by TEXT-WINNOW.
 
-    Why this exists: the relational path pays ~1 row PER CHARACTER
+    Why numpy: a relational formulation pays ~1 row PER CHARACTER
     through a shuffle-backed window — linear, but with a constant factor
     that made TEXT-WINNOW the slowest sf1 sweep entry (2,798 s). Here a
     document never leaves its executor: the k-gram hash is k vectorized
@@ -284,15 +163,14 @@ def winnow_fingerprints_arrow(
     pow < 2³⁰ × k=8 stays under 2⁵⁴, no overflow before the mod) and the
     w-window minimum is one strided ``sliding_window_view`` reduction —
     the group_cosine_pairs precedent (PERF-NOTES 28) applied to rolling
-    hashes. ZERO data shuffles: only the doc-spreading repartition that
-    the rows variant also needs (a single parquet file otherwise pins
-    the whole corpus to one task).
+    hashes. ZERO data shuffles: only a doc-spreading repartition (a
+    single parquet file otherwise pins the whole corpus to one task).
 
     Exact-parity details: ``str.lower()``/UTF-32 codepoints match
     ``F.lower``/``F.ascii`` and the oracle's ``lower``/``ord``; docs
     shorter than k emit nothing; fewer than w hashes emit the single
-    global minimum; per-doc ``np.unique`` = the relational
-    ``distinct()`` (ids never collide across docs)."""
+    global minimum; per-doc ``np.unique`` gives distinct (id, fp) rows
+    (ids never collide across docs)."""
     import numpy as np
     import pandas as pd
     from numpy.lib.stride_tricks import sliding_window_view
@@ -740,7 +618,7 @@ def tfidf_topterms(
 
     Determinism: ranking compares the 9-dp-ROUNDED score (``ln`` is
     1-ulp engine-dependent; tf ≤ doc length keeps the product's error
-    under 1e-10), ties by term ascending — the bm25_topk discipline.
+    under 1e-10), ties by term ascending — the TEXT-BM25-TOPK discipline.
     ``score_e9`` is the nano-scaled BIGINT of the same rounded score.
     """
     toks = tokens(F.lower(F.col(text_col)))

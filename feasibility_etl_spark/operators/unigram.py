@@ -1,32 +1,16 @@
 """Unigram-LM tokenizer (Kudo 2018, arXiv:1804.10959 — the SentencePiece
-default): EM-trained piece probabilities + Viterbi encoding. The third
-member of the tokenizer family, completing the production set: BPE
-(frequency merges, bpe.py), WordPiece (likelihood merges + greedy
-longest-match, wordpiece.py), Unigram (probabilistic lattice).
+default): Viterbi encoding against a frozen piece table. The third member
+of the tokenizer family: BPE (frequency merges, bpe.py), WordPiece
+(greedy longest-match, wordpiece.py), Unigram (probabilistic lattice).
 
-Split of labor (the family pattern):
-
-- **Corpus-scale pass (distributed)**: the word-frequency table
-  (``bpe.word_counts``) — the sufficient statistic; shuffle carries
-  (word, count), never documents.
-- **Seed + EM + prune (driver, bounded)**: seed vocabulary = the
-  ``seed_size`` highest ``count x length`` substrings of the count
-  table (plus every single character, which is never pruned — the
-  coverage floor); then alternate EM rounds (E: forward-backward
-  expected piece counts over each word's segmentation lattice;
-  M: renormalize) with prune rounds (drop the lowest-expected-count
-  multi-char pieces, ``prune_frac`` at a time) until ``vocab_size``
-  pieces remain, then a final EM polish.
 - **Encode (distributed)**: per-word Viterbi (max log-prob
   segmentation) via Arrow-batched ``mapInPandas`` with the (piece →
   logp) dict broadcast and a per-batch word cache.
 
-Determinism: EM iterates words and pieces in sorted order, so the
-float accumulation order is fixed; Viterbi ties break toward the
-LONGER piece ending at the position (then the DP is unique because
-earlier positions resolved deterministically). Characters unseen in
-training encode as themselves with a floor log-prob — coverage never
-drops a word.
+Determinism: Viterbi ties break toward the LONGER piece ending at the
+position (then the DP is unique because earlier positions resolved
+deterministically). Characters absent from the piece table encode as
+themselves with a floor log-prob — coverage never drops a word.
 
 Oracle note: Viterbi is a max-sum DP with per-state argmax, which a
 DuckDB 1.0 recursive CTE cannot express via keyed recursion — but it
@@ -36,151 +20,19 @@ for the last max_piece_len positions riding along as a list, argmax'd
 by ``list_sort`` on (-cost, -piece_len). With the frozen
 ``DEMO_UG_PIECES`` (logps rounded to multiples of 2^-20), path costs
 are exact doubles in any IEEE engine, so UNIGRAM-ENCODE is checked
-FULL-ORACLE (driver_queries/media_history.py:ORACLE_UNIGRAM_ENCODE);
-training stays pinned by tests/test_unigram.py.
+FULL-ORACLE (driver_queries/media_history.py:ORACLE_UNIGRAM_ENCODE).
 """
 
 from __future__ import annotations
 
-import math
-from collections import Counter
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .bpe import word_counts
-
-#: log-prob floor for characters unseen in training (coverage fallback)
+#: log-prob floor for characters absent from the piece table (coverage fallback)
 UNSEEN_LOGP = -20.0
-
-
-def _seed_vocab(
-    counts: dict[str, int], seed_size: int, max_piece_len: int
-) -> set[str]:
-    """Seed pieces: every single char, plus the ``seed_size`` best
-    multi-char substrings by count x length (the standard
-    suffix-array-free approximation of SentencePiece's seeding)."""
-    sub_score: Counter[str] = Counter()
-    chars: set[str] = set()
-    for w, n in counts.items():
-        chars.update(w)
-        L = len(w)
-        for i in range(L):
-            for j in range(i + 2, min(i + max_piece_len, L) + 1):
-                sub = w[i:j]
-                sub_score[sub] += n * len(sub)
-    best = sorted(sub_score.items(), key=lambda kv: (-kv[1], kv[0]))[:seed_size]
-    return chars | {s for s, _ in best}
-
-
-def _em_round(
-    counts: dict[str, int], logp: dict[str, float], max_piece_len: int
-) -> dict[str, float]:
-    """One EM round: forward-backward expected piece counts over every
-    word's lattice, then renormalized log-probs. Pieces and words are
-    visited in sorted order — fixed float accumulation order."""
-    expected: dict[str, float] = {}
-    for w in sorted(counts):
-        n = counts[w]
-        L = len(w)
-        # forward[i] = total prob of prefixes w[:i]; log-space sum
-        fwd = [float("-inf")] * (L + 1)
-        fwd[0] = 0.0
-        for i in range(1, L + 1):
-            for j in range(max(0, i - max_piece_len), i):
-                p = logp.get(w[j:i])
-                if p is not None and fwd[j] != float("-inf"):
-                    fwd[i] = _logadd(fwd[i], fwd[j] + p)
-        if fwd[L] == float("-inf"):
-            continue  # word not coverable by current vocab (no chars?)
-        bwd = [float("-inf")] * (L + 1)
-        bwd[L] = 0.0
-        for i in range(L - 1, -1, -1):
-            for j in range(i + 1, min(L, i + max_piece_len) + 1):
-                p = logp.get(w[i:j])
-                if p is not None and bwd[j] != float("-inf"):
-                    bwd[i] = _logadd(bwd[i], p + bwd[j])
-        total = fwd[L]
-        for i in range(L):
-            for j in range(i + 1, min(L, i + max_piece_len) + 1):
-                piece = w[i:j]
-                p = logp.get(piece)
-                if p is None:
-                    continue
-                if fwd[i] == float("-inf") or bwd[j] == float("-inf"):
-                    continue
-                gamma = math.exp(fwd[i] + p + bwd[j] - total)
-                expected[piece] = expected.get(piece, 0.0) + n * gamma
-    tot = sum(expected[k] for k in sorted(expected))
-    # guard the RATIO, not the raw count: a denormal-tiny expected count
-    # divided by a large total underflows to exactly 0.0 and log(0)
-    # raises even though v > 0 — drop such pieces (their probability is
-    # below float resolution anyway)
-    return {k: math.log(v / tot) for k, v in expected.items() if v / tot > 0}
-
-
-def _logadd(a: float, b: float) -> float:
-    if a == float("-inf"):
-        return b
-    if b == float("-inf"):
-        return a
-    hi, lo = (a, b) if a >= b else (b, a)
-    return hi + math.log1p(math.exp(lo - hi))
-
-
-def unigram_train(
-    df: DataFrame,
-    vocab_size: int,
-    text_col: str = "text",
-    seed_size: int = 1000,
-    max_piece_len: int = 8,
-    prune_frac: float = 0.25,
-    min_count: int = 1,
-    max_words: int = 1_000_000,
-) -> list[tuple[str, float]]:
-    """Train a Unigram-LM vocabulary → sorted ``[(piece, logp), ...]``.
-    Single characters are never pruned (coverage floor); multi-char
-    pieces are pruned lowest-expected-count-first, ``prune_frac`` per
-    round, with EM re-estimation between rounds."""
-    counts = {
-        r["word"]: r["n"]
-        for r in word_counts(df, text_col, min_count, max_words).collect()
-        if r["word"]
-    }
-    return vocab_from_counts(
-        counts, vocab_size, seed_size, max_piece_len, prune_frac
-    )
-
-
-def vocab_from_counts(
-    counts: dict[str, int],
-    vocab_size: int,
-    seed_size: int = 1000,
-    max_piece_len: int = 8,
-    prune_frac: float = 0.25,
-) -> list[tuple[str, float]]:
-    """The bounded driver-side seed/EM/prune loop (see unigram_train)."""
-    pieces = _seed_vocab(counts, seed_size, max_piece_len)
-    # uniform init over the seed
-    logp = {p: -math.log(len(pieces)) for p in pieces}
-    logp = _em_round(counts, logp, max_piece_len) or logp
-    while len(logp) > vocab_size:
-        multi = sorted(
-            (p for p in logp if len(p) > 1), key=lambda p: (logp[p], p)
-        )
-        n_drop = min(
-            max(1, int(len(multi) * prune_frac)),
-            max(0, len(logp) - vocab_size),
-        )
-        if not multi or n_drop == 0:
-            break
-        for p in multi[:n_drop]:
-            del logp[p]
-        logp = _em_round(counts, logp, max_piece_len) or logp
-    logp = _em_round(counts, logp, max_piece_len) or logp
-    return sorted(logp.items())
 
 
 def viterbi_word(
@@ -235,7 +87,7 @@ def unigram_encode(
     max_piece_len: int = 8,
     parallelism: int | None = None,
 ) -> DataFrame:
-    """Viterbi-encode documents with a trained vocabulary →
+    """Viterbi-encode documents with a (piece, logp) table →
     ``(doc_id, ug_tokens, n_ug_tokens)``. Arrow-batched ``mapInPandas``;
     the (piece → logp) dict broadcasts once per executor; a per-batch
     word cache collapses the Zipf head (family pattern)."""
@@ -275,20 +127,18 @@ def unigram_encode(
 # A text-grain sibling (split + join inside the Python stage, one string
 # per doc across the Arrow boundary — the shape shipped for BPE/WordPiece
 # in r12) was A/B'd for this operator and REJECTED on measurement:
-# 0.286 -> 0.299 s median over 10 interleaved sf0.1 reps
-# (tools/ab_encode_text_r12.py keeps the experiment reproducible). The
+# 0.286 -> 0.299 s median over 10 interleaved sf0.1 reps. The
 # Viterbi segmentations are piece-dense, so the Python-side string join
 # costs more than the per-symbol Arrow offsets it removes.
 
 
-# Frozen demo vocabulary: ``unigram_train(documents @ sf0.001,
-# vocab_size=120, seed_size=200, max_words=2000)`` with each logp rounded
+# Frozen demo vocabulary: Unigram-LM EM training on documents @ sf0.001
+# (vocab_size=120, seed_size=200, max_words=2000) with each logp rounded
 # to the nearest multiple of 2^-20 — frozen as a literal (like
 # bpe.DEMO_MERGES / wordpiece.DEMO_WP_VOCAB) so the driver's DuckDB
 # oracle can replay Viterbi EXACTLY: dyadic log-probs make every path
 # cost a sum of exact doubles (total significand < 2^53), so scores,
 # comparisons, and tie-breaks are bit-identical in any IEEE-754 engine.
-# Training provenance is pinned by tests/test_unigram.py.
 DEMO_UG_PIECES: list[tuple[str, float]] = [
     ('a', -3.402557373046875),
     ('able', -101.28251838684082),

@@ -1,31 +1,20 @@
 """WordPiece tokenizer (Schuster & Nakajima 2012; Wu et al. 2016 — the
-BERT-family subword scheme): likelihood-scored merge training + greedy
-longest-match-first encoding. Completes the tokenizer family next to
-``bpe.py`` (frequency-scored merges, best-rank-first encode): same
-split of labor, different statistics and a different — and crucially
+BERT-family subword scheme): greedy longest-match-first encoding against
+a frozen vocabulary. Completes the tokenizer family next to ``bpe.py``
+(best-rank-first merge replay) with a different — and crucially
 SQL-replayable — encoding algorithm.
 
-Split of labor (mirrors bpe.py):
-
-- **Corpus-scale pass (distributed)**: the word-frequency table
-  (``bpe.word_counts`` — one explode + groupBy, shuffle carries
-  (word, count), never documents).
-- **Merge loop (driver, bounded)**: greedy merging over the symbolized
-  count table, but scored by pair LIKELIHOOD ``n(ab) / (n(a)·n(b))``
-  (the WordPiece objective: maximize LM likelihood gain per merge)
-  instead of raw pair frequency. Scores compare as exact integer
-  cross-products — no float ties, reproducible anywhere.
 - **Encode (distributed)**: greedy longest-match-first against the
-  trained vocabulary (the WordPiece/BERT runtime algorithm — NOT the
-  merge replay BPE uses), Arrow-batched ``mapInPandas`` with the vocab
+  vocabulary (the WordPiece/BERT runtime algorithm — NOT the merge
+  replay BPE uses), Arrow-batched ``mapInPandas`` with the vocab
   broadcast and a per-batch word cache. A word with any unmatchable
   position encodes to the single ``[UNK]`` token, per BERT convention.
 
 Conventions: words are ``lower(trim(text))`` split on whitespace (the
 family tokenizer); non-initial pieces carry the ``##`` continuation
 prefix; the base alphabet (every initial character and every ``##``
-continuation character seen in training) is always in the vocabulary, so
-UNK can only arise from characters unseen in training.
+continuation character of the corpus the vocabulary was frozen from) is
+in the vocabulary, so UNK can only arise from characters outside it.
 
 Oracle note (exploited by the driver): greedy longest-match is a
 deterministic single-path walk over (word, position) states, so DuckDB
@@ -37,105 +26,14 @@ encode is fully SQL-checkable, unlike Viterbi segmentation.
 
 from __future__ import annotations
 
-from collections import Counter
 from collections.abc import Iterator
-from fractions import Fraction
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .bpe import word_counts
-
 CONT = "##"
 UNK = "[UNK]"
-
-
-def _wp_syms(word: str) -> tuple[str, ...]:
-    """Initial symbolization: first char plain, rest ##-prefixed."""
-    return (word[0],) + tuple(CONT + c for c in word[1:])
-
-
-def _strip_cont(sym: str) -> str:
-    return sym[len(CONT):] if sym.startswith(CONT) else sym
-
-
-def _merge_pair(sym_a: str, sym_b: str) -> str:
-    """Merged symbol keeps a's continuation status; b's ## dissolves."""
-    return sym_a + _strip_cont(sym_b)
-
-
-def vocab_from_word_counts(
-    vocab_counts: dict[tuple[str, ...], int], num_merges: int
-) -> list[str]:
-    """Driver-side WordPiece training loop over a symbolized word-count
-    table → the vocabulary (base alphabet + merge outputs, insertion
-    order). Each round merges the adjacent pair with the highest
-    likelihood score ``n(ab) / (n(a)·n(b))``; ties break on higher pair
-    count, then lexicographically smallest pair. Scores compare as exact
-    ``Fraction``s — no float-tie nondeterminism."""
-    words = dict(vocab_counts)
-    base: set[str] = set()
-    for syms in words:
-        base.update(syms)
-    vocab: list[str] = sorted(base)
-    for _ in range(num_merges):
-        pair_n: Counter[tuple[str, str]] = Counter()
-        sym_n: Counter[str] = Counter()
-        for syms, n in words.items():
-            for s in syms:
-                sym_n[s] += n
-            for i in range(len(syms) - 1):
-                pair_n[(syms[i], syms[i + 1])] += n
-        if not pair_n:
-            break
-        best = min(
-            pair_n.items(),
-            key=lambda kv: (
-                -Fraction(kv[1], sym_n[kv[0][0]] * sym_n[kv[0][1]]),
-                -kv[1],
-                kv[0],
-            ),
-        )[0]
-        merged = _merge_pair(*best)
-        vocab.append(merged)
-        words = {
-            _apply_merge(syms, best, merged): n for syms, n in words.items()
-        }
-    return vocab
-
-
-def _apply_merge(
-    syms: tuple[str, ...], pair: tuple[str, str], merged: str
-) -> tuple[str, ...]:
-    out: list[str] = []
-    i = 0
-    while i < len(syms):
-        if i + 1 < len(syms) and (syms[i], syms[i + 1]) == pair:
-            out.append(merged)
-            i += 2
-        else:
-            out.append(syms[i])
-            i += 1
-    return tuple(out)
-
-
-def wordpiece_train(
-    df: DataFrame,
-    num_merges: int,
-    text_col: str = "text",
-    min_count: int = 1,
-    max_words: int = 1_000_000,
-) -> list[str]:
-    """Train a WordPiece vocabulary on the corpus. The distributed stage
-    is the same word-frequency pass BPE uses; only the bounded driver
-    loop differs (likelihood scoring, ##-prefixed symbols)."""
-    counts = {
-        _wp_syms(r["word"]): r["n"]
-        for r in word_counts(df, text_col, min_count, max_words).collect()
-        if r["word"]
-    }
-    return vocab_from_word_counts(counts, num_merges)
 
 
 def encode_word_greedy(word: str, vocab: set[str]) -> tuple[str, ...]:
@@ -162,61 +60,6 @@ def encode_word_greedy(word: str, vocab: set[str]) -> tuple[str, ...]:
     return tuple(pieces)
 
 
-WP_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("wp_tokens", T.ArrayType(T.StringType())),
-        T.StructField("n_wp_tokens", T.LongType()),
-    ]
-)
-
-
-def wordpiece_encode(
-    df: DataFrame,
-    vocab: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    parallelism: int | None = None,
-) -> DataFrame:
-    """Encode documents with a trained vocabulary →
-    ``(doc_id, wp_tokens, n_wp_tokens)``. Arrow-batched ``mapInPandas``
-    (codec-tier Python): the vocab set ships once per executor via a
-    Spark broadcast; a per-batch word cache collapses the Zipf head.
-    ``parallelism`` pre-repartitions ahead of the CPU-bound Python stage
-    (like bpe_encode / image_features)."""
-    from .text import tokens
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        tokens(F.lower(F.trim(F.col(text_col)))).alias("_toks"),
-    )
-    if parallelism:
-        src = src.repartition(parallelism, "doc_id")
-    bc = df.sparkSession.sparkContext.broadcast(set(vocab))
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        vset = bc.value
-        cache: dict[str, tuple[str, ...]] = {}
-        for pdf in batches:
-            out = []
-            for did, toks in zip(pdf["doc_id"], pdf["_toks"]):
-                syms: list[str] = []
-                for w in toks if toks is not None else []:
-                    enc = cache.get(w)
-                    if enc is None:
-                        enc = encode_word_greedy(w, vset)
-                        cache[w] = enc
-                    syms.extend(enc)
-                out.append((did, syms, len(syms)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "wp_tokens", "n_wp_tokens"]
-            )
-
-    return src.mapInPandas(run, WP_SCHEMA)
-
-
 WP_TEXT_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -233,10 +76,12 @@ def wordpiece_encode_text(
     id_col: str = "doc_id",
     parallelism: int | None = None,
 ) -> DataFrame:
-    """:func:`wordpiece_encode` at the text grain → ``(doc_id, wp_text,
-    n_wp_tokens)`` with ``wp_text = array_join(wp_tokens, ' ')`` —
-    row-identical to composing the two (pieces cannot contain whitespace).
-    Same rationale as :func:`.bpe.bpe_encode_text` (guide §2.3/§4): the
+    """Encode documents with a vocabulary → ``(doc_id, wp_text,
+    n_wp_tokens)``: ``wp_text`` is the doc's words' :func:`encode_word_greedy`
+    pieces joined by single spaces (pieces cannot contain whitespace).
+    The vocab set ships once per executor via a Spark broadcast;
+    ``parallelism`` pre-repartitions ahead of the CPU-bound Python stage.
+    Same text-grain rationale as :func:`.bpe.bpe_encode_text` (guide §2.3/§4): the
     doc crosses the Arrow boundary as ONE lowered/trimmed string each way
     instead of per-token arrays; the whitespace split runs in Python with
     the ASCII class Spark's `split` means by ``\\s``; unicode-sensitive
@@ -283,10 +128,10 @@ def wordpiece_encode_text(
     return src.mapInPandas(run, WP_TEXT_SCHEMA)
 
 
-# Frozen demo vocabulary: ``wordpiece_train(documents @ sf0.001,
-# num_merges=24)`` — frozen as a literal (like bpe.DEMO_MERGES) so the
-# driver's DuckDB oracle can replay greedy longest-match against a fixed
-# piece table; training provenance is pinned by tests/test_wordpiece.py.
+# Frozen demo vocabulary: WordPiece training (likelihood-scored merges) on
+# documents @ sf0.001, 24 merges — frozen as a literal (like
+# bpe.DEMO_MERGES) so the driver's DuckDB oracle can replay greedy
+# longest-match against a fixed piece table.
 DEMO_WP_VOCAB: list[str] = [
     "##a", "##b", "##c", "##d", "##e", "##g", "##h", "##i", "##k", "##l",
     "##m", "##n", "##o", "##p", "##r", "##s", "##t", "##u", "##w", "##y",

@@ -22,8 +22,8 @@ modes, matching the two ways compositions are consumed:
       with materialize_shared() as shared:
           gated = shared(quality_gate(docs))
           deduped = exact_dedup(gated)          # ref 1
-          report = loss_report(gated, deduped)  # ref 2 — cache pays off
-          report.write.parquet(out)             # terminal action HERE
+          dropped = gated.subtract(deduped)     # ref 2 — cache pays off
+          dropped.write.parquet(out)            # terminal action HERE
 
 - ``release_when_unreachable(result, cache)`` — for builders that
   RETURN a lazy frame and never see the action (the driver contract:

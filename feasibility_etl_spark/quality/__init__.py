@@ -1,11 +1,7 @@
-from .gates import DataLossExceeded, assert_loss_below, drop_failed, loss_report, validate_not_null
+from .gates import validate_not_null
 from .profile import profile_columns
 
 __all__ = [
-    "DataLossExceeded",
-    "assert_loss_below",
-    "drop_failed",
-    "loss_report",
     "profile_columns",
     "validate_not_null",
 ]

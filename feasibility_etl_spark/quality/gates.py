@@ -1,21 +1,11 @@
 """Data-quality operators (SURVEY.md §2.8) — genuine dataflow semantics.
 
-- ``drop_failed`` (E-DROP): remove whole parent records whose supplemental
-  data failed — the reference's ``delete data[grandparent || parent]``
-  (/root/reference/etl.js:256-260) becomes a left-anti join.
-- ``assert_loss_below`` (E-GATE): abort iff
-  ``abs((after - before) / before * 100) >= threshold`` (etl.js:249-278,
-  threshold 20 from config.json:5, formula helpers.js:234-240). The gate
-  runs BEFORE any write action so a failing run costs two counts, not a
-  full materialization.
 - ``validate_not_null`` (E-ISOLATE replacement): Spark writes are not
   row-transactional, so per-row error swallowing (helpers.js:100-104)
   becomes validate-then-write — split conforming from violating rows up
   front.
-
-Scale note: the two ``count()`` actions in the gate are the only eager bits;
-each is a map-side count with a tiny final reduce. ``drop_failed`` broadcasts
-the failed-key set when it is small (it is — failures are the exception).
+- ``filter_by_quantile``: keep rows at or above a per-key score quantile,
+  the threshold computed by one aggregate and attached by broadcast.
 """
 
 from __future__ import annotations
@@ -24,42 +14,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-class DataLossExceeded(RuntimeError):
-    """Raised by the E-GATE when data loss breaches the threshold."""
-
-
-def drop_failed(df: DataFrame, failed_keys: DataFrame, key: str | Sequence[str]) -> DataFrame:
-    """Remove every row whose key appears in ``failed_keys`` (E-DROP)."""
-    return df.join(F.broadcast(failed_keys), on=key, how="left_anti")
-
-
-def loss_report(count_before: int, count_after: int) -> float:
-    """Absolute percent change between two cardinalities (F-PCTCHG on counts)."""
-    if count_before == 0:
-        return float("inf") if count_after != 0 else 0.0
-    return abs((count_after - count_before) / abs(count_before) * 100.0)
-
-
-def assert_loss_below(
-    df_before: DataFrame,
-    df_after: DataFrame,
-    threshold_pct: float = 20.0,
-) -> tuple[int, int, float]:
-    """E-GATE: raise ``DataLossExceeded`` iff loss% >= threshold.
-
-    Returns ``(count_before, count_after, loss_pct)`` when the gate passes,
-    mirroring the reference's continue-with-reduced-data branch
-    (etl.js:266-274). ``>=`` (not ``>``) matches etl.js:269.
-    """
-    before, after = df_before.count(), df_after.count()
-    loss = loss_report(before, after)
-    if loss >= threshold_pct:
-        raise DataLossExceeded(
-            f"data loss {loss:.2f}% (rows {before}→{after}) >= threshold {threshold_pct}%"
-        )
-    return before, after, loss
 
 
 def validate_not_null(
@@ -116,65 +70,3 @@ def filter_by_quantile(
     else:
         joined = df.crossJoin(F.broadcast(df.agg(thr)))
     return joined.where(F.col(score_col) >= F.col("_thr")).drop("_thr")
-
-
-def winsorize(
-    df: DataFrame,
-    col: str,
-    lower_q: float = 0.01,
-    upper_q: float = 0.99,
-    keys: Sequence[str] | None = None,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Clip ``col`` to its (per-``keys``) exact [lower_q, upper_q]
-    quantiles — tail-robust score normalization before thresholding or
-    averaging (a handful of pathological documents otherwise drag any
-    mean-based gate). Same scale shape as :func:`filter_by_quantile`:
-    ONE per-key aggregate for both bounds, broadcast back onto the scan;
-    the data never shuffles."""
-    keys = list(keys or [])
-    aggs = [
-        F.percentile(F.col(col), F.lit(lower_q)).alias("_lo"),
-        F.percentile(F.col(col), F.lit(upper_q)).alias("_hi"),
-    ]
-    bounds = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
-    joined = df.join(F.broadcast(bounds), keys) if keys else df.crossJoin(
-        F.broadcast(bounds)
-    )
-    clipped = F.least(F.greatest(F.col(col), F.col("_lo")), F.col("_hi"))
-    return joined.withColumn(out_col or col, clipped).drop("_lo", "_hi")
-
-
-def mad_outliers(
-    df: DataFrame,
-    col: str,
-    k: float = 3.0,
-    keys: Sequence[str] | None = None,
-    flag_col: str = "is_outlier",
-) -> DataFrame:
-    """Flag rows where ``|x - median| > k * MAD`` (median absolute
-    deviation) per ``keys`` group — the robust outlier rule (median/MAD
-    shrug off the very outliers that poison mean/stddev z-scores; the
-    classic k=3 is ≈ 4.5σ under normality). Two bounded aggregates
-    (median, then MAD around it), both broadcast back; rows where MAD=0
-    (over half the group identical) flag only exact deviants
-    (|x-med| > 0). Returns ``df`` + boolean ``flag_col``."""
-    keys = list(keys or [])
-    med_agg = F.percentile(F.col(col), F.lit(0.5)).alias("_med")
-    med = df.groupBy(*keys).agg(med_agg) if keys else df.agg(med_agg)
-    with_med = df.join(F.broadcast(med), keys) if keys else df.crossJoin(
-        F.broadcast(med)
-    )
-    dev = F.abs(F.col(col) - F.col("_med"))
-    mad_agg = F.percentile(dev, F.lit(0.5)).alias("_mad")
-    mad = (
-        with_med.groupBy(*keys).agg(mad_agg) if keys else with_med.agg(mad_agg)
-    )
-    full = (
-        with_med.join(F.broadcast(mad), keys)
-        if keys
-        else with_med.crossJoin(F.broadcast(mad))
-    )
-    return full.withColumn(
-        flag_col, F.abs(F.col(col) - F.col("_med")) > F.lit(k) * F.col("_mad")
-    ).drop("_med", "_mad")

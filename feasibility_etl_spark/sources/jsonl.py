@@ -44,8 +44,7 @@ def read_jsonl(
     every schema field null and the raw line in ``_corrupt_record``),
     DROPMALFORMED (silently dropped), FAILFAST (raise on first bad
     line). With ``keep_corrupt_col`` the corrupt column stays in the
-    output (otherwise rows are returned schema-shaped and the caller
-    uses :func:`split_corrupt` for the isolate pattern).
+    output (otherwise rows are returned schema-shaped).
     """
     if keep_corrupt_col:
         # the native JSON source refuses plans that project ONLY the
@@ -74,15 +73,6 @@ def read_jsonl(
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.json(path)
-
-
-def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """E-ISOLATE for file ingest: (clean rows schema-shaped, corrupt
-    rows as ``(_corrupt_record)``) from a PERMISSIVE read done with
-    ``keep_corrupt_col=True``."""
-    clean = df.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    bad = df.where(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
-    return clean, bad
 
 
 def write_jsonl(

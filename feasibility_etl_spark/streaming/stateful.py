@@ -106,8 +106,7 @@ def sessionize_stream(
     Reference parity note: the reference engine has no streaming tier at
     all (BASELINE.md); this extends the engine's streaming surface the way
     a training-data ingest pipeline needs (bounded-state sessionization of
-    event logs). See ``sessionize_stream_tws`` for the Spark-4
-    transformWithState formulation of the same operator.
+    event logs).
     """
     gap_ms = int(gap_seconds * 1000)
 
@@ -151,103 +150,6 @@ def sessionize_stream(
             stateStructType="start_ms long, end_ms long, n long",
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def sessionize_stream_tws(
-    df: DataFrame,
-    key_col: str = "key",
-    ts_col: str = "ts",
-    gap_seconds: float = 60.0,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """``sessionize_stream`` on Spark 4's arbitrary-state API
-    (``transformWithStateInPandas``) — the forward-looking formulation:
-    explicit named value state plus first-class re-armable timers
-    (``registerTimer``/``handleExpiredTimer``) instead of the single
-    implicit timeout ``applyInPandasWithState`` allows per key, and
-    composable with additional list/map state without widening one struct.
-
-    Environment gate (honest limitation, like the multimodal codec stubs):
-    the TWS state-server protocol needs ``google.protobuf``, which is not
-    installed in this container and installs are forbidden — so this
-    variant is import-gated and its test skips without protobuf. The
-    runnable, fully-tested sessionizer is ``sessionize_stream``; semantics
-    are identical (tests pin the applyInPandasWithState variant; this one
-    mirrors it line-for-line on the TWS API).
-
-    Requires the RocksDB state-store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``) — transformWithState is not
-    supported on the default HDFS-backed store.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover — env-dependent
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf (absent in "
-            "this container); use sessionize_stream instead"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    gap_ms = int(gap_seconds * 1000)
-
-    class _Sessionizer(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState(
-                "session", "start_ms long, end_ms long, n long"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            prev = self._state.get() if self._state.exists() else None
-            start, end, n = prev if prev is not None else (None, None, 0)
-            for pdf in rows:
-                # pandas datetime64[ns] → epoch ms (session tz is UTC)
-                ts_ms = pdf[ts_col].astype("int64") // 1_000_000
-                lo, hi = int(ts_ms.min()), int(ts_ms.max())
-                start = lo if start is None else min(start, lo)
-                end = hi if end is None else max(end, hi)
-                n += len(pdf)
-            self._state.update((start, end, n))
-            # re-arm: exactly one live timer per key, at last_event + gap
-            # (clamped past the watermark — same late-replay rule as the
-            # applyInPandasWithState variant)
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(
-                max(end + gap_ms, timer_values.getCurrentWatermarkInMs() + 1)
-            )
-            return iter(())
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            import pandas as pd
-
-            if not self._state.exists():
-                return
-            start, end, n = self._state.get()
-            self._state.clear()
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "session_start": [pd.Timestamp(start, unit="ms")],
-                    "session_end": [pd.Timestamp(end, unit="ms")],
-                    "n_events": [n],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            _Sessionizer(),
-            outputStructType=SESSIONIZE_OUTPUT,
-            outputMode="append",
-            timeMode="eventTime",
         )
     )
 

@@ -95,7 +95,7 @@ def compact_small_files(
     fewer than ``min_files`` files or fewer files than the target count.
 
     ``sort_cols`` restores a clustering order while rewriting (e.g. the
-    z-order key of a ``write_zordered`` table, so compaction preserves
+    z-order key of a z-ordered table, so compaction preserves
     its file-level data skipping): range-repartition + sort-within, one
     shuffle instead of ``coalesce``'s none.
 

@@ -302,45 +302,3 @@ def audit_dim_collisions(
             "racing lookup_or_insert from the same base dim?): "
             + " | ".join(parts)
         )
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Hive-style partitioned parquet write (``path/col=value/...``).
-
-    The storage-layout half of scan pruning: a reader filtering on a
-    partition column touches only matching directories (PartitionFilters in
-    the scan node — asserted in tests), so a date-ranged query over years of
-    events reads days, not the table. Choose low-cardinality, always-
-    filtered columns (date, source); high-cardinality partitioning makes a
-    small-files problem instead.
-    """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def overwrite_partitions(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-) -> None:
-    """Dynamic partition overwrite: replace ONLY the hive partitions
-    present in ``df``, leaving every other partition untouched — the
-    incremental-job primitive (rerun yesterday's load without nuking the
-    table; plain ``mode("overwrite")`` + partitionBy deletes EVERYTHING
-    first, the classic production incident). Implemented with a scoped
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` so the session
-    default (static — the safe-by-noisy-failure setting for full
-    rewrites) is restored afterwards. Idempotent under retry: a replayed
-    job rewrites the same partitions to the same content."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "STATIC")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set(key, prev)

@@ -1,13 +1,13 @@
-"""SCD2 dimension history: validity-interval versions + point-in-time reads.
+"""SCD2 dimension history: validity-interval versions.
 
 The reference's dimensions are overwrite-in-place (schema.sql:105-134 keeps
 exactly one row per natural key), so a fact row joined later sees the dim's
 *latest* attributes — history is lost. SCD Type 2 keeps every version as a
 ``[valid_from, valid_to)`` interval row; the writer closes the open interval
-when a tracked attribute changes and opens a new one, and reads resolve a
+when a tracked attribute changes and opens a new one, so a read can resolve a
 dimension *as of a timestamp* instead of "current".
 
-Everything here is set-oriented and single-shuffle-per-key:
+The fold is set-oriented and single-shuffle-per-key:
 
 - :func:`scd2_apply` folds a batch of (key, attrs, effective_ts) changes
   into an existing history. It handles **many versions per key per batch**
@@ -16,11 +16,6 @@ Everything here is set-oriented and single-shuffle-per-key:
   ignores late rows at or before the open version's start. One shuffle on
   the natural key for the sequencing window, one broadcast-sized join
   against the current rows; never a driver loop.
-- :func:`scd2_snapshot` is the dimension as of one instant (a filter).
-- :func:`scd2_enrich` attaches the version in effect at each fact row's own
-  timestamp via the union + carry-forward :func:`asof_join` (one shuffle,
-  no interval explosion) — the point-in-time-correct FK resolution a
-  feature/training pipeline needs to avoid label leakage.
 
 Version surrogate ids are ``xxhash64(natural_key, valid_from)``: stateless
 and deterministic (same posture as ``lookup_or_insert(id_strategy='hash')``),
@@ -30,13 +25,10 @@ so re-applying the same batch yields byte-identical history (idempotent).
 from __future__ import annotations
 
 from collections.abc import Sequence
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from ..operators.joins import asof_join
 
 _META = ("valid_from", "valid_to", "is_current")
 
@@ -134,115 +126,3 @@ def scd2_apply(
         *tracked,
         *_META,
     )
-
-
-def scd2_snapshot(hist: DataFrame, as_of) -> DataFrame:
-    """The dimension as of one instant: rows whose interval covers ``as_of``
-    (``valid_from <= as_of < valid_to``, open intervals unbounded). A pure
-    filter — pushes down to the parquet scan when history is stored
-    partitioned/sorted on the interval columns."""
-    ts = F.lit(as_of).cast("timestamp")
-    return hist.where(
-        (F.col("valid_from") <= ts)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > ts))
-    )
-
-
-def scd2_enrich(
-    fact: DataFrame,
-    hist: DataFrame,
-    on: str,
-    ts_col: str = "ts",
-    right_prefix: str = "dim_",
-) -> DataFrame:
-    """Point-in-time join: each fact row gets the dimension version that was
-    in effect at its own timestamp (the as-of read; facts before a key's
-    first version get nulls). Versions are keyed by ``valid_from``, so this
-    is exactly the backward :func:`asof_join` — one shuffle on the key, no
-    per-interval row explosion."""
-    versions = hist.drop("valid_to", "is_current")
-    return asof_join(
-        fact,
-        versions,
-        on=on,
-        left_ts=ts_col,
-        right_ts="valid_from",
-        right_prefix=right_prefix,
-    )
-
-
-@dataclass(frozen=True)
-class Scd2DimSpec:
-    """A history-tracked dimension in the denormalizing writer.
-
-    ``wide_key`` is the wide-frame column holding the natural key;
-    ``tracked`` are the wide-frame attribute columns whose changes open new
-    versions. The fact keeps ``fk_col`` = the version surrogate in effect
-    at the fact row's own timestamp. One spec per role; role-playing the
-    same history twice means two specs sharing a pre-updated ``hist`` (pass
-    the same frame, update it once upstream).
-    """
-
-    name: str
-    wide_key: str
-    natural_key: str
-    tracked: tuple[str, ...] = field(default_factory=tuple)
-    fk_col: str = "fk"
-    id_col: str = "version_sk"
-
-
-@dataclass
-class PitResult:
-    fact: DataFrame
-    hists: dict[str, DataFrame]
-
-
-def write_denormalized_scd2(
-    wide: DataFrame,
-    specs: list[Scd2DimSpec],
-    hists: dict[str, DataFrame | None],
-    ts_col: str = "ts",
-) -> PitResult:
-    """Decompose a denormalized frame into fact + SCD2 dim histories (pure,
-    no I/O — the history-tracking twin of ``write_denormalized``).
-
-    Per spec: the wide frame's (key, tracked, ts) observations fold into
-    the dimension's history via :func:`scd2_apply`, then every fact row
-    resolves ``fk_col`` to the version in effect AT ITS OWN event time via
-    :func:`scd2_enrich` — never the latest version, so replaying old facts
-    yields the FKs they had then (point-in-time correctness), and a later
-    attribute change never rewrites an already-written fact. Natural-key
-    and tracked columns leave the fact (they live in the history).
-    """
-    out_hists: dict[str, DataFrame] = {}
-    fact = wide
-    for spec in specs:
-        tracked = list(spec.tracked)
-        incoming = wide.select(
-            F.col(spec.wide_key).alias(spec.natural_key),
-            *[F.col(c) for c in tracked],
-            F.col(ts_col),
-        ).where(F.col(spec.wide_key).isNotNull())
-        hist = scd2_apply(
-            incoming,
-            spec.natural_key,
-            tracked,
-            ts_col=ts_col,
-            hist=hists.get(spec.name),
-            id_col=spec.id_col,
-        )
-        out_hists[spec.name] = hist
-        enriched = scd2_enrich(
-            fact.withColumnRenamed(spec.wide_key, spec.natural_key),
-            hist,
-            on=spec.natural_key,
-            ts_col=ts_col,
-            right_prefix="_pit_",
-        )
-        keep = [
-            c
-            for c in enriched.columns
-            if not c.startswith("_pit_") and c != spec.natural_key and c not in tracked
-        ]
-        fact = enriched.select(*keep, F.col(f"_pit_{spec.id_col}").alias(spec.fk_col))
-    return PitResult(fact=fact, hists=out_hists)

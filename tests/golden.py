@@ -5,12 +5,16 @@ These are the exact denormalized rows the reference inserts through
 (they are arbitrary test values, not derived metrics). 4 distinct users
 role-played as reviewer/reporter + 4 distinct projects pin the
 lookup-or-insert and double role-play behavior.
+
+Also the pure-Python reference models that more than one test compares
+the engine's Python-stage operators against.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 WIDE_SCHEMA = T.StructType(
@@ -86,3 +90,43 @@ GOLDEN_ROWS = [
 
 def golden_wide_df(spark):
     return spark.createDataFrame(GOLDEN_ROWS, WIDE_SCHEMA)
+
+
+def py_winnow(text: str, k: int = 8, w: int = 4) -> set[int]:
+    """Direct Python model of SWA winnowing with the engine's constants
+    (text.py WINNOW_BASE/WINNOW_MOD, rolling hash Σ code·B^j mod M)."""
+    B, M = 31, 1_000_000_007
+    s = text.lower()
+    if len(s) < k:
+        return set()
+    pows = [pow(B, j, M) for j in range(k)]
+    hashes = [
+        sum(ord(s[i + j]) * pows[j] for j in range(k)) % M
+        for i in range(len(s) - k + 1)
+    ]
+    if len(hashes) < w:
+        return {min(hashes)}
+    return {min(hashes[i : i + w]) for i in range(len(hashes) - w + 1)}
+
+
+def py_winnow_rows(rows) -> set[tuple[int, int]]:
+    """``(doc_id, fp)`` set of :func:`py_winnow` over ``(doc_id, text)``
+    rows; null text has no fingerprints."""
+    return {(i, fp) for i, t in rows if t is not None for fp in py_winnow(t)}
+
+
+def encode_text_model(docs, encode_word) -> dict[int, tuple[str, int]]:
+    """Text-grain tokenizer reference: ``{doc_id: (pieces joined by ' ',
+    n_pieces)}``. Words come from Spark's own ``tokens(lower(trim(text)))``
+    (JVM lowering, Java's ASCII ``\\s``), each encoded on the driver by
+    ``encode_word`` — the per-word encoder the Arrow stage applies after
+    its Python-side whitespace split."""
+    from feasibility_etl_spark.operators.text import tokens
+
+    out = {}
+    for r in docs.select(
+        "doc_id", tokens(F.lower(F.trim("text"))).alias("words")
+    ).collect():
+        pieces = [p for w in r.words or [] for p in encode_word(w)]
+        out[r.doc_id] = (" ".join(pieces), len(pieces))
+    return out

@@ -1,5 +1,5 @@
 """Bloom filter sketches: no false negatives, bounded false positives,
-shard-merge == direct build, and the decontamination prefilter's
+keyed builds, and the decontamination prefilter's
 bit-identical-output contract vs the exact operator."""
 
 import pytest
@@ -10,7 +10,6 @@ from feasibility_etl_spark.operators.sketches import (
     bloom_build,
     bloom_decontaminate,
     bloom_maybe_contains,
-    bloom_merge,
 )
 
 from conftest import SF0001
@@ -47,13 +46,6 @@ def test_false_positive_rate_bounded(spark, members):
     # theory at n=400, m=16384, k=5: (1 - e^(-kn/m))^k ≈ 2e-5; allow 50x
     assert fpr < 1e-3
 
-
-def test_merge_equals_direct(spark, members):
-    shards = members.withColumn("shard", F.crc32("v") % 4)
-    per_shard = bloom_build(shards, "v", keys=["shard"], m_bits=M, n_hashes=K)
-    merged = bloom_merge(per_shard, keys=None)
-    direct = bloom_build(members, "v", m_bits=M, n_hashes=K)
-    assert merged.collect()[0].bloom == direct.collect()[0].bloom
 
 
 def test_keyed_build_and_word_width(spark, members):

@@ -1,6 +1,7 @@
-"""BPE tokenizer: training parity vs a hand-derived example and a naive
-reference, classic-encode vs rank-order-fold equivalence (the oracle's
-formulation), and distributed determinism."""
+"""BPE tokenizer: classic-encode vs rank-order-fold equivalence (the
+oracle's formulation) on merges from a naive reference trainer, the frozen
+demo merges' provenance, and the text-grain encoder against a driver-side
+model."""
 
 from __future__ import annotations
 
@@ -9,22 +10,23 @@ from collections import Counter
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from feasibility_etl_spark.operators.bpe import (
     DEMO_MERGES,
     END,
     SEP,
-    bpe_encode,
-    bpe_token_count,
-    bpe_train,
+    bpe_encode_text,
     encode_word,
-    merges_from_word_counts,
 )
+from feasibility_etl_spark.operators.text import tokens
+from golden import encode_text_model
 
 
 def _ref_train(words: list[str], num_merges: int) -> list[tuple[str, str]]:
     """Naive reference trainer: recount pairs from the raw word list each
-    round (no vocab table reuse) — independent of the operator's shape."""
+    round; ties break on the highest count, then the lexicographically
+    smallest pair."""
     seqs = [list(w) + [END] for w in words]
     merges = []
     for _ in range(num_merges):
@@ -58,37 +60,8 @@ def _fold_encode(word: str, merges: list[tuple[str, str]]) -> tuple[str, ...]:
     return tuple(s.strip(SEP).split(SEP + SEP))
 
 
-def test_train_matches_sennrich_hand_example():
-    # word counts low:5 lower:2 newest:6 widest:3 — pair math by hand:
-    # (e,s)=9 ties (s,t),(t,</w>) -> lexicographic; then (es,t); then
-    # (est,</w>) reaches 9 alone.
-    words = ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
-    vocab = Counter(tuple(w) + (END,) for w in words)
-    merges = merges_from_word_counts(dict(vocab), 3)
-    assert merges == [("e", "s"), ("es", "t"), ("est", "</w>")]
-
-
-def test_train_matches_reference_on_corpus(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat"),
-            (2, "the cats chatter on the mats"),
-            (3, "a THE the  matter of chat"),
-        ],
-        "doc_id long, text string",
-    )
-    words = []
-    for _, t in docs.collect():
-        words += t.lower().split()
-    assert bpe_train(docs, 12) == _ref_train(words, 12)
-
-
-def test_classic_encode_equals_rank_order_fold_on_trained_merges(spark):
-    docs = spark.createDataFrame(
-        [(1, "lower lowest newest news flow slow slower")],
-        "doc_id long, text string",
-    )
-    merges = bpe_train(docs, 15)
+def test_classic_encode_equals_rank_order_fold_on_trained_merges():
+    merges = _ref_train("lower lowest newest news flow slow slower".split(), 15)
     ranks = {p: i for i, p in enumerate(merges)}
     for w in ["lower", "newest", "slowest", "flown", "unseen", "x"]:
         assert encode_word(w, ranks) == _fold_encode(w, merges), w
@@ -104,8 +77,7 @@ def test_classic_encode_equals_rank_order_fold_on_trained_merges(spark):
 def test_fold_equivalence_property(words, num_merges):
     """For ANY trained merge list, classic == rank-order fold — the
     invariant the DuckDB oracle's replace-chain rests on."""
-    vocab = Counter(tuple(w) + (END,) for w in words)
-    merges = merges_from_word_counts(dict(vocab), num_merges)
+    merges = _ref_train(words, num_merges)
     ranks = {p: i for i, p in enumerate(merges)}
     for w in set(words):
         assert encode_word(w, ranks) == _fold_encode(w, merges)
@@ -123,37 +95,30 @@ def test_encode_dataframe_and_count(spark):
         [(1, "  The Scan COLUMN  "), (2, "scan scan"), (3, "")],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r for r in bpe_encode(docs, DEMO_MERGES).collect()}
+    out = {r.doc_id: r for r in bpe_encode_text(docs, DEMO_MERGES).collect()}
     ranks = {p: i for i, p in enumerate(DEMO_MERGES)}
     expect1 = list(encode_word("the", ranks)) + list(
         encode_word("scan", ranks)
     ) + list(encode_word("column", ranks))
-    assert out[1].bpe_tokens == expect1
+    assert out[1].bpe_text == " ".join(expect1)
     assert out[1].n_bpe_tokens == len(expect1)
-    assert out[2].bpe_tokens == list(encode_word("scan", ranks)) * 2
-    assert out[3].bpe_tokens == [] and out[3].n_bpe_tokens == 0
-    counts = {r.doc_id: r.n_bpe_tokens for r in
-              bpe_token_count(docs, DEMO_MERGES).collect()}
-    assert counts == {d: r.n_bpe_tokens for d, r in out.items()}
+    assert out[2].bpe_text == " ".join(encode_word("scan", ranks) * 2)
+    assert out[3].bpe_text == "" and out[3].n_bpe_tokens == 0
 
 
 def test_encode_text_matches_array_join_of_encode(spark):
-    """bpe_encode_text ≡ array_join(bpe_encode, ' ') row-for-row — the
-    equivalence the r12 text-grain serving path (q_bpe_encode,
-    q_pipe_corpus) rests on. Fixtures stress the whitespace surface where
-    the Python-side tokenizer could diverge from Spark's split: tabs,
-    vertical tab / form feed, CRLF, NBSP (NOT a separator — Java ``\\s``
-    is ASCII-only), all-whitespace, empty, null, and unicode lowering
-    (done JVM-side in both paths)."""
-    from pyspark.sql import functions as F
-
-    from feasibility_etl_spark.operators.bpe import bpe_encode_text
-
+    """bpe_encode_text ≡ the space-joined per-word encode of Spark's own
+    tokens, row-for-row — the equivalence the text-grain serving path
+    (q_bpe_encode, q_pipe_corpus) rests on. Fixtures stress the
+    whitespace surface where the Python-side tokenizer could diverge from
+    Spark's split: tabs, vertical tab / form feed, CRLF, NBSP (NOT a
+    separator — Java ``\\s`` is ASCII-only), all-whitespace, empty, null,
+    and unicode lowering (done JVM-side in both)."""
     docs = spark.createDataFrame(
         [
             (1, "  The Scan COLUMN  "),
             (2, "tab\tand\x0bvertical\x0cfeeds\r\ncrlf"),
-            (3, "nbsp stays one-token"),
+            (3, "nbsp\u00a0stays one-token"),
             (4, ""),
             (5, "   \t "),
             (6, None),
@@ -161,23 +126,14 @@ def test_encode_text_matches_array_join_of_encode(spark):
         ],
         "doc_id long, text string",
     )
-    via_array = {
-        r.doc_id: (r.bpe_text, r.n)
-        for r in bpe_encode(docs, DEMO_MERGES)
-        .select(
-            "doc_id",
-            F.array_join("bpe_tokens", " ").alias("bpe_text"),
-            F.col("n_bpe_tokens").alias("n"),
-        )
-        .collect()
-    }
+    ranks = {p: i for i, p in enumerate(DEMO_MERGES)}
     direct = {
         r.doc_id: (r.bpe_text, r.n_bpe_tokens)
         for r in bpe_encode_text(docs, DEMO_MERGES).collect()
     }
-    assert direct == via_array
-    # NBSP really stayed inside the token (would split under unicode \s)
-    assert " " in direct[3][0]
+    assert direct == encode_text_model(docs, lambda w: encode_word(w, ranks))
+    # NBSP really stayed inside the token (would split under unicode \\s)
+    assert "\u00a0" in direct[3][0]
 
 
 def test_encode_deterministic_across_partitionings(spark):
@@ -186,29 +142,26 @@ def test_encode_deterministic_across_partitionings(spark):
         "doc_id long, text string",
     )
     one = sorted(
-        (r.doc_id, tuple(r.bpe_tokens))
-        for r in bpe_encode(docs.coalesce(1), DEMO_MERGES).collect()
+        (r.doc_id, r.bpe_text)
+        for r in bpe_encode_text(docs.coalesce(1), DEMO_MERGES).collect()
     )
     many = sorted(
-        (r.doc_id, tuple(r.bpe_tokens))
-        for r in bpe_encode(docs.repartition(7), DEMO_MERGES).collect()
+        (r.doc_id, r.bpe_text)
+        for r in bpe_encode_text(docs.repartition(7), DEMO_MERGES).collect()
     )
     assert one == many
 
 
-def test_train_deterministic_across_partitionings(spark):
-    rows = [(i, "alpha beta gamma delta " * (i % 3 + 1)) for i in range(30)]
-    a = bpe_train(spark.createDataFrame(rows, "doc_id long, text string"), 8)
-    b = bpe_train(
-        spark.createDataFrame(rows, "doc_id long, text string").repartition(5), 8
-    )
-    assert a == b
-
-
 def test_demo_merges_match_training_provenance(spark):
-    """DEMO_MERGES is frozen output of bpe_train on the sf0.001 corpus —
-    re-train and compare so the constant can never drift from the code."""
+    """DEMO_MERGES is frozen BPE training output on the sf0.001 corpus —
+    re-train with the reference trainer over the encoder's own word
+    stream so the constant can never drift from what it claims to be."""
     from feasibility_etl_spark.sources.catalog import load
 
     docs = load(spark, "/root/testdata/sf0.001", "documents")
-    assert bpe_train(docs, num_merges=24) == DEMO_MERGES
+    words = [
+        r.w for r in docs.select(
+            F.explode(tokens(F.lower(F.trim("text")))).alias("w")
+        ).collect()
+    ]
+    assert _ref_train(words, 24) == DEMO_MERGES

@@ -1,119 +1,7 @@
-"""Bucketed co-located joins: the pre-paid-shuffle claim, asserted on plans.
-
-The point of `write_bucketed` is physical: a join between two tables
-bucketed on the join key must not re-shuffle either side. These tests pin
-that with plan inspection (no Exchange above the bucketed scans), plus
-result correctness vs the plain join.
-"""
+"""Small-file compaction of a parquet directory: a lossless rewrite into
+fewer files, with and without a clustering sort."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from feasibility_etl_spark.sources.bucketed import read_bucketed, write_bucketed
-from feasibility_etl_spark.sources.catalog import load
-
-from conftest import SF0001
-
-
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_bucketed_join_skips_shuffle_and_matches_plain(spark, tmp_path):
-    orders = load(spark, SF0001, "orders")
-    lineitem = load(spark, SF0001, "lineitem")
-    write_bucketed(
-        orders, "b_orders", ["o_orderkey"], n_buckets=4,
-        sort_cols=["o_orderkey"], path=str(tmp_path / "b_orders"),
-    )
-    write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "b_lineitem", ["o_orderkey"], n_buckets=4,
-        sort_cols=["o_orderkey"], path=str(tmp_path / "b_lineitem"),
-    )
-    try:
-        bo, bl = read_bucketed(spark, "b_orders"), read_bucketed(spark, "b_lineitem")
-        joined = bo.join(bl, "o_orderkey").groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        # hint away broadcast so the co-location (not dim size) is what's tested
-        plan = _physical(
-            bo.hint("merge").join(bl.hint("merge"), "o_orderkey")
-        )
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-
-        want = {
-            (r.o_orderstatus, r.n)
-            for r in orders.join(
-                lineitem, orders["o_orderkey"] == lineitem["l_orderkey"]
-            ).groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        got = {(r.o_orderstatus, r.n) for r in joined.collect()}
-        assert got == want
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_bucketed_groupby_reuses_layout(spark, tmp_path):
-    lineitem = load(spark, SF0001, "lineitem")
-    write_bucketed(
-        lineitem, "b_li2", ["l_orderkey"], n_buckets=4, path=str(tmp_path / "b_li2")
-    )
-    try:
-        bl = read_bucketed(spark, "b_li2")
-        plan = _physical(bl.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q")))
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_li2")
-
-
-def test_zorder_narrows_per_file_ranges_on_both_dims(spark, tmp_path):
-    """Z-order layout: per-file min/max windows shrink on BOTH columns, so
-    file-level parquet stats can prune on either predicate; a plain
-    single-key sort only narrows its own column."""
-    from pyspark.sql import functions as F
-
-    from feasibility_etl_spark.sources.bucketed import write_zordered
-    from feasibility_etl_spark.sources.catalog import load
-
-    from conftest import SF001
-
-    events = load(spark, SF001, "events").select("event_id", "user_id", "value")
-    zpath = str(tmp_path / "z")
-    npath = str(tmp_path / "naive")
-    write_zordered(events, zpath, ["user_id", "value"], n_files=16)
-    (
-        events.repartitionByRange(16, "user_id")
-        .sortWithinPartitions("user_id")
-        .write.mode("overwrite")
-        .parquet(npath)
-    )
-
-    def avg_range_frac(path, col):
-        df = spark.read.parquet(path)
-        lo, hi = df.select(F.min(col), F.max(col)).first()
-        per_file = (
-            df.groupBy(F.input_file_name())
-            .agg((F.max(col) - F.min(col)).alias("span"))
-            .select(F.avg("span"))
-            .first()[0]
-        )
-        return per_file / float(hi - lo)
-
-    # z-order: both dims narrow (16 files ~ 4x4 grid -> ~1/4 per dim; allow slack)
-    z_user, z_val = avg_range_frac(zpath, "user_id"), avg_range_frac(zpath, "value")
-    assert z_user < 0.5 and z_val < 0.5
-    # naive sort: its own key is narrow but the other dim doesn't narrow —
-    # z-order must beat it decisively there (value is skewed, so the naive
-    # per-file span fraction sits well under 1.0 on its own)
-    assert avg_range_frac(npath, "user_id") < 0.15
-    assert avg_range_frac(npath, "value") > 2 * z_val
-    # layout-only transform: same rows, same schema
-    assert spark.read.parquet(zpath).count() == events.count()
-    assert set(spark.read.parquet(zpath).columns) == set(events.columns)
 
 
 def test_compact_parquet_merges_small_files(spark, tmp_path):

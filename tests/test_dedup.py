@@ -611,10 +611,7 @@ class TestHotBucketCapAndComponents:
         return spark.createDataFrame(rows, "doc_id long, text string")
 
     def test_cap_drops_hot_buckets_keeps_cool_ones(self, spark):
-        from feasibility_etl_spark.operators.dedup import (
-            minhash_candidates,
-            minhash_hot_buckets,
-        )
+        from feasibility_etl_spark.operators.dedup import minhash_candidates
 
         df = self._corpus(spark)
         uncapped = minhash_candidates(df)
@@ -631,14 +628,6 @@ class TestHotBucketCapAndComponents:
         again = {(r.id_a, r.id_b) for r in minhash_candidates(
             df, max_bucket_size=10).collect()}
         assert again == {(r.id_a, r.id_b) for r in capped}
-        # the audit names exactly the dropped buckets with their pair mass
-        audit = minhash_hot_buckets(df, max_bucket_size=10).collect()
-        assert len(audit) >= 8  # the clique is hot in all 8 bands
-        assert all(r.bucket_size == self.N_CLIQUE for r in audit
-                   if r.bucket_size > 50)
-        clique_rows = [r for r in audit if r.bucket_size == self.N_CLIQUE]
-        assert all(r.n_dropped_pairs == 1770 for r in clique_rows)
-        assert len(clique_rows) == 8
 
     def test_star_edges_are_linear_in_bucket_size(self, spark):
         from feasibility_etl_spark.operators.dedup import (
@@ -981,47 +970,3 @@ def test_blocked_jaccard_prefix_filter_matches_bruteforce(spark):
         for k, v in want.items():
             assert abs(got[k] - v) < 1e-12
 
-
-def test_tune_minhash_bands_scurve_optimum():
-    """The tuner's pick must (a) be an exact divisor pair, (b) reproduce
-    the repo's default 32/8 geometry at its design threshold 0.5, (c) be
-    the true argmin over an independently-integrated error, and (d) move
-    rows-per-band monotonically with the threshold (steeper S-curve
-    further right)."""
-    import numpy as np
-    import pytest
-
-    from feasibility_etl_spark.operators.dedup import tune_minhash_bands
-
-    def true_err(b, r, t, wfp=1.0, wfn=1.0):
-        s = np.linspace(0.0005, 0.9995, 1000)
-        p = 1.0 - (1.0 - s**r) ** b
-        return (wfp * p[s < t].sum() + wfn * (1 - p[s >= t]).sum()) / 1000
-
-    for t, n in ((0.3, 32), (0.5, 32), (0.5, 128), (0.8, 32), (0.8, 64)):
-        b, r = tune_minhash_bands(t, n)
-        assert b * r == n, (t, n, b, r)
-        exhaustive = min(
-            ((true_err(n // rr, rr, t), n // rr, rr) for rr in range(1, n + 1) if n % rr == 0),
-        )
-        assert (b, r) == (exhaustive[1], exhaustive[2]), (t, n, b, r, exhaustive)
-
-    # the repo's own default geometry falls out at its design threshold
-    assert tune_minhash_bands(0.5, 32) == (8, 4)
-
-    # monotone: a higher threshold never wants FEWER rows per band
-    prev_r = 0
-    for t in (0.1, 0.3, 0.5, 0.7, 0.9):
-        _, r = tune_minhash_bands(t, 64)
-        assert r >= prev_r, (t, r, prev_r)
-        prev_r = r
-
-    # fp_weight pressure pushes toward a steeper curve (rows up or equal)
-    _, r_bal = tune_minhash_bands(0.5, 64)
-    _, r_fp = tune_minhash_bands(0.5, 64, fp_weight=5.0)
-    assert r_fp >= r_bal
-
-    with pytest.raises(ValueError):
-        tune_minhash_bands(0.0)
-    with pytest.raises(ValueError):
-        tune_minhash_bands(1.0)

@@ -14,7 +14,6 @@ from feasibility_etl_spark.sources.catalog import load
 from feasibility_etl_spark.sources.jsonl import (
     CORRUPT_COL,
     read_jsonl,
-    split_corrupt,
     write_jsonl,
 )
 
@@ -51,7 +50,8 @@ def test_corrupt_isolation(spark, tmpdir):
         f.write("this is not json at all\n")
         f.write('{"doc_id": 2, "text": "fine", "lang": "en", "source": "s", "n_chars": 4}\n')
     df = read_jsonl(spark, path, DOC_SCHEMA, keep_corrupt_col=True)
-    clean, bad = split_corrupt(df)
+    clean = df.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+    bad = df.where(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
     assert sorted(r.doc_id for r in clean.collect()) == [1, 2]
     assert [r[0] for r in bad.collect()] == ["this is not json at all"]
     # DROPMALFORMED silently drops

@@ -110,23 +110,3 @@ def test_avg_logp_derives_from_exact_sum(spark, corpus):
         assert r.avg_logp == r.logp_e9 / 1e9 / r.n_trans
         assert r.avg_logp < 0  # log10 of probabilities
 
-
-def test_merged_shard_models_equal_whole_corpus_model(spark, corpus):
-    from feasibility_etl_spark.operators.lm import merge_lms
-
-    whole = train_backoff_lm(corpus)
-    merged = merge_lms(
-        train_backoff_lm(corpus.where("doc_id % 2 = 0")),
-        train_backoff_lm(corpus.where("doc_id % 2 = 1")),
-    )
-    assert sorted(map(tuple, whole.unigrams.collect())) == sorted(
-        map(tuple, merged.unigrams.collect())
-    )
-    assert sorted(map(tuple, whole.bigrams.collect())) == sorted(
-        map(tuple, merged.bigrams.collect())
-    )
-    assert whole.n_tokens.collect() == merged.n_tokens.collect()
-    # and scoring through the merged model is identical
-    a = sorted(map(tuple, score_stupid_backoff(corpus, whole).collect()))
-    b = sorted(map(tuple, score_stupid_backoff(corpus, merged).collect()))
-    assert a == b

@@ -169,8 +169,7 @@ MAX_EXCHANGES = {
                           # chain's exchanges still execute, inside the
                           # construction-time cut job (attributed by
                           # bench.py's _build_eager_components); composed
-                          # action 9.7–10.0 → 1.5–1.8 s (interleaved A/B,
-                          # tools/ab_pipe_cut2_r12.py)
+                          # action 9.7–10.0 → 1.5–1.8 s (interleaved A/B)
     "TEXT-GOPHER": 0,     # named Gopher rule battery: map-only integer
                           # cross-multiplications, fuses into the scan
     "CLS-SCORE": 8,       # NBSVM train: 2 count aggs over ONE feature

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from feasibility_etl_spark.functions.scalar import delta_pair, hrs_to_sec, pct_diff
 from feasibility_etl_spark.operators.dedup import jaccard, shingles
 from feasibility_etl_spark.operators.text import tokens
+from golden import py_winnow_rows
 
 SETTINGS = settings(
     max_examples=20, deadline=None, suppress_health_check=[HealthCheck.too_slow]
@@ -379,23 +380,6 @@ def test_substring_dedup_matches_python_model(spark, texts):
     assert got == want
 
 
-def _py_winnow(text: str, k: int = 8, w: int = 4) -> set[int]:
-    """Direct Python model of SWA winnowing with the engine's constants
-    (text.py WINNOW_BASE/WINNOW_MOD, rolling hash Σ code·B^j mod M)."""
-    B, M = 31, 1_000_000_007
-    s = text.lower()
-    if len(s) < k:
-        return set()
-    pows = [pow(B, j, M) for j in range(k)]
-    hashes = [
-        sum(ord(s[i + j]) * pows[j] for j in range(k)) % M
-        for i in range(len(s) - k + 1)
-    ]
-    if len(hashes) < w:
-        return {min(hashes)}
-    return {min(hashes[i : i + w]) for i in range(len(hashes) - w + 1)}
-
-
 # full codepoint range INCLUDING astral planes (Spark's split('')/ascii
 # and Python's ord are both codepoint-based — probed round 8: U+1F600
 # splits to one element, ascii()=128512, length counts it once). Lone
@@ -412,41 +396,33 @@ _uni_text = st.text(
 @SETTINGS
 @given(st.lists(_uni_text, min_size=1, max_size=10))
 def test_winnow_arrow_rows_and_python_model_agree(spark, texts):
-    """The round-7 numpy serving path, the relational twin, and a direct
-    Python model of SWA winnowing produce the same (doc, fp) set over
-    arbitrary unicode — including sub-k docs, sub-window docs, and
-    non-ASCII codepoints (the UTF-32 vs F.ascii parity surface)."""
-    from feasibility_etl_spark.operators.text import (
-        winnow_fingerprints_arrow,
-        winnow_fingerprints_rows,
-    )
+    """The numpy serving path's (doc, fp) rows equal a direct Python model
+    of SWA winnowing over arbitrary unicode — including sub-k docs,
+    sub-window docs, and non-ASCII codepoints (the UTF-32 vs ``ord``
+    parity surface)."""
+    from feasibility_etl_spark.operators.text import winnow_fingerprints_arrow
 
     rows = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    rel = {(r.doc_id, r.fp) for r in winnow_fingerprints_rows(df).collect()}
     arw = {(r.doc_id, r.fp) for r in winnow_fingerprints_arrow(df).collect()}
-    want = {(i, fp) for i, t in rows for fp in _py_winnow(t)}
-    assert arw == rel == want
+    assert arw == py_winnow_rows(rows)
 
 
 def test_winnow_arrow_lone_surrogate_does_not_crash(spark):
     """A lone surrogate (possible via createDataFrame's pickle path;
     impossible through parquet) used to raise UnicodeEncodeError inside
-    the arrow path's utf-32 encode and fail the whole job. With
-    surrogatepass it hashes the surrogate's own codepoint — same value
-    the relational twin's F.ascii produces, so the two paths agree."""
-    from feasibility_etl_spark.operators.text import (
-        winnow_fingerprints_arrow,
-        winnow_fingerprints_rows,
-    )
+    the arrow path's utf-32 encode and fail the whole job. Now the doc
+    hashes like any other: the fingerprints equal the Python model's over
+    the text as Spark stores it."""
+    from feasibility_etl_spark.operators.text import winnow_fingerprints_arrow
 
     df = spark.createDataFrame(
         [(0, "ab\ud800cdefghij"), (1, "plain ascii text here")],
         "doc_id long, text string",
     )
-    rel = {(r.doc_id, r.fp) for r in winnow_fingerprints_rows(df).collect()}
     arw = {(r.doc_id, r.fp) for r in winnow_fingerprints_arrow(df).collect()}
-    assert arw == rel and any(d == 0 for d, _ in arw)
+    stored = [(r.doc_id, r.text) for r in df.collect()]
+    assert arw == py_winnow_rows(stored) and any(d == 0 for d, _ in arw)
 
 
 def _py_blocked_jaccard(rows, threshold: float):

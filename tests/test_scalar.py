@@ -12,7 +12,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from feasibility_etl_spark.functions.scalar import (
-    basic_auth_header,
     delta_pair,
     hrs_to_sec,
     jira_ts,
@@ -69,14 +68,6 @@ def test_hrs_to_sec_null_coalesces_to_zero(spark):
     rows = df.select(hrs_to_sec("h").alias("s")).collect()
     assert [r.s for r in rows] == [0.0, 7200.0, 0.0]
 
-
-def test_basic_auth_header(spark):
-    # "Basic " + base64(user:pass) — helpers.js:30-33
-    df = one(spark, u="user", p="secret")
-    [r] = df.select(basic_auth_header("u", "p").alias("h")).collect()
-    import base64
-
-    assert r.h == "Basic " + base64.b64encode(b"user:secret").decode()
 
 
 def test_jira_ts_parses_wire_format(spark):

@@ -1,4 +1,4 @@
-"""SCD2 history writer: interval maintenance + point-in-time reads."""
+"""SCD2 history writer: interval maintenance, read back as of an instant."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from feasibility_etl_spark.writer.scd2 import scd2_apply, scd2_enrich, scd2_snapshot
+from feasibility_etl_spark.writer.scd2 import scd2_apply
 
 
 def _ts(h, m=0):
@@ -18,6 +18,14 @@ def _hist_rows(hist):
         (r.k, str(r.tier), str(r.valid_from), str(r.valid_to), r.is_current)
         for r in hist.collect()
     )
+
+
+def _as_of(hist, ts):
+    """``{key: tier}`` of the versions whose half-open interval covers ``ts``."""
+    return {
+        r.k: r.tier for r in hist.collect()
+        if r.valid_from <= ts and (r.valid_to is None or ts < r.valid_to)
+    }
 
 
 def _changes(spark, rows):
@@ -44,10 +52,8 @@ def test_scd2_update_closes_old_interval_and_opens_new(spark):
         ("bob", "silver", "2024-01-01 08:00:00", "None", True),
     ]
     # as-of read at an old timestamp sees the old row
-    snap = {r.k: r.tier for r in scd2_snapshot(h1, _ts(10)).collect()}
-    assert snap == {"alice": "gold", "bob": "silver"}
-    snap_now = {r.k: r.tier for r in scd2_snapshot(h1, _ts(13)).collect()}
-    assert snap_now == {"alice": "platinum", "bob": "silver"}
+    assert _as_of(h1, _ts(10)) == {"alice": "gold", "bob": "silver"}
+    assert _as_of(h1, _ts(13)) == {"alice": "platinum", "bob": "silver"}
 
 
 def test_scd2_many_versions_per_batch_and_late_rows(spark):
@@ -91,61 +97,3 @@ def test_scd2_null_attrs_are_versioned_null_safely(spark):
         ("a", "None", "2024-01-01 08:00:00", "2024-01-01 10:00:00", False),
         ("a", "t", "2024-01-01 10:00:00", "None", True),
     ]
-
-
-def test_scd2_enrich_point_in_time_fk_resolution(spark):
-    hist = scd2_apply(
-        _changes(spark, [("alice", "gold", _ts(8)), ("alice", "platinum", _ts(12))]),
-        "k",
-        ["tier"],
-    )
-    facts = spark.createDataFrame(
-        [("alice", _ts(9), 1.0), ("alice", _ts(12), 2.0), ("alice", _ts(7), 3.0)],
-        "k string, ts timestamp, v double",
-    )
-    out = {r.v: (r.dim_tier, r.dim_version_sk is not None) for r in
-           scd2_enrich(facts, hist, on="k").collect()}
-    # fact@9 sees the gold version (not the later platinum one); fact@12 the
-    # new version (inclusive); fact@7 predates history -> nulls
-    assert out == {1.0: ("gold", True), 2.0: ("platinum", True), 3.0: (None, False)}
-
-
-def test_write_denormalized_scd2_point_in_time_fks(spark):
-    from feasibility_etl_spark.writer.scd2 import Scd2DimSpec, write_denormalized_scd2
-
-    spec = Scd2DimSpec(
-        name="actor", wide_key="actor", natural_key="k",
-        tracked=("tier",), fk_col="fk_actor",
-    )
-    wide1 = spark.createDataFrame(
-        [("A", "alice", "gold", _ts(8), 1.0), ("B", "bob", "silver", _ts(8), 2.0)],
-        "key string, actor string, tier string, ts timestamp, v double",
-    )
-    r1 = write_denormalized_scd2(wide1, [spec], {"actor": None})
-    hist1 = r1.hists["actor"]
-    fact1 = {r.key: r.fk_actor for r in r1.fact.collect()}
-    v1 = {r.k: r.version_sk for r in hist1.where("is_current").collect()}
-    assert fact1 == {"A": v1["alice"], "B": v1["bob"]}
-    # dim columns left the fact
-    assert set(r1.fact.columns) == {"key", "ts", "v", "fk_actor"}
-
-    # batch 2: alice changes tier @12; order C lands @13 (new version),
-    # order D replays an old timestamp @9 (must resolve to the OLD version)
-    wide2 = spark.createDataFrame(
-        [("C", "alice", "platinum", _ts(13), 3.0), ("D", "alice", "gold", _ts(9), 4.0),
-         ("E", "alice", "platinum", _ts(12), 5.0)],
-        "key string, actor string, tier string, ts timestamp, v double",
-    )
-    r2 = write_denormalized_scd2(wide2, [spec], {"actor": hist1})
-    hist2 = r2.hists["actor"]
-    by_tier = {(r.k, r.tier): r.version_sk for r in hist2.collect()}
-    fact2 = {r.key: r.fk_actor for r in r2.fact.collect()}
-    # C and E sit at/after the platinum version's start
-    assert fact2["C"] == by_tier[("alice", "platinum")]
-    assert fact2["E"] == by_tier[("alice", "platinum")]
-    # D's event time predates the change -> the gold version, though the
-    # history now has a newer one (no retroactive FK rewrite)
-    assert fact2["D"] == by_tier[("alice", "gold")]
-    # the old interval is closed at the platinum valid_from
-    gold = hist2.where("tier = 'gold'").collect()[0]
-    assert str(gold.valid_to) == "2024-01-01 12:00:00" and not gold.is_current

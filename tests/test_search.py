@@ -1,10 +1,11 @@
-"""BM25 scoring: hand-computed values, determinism, plan shape."""
+"""BM25 scoring, ranked top-k and RRF fusion: hand-computed values,
+determinism, plan shape."""
 
 import math
 
 import pytest
 
-from feasibility_etl_spark.operators.search import bm25_scores, bm25_topk
+from feasibility_etl_spark.operators.search import _ranked_take, bm25_scores
 
 DOCS = [
     (1, "the quick brown fox"),
@@ -55,7 +56,7 @@ def test_bm25_duplicate_and_case_terms_collapse(spark, docs):
 
 
 def test_bm25_topk_order_and_plan(spark, docs):
-    top = bm25_topk(docs, ["quick", "dog"], k=3)
+    top = _ranked_take(bm25_scores(docs, ["quick", "dog"]), "bm25", "doc_id", 3)
     rows = top.collect()
     assert [r.rank for r in rows] == [1, 2, 3]
     assert rows[0].bm25 >= rows[1].bm25 >= rows[2].bm25
@@ -119,54 +120,3 @@ def test_rrf_topk_and_tiebreak(spark):
     assert rows[0].rrf == rows[1].rrf
 
 
-def test_hybrid_topk_end_to_end(spark):
-    from conftest import SF0001
-
-    from feasibility_etl_spark.operators.search import hybrid_topk
-    from feasibility_etl_spark.operators.similarity import cosine_topk
-    from feasibility_etl_spark.sources.catalog import load
-    import pyspark.sql.functions as F
-
-    docs = load(spark, SF0001, "documents")
-    emb = load(spark, SF0001, "embeddings")
-    qv = emb.where(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    fused = hybrid_topk(docs, emb, ["spark", "join", "vector"], qv, k=10, pool=20)
-    rows = fused.collect()
-    assert len(rows) == 10 and [r.rank for r in rows] == list(range(1, 11))
-    # every fused doc came from one of the two pools
-    lex_ids = {r.doc_id for r in
-               __import__("feasibility_etl_spark.operators.search", fromlist=["bm25_topk"]).bm25_topk(
-                   docs, ["spark", "join", "vector"], k=20).collect()}
-    sem_ids = {r.vec_id for r in cosine_topk(emb, qv, k=20).collect()}
-    assert all(r.doc_id in lex_ids | sem_ids for r in rows)
-    # a doc present in both pools must beat a doc present in neither's top
-    both = lex_ids & sem_ids
-    if both:
-        got_ranks = {r.doc_id: r.rank for r in rows}
-        assert min(got_ranks.get(d, 99) for d in both) <= 3
-
-
-def test_rrf_grouped_matches_per_query_fuse(spark):
-    from pyspark.sql import functions as F
-
-    from feasibility_etl_spark.operators.search import rrf_fuse, rrf_fuse_grouped
-
-    a_rows = [(q, d, r) for q in (0, 1) for r, d in enumerate([10 + q, 20 + q, 30 + q], 1)]
-    b_rows = [(q, d, r) for q in (0, 1) for r, d in enumerate([30 + q, 40 + q, 10 + q], 1)]
-    a = spark.createDataFrame(a_rows, "query_id long, doc_id long, rank long")
-    b = spark.createDataFrame(b_rows, "query_id long, doc_id long, rank long")
-    got = {
-        (r.query_id, r.rank): (r.doc_id, r.rrf)
-        for r in rrf_fuse_grouped([a, b], topk=4).collect()
-    }
-    # per-query single fuse gives identical results
-    for q in (0, 1):
-        single = rrf_fuse(
-            [a.where(F.col("query_id") == q).drop("query_id"),
-             b.where(F.col("query_id") == q).drop("query_id")],
-            topk=4,
-        ).collect()
-        for r in single:
-            assert got[(q, r.rank)] == (r.doc_id, r.rrf)

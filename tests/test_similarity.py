@@ -637,15 +637,12 @@ def test_assign_cells_is_the_canonical_assignment(spark):
     # it agrees with MLlib's model.transform on the same centroids (the
     # norm-shortcut distance picks the same argmin away from exact ties).
     # r12: assign_cells became an Arrow-batched numpy argmin (the HOF
-    # formulation was the r11 sim-ivf regression) — pin BOTH backends
-    # against model.transform, and against each other, on real data.
+    # formulation was the r11 sim-ivf regression) — pinned against
+    # model.transform on real data.
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    from feasibility_etl_spark.operators.similarity import (
-        _assign_cells_sql,
-        assign_cells,
-    )
+    from feasibility_etl_spark.operators.similarity import assign_cells
 
     corpus = clustered_embeddings(spark)
     feats = corpus.select(
@@ -659,8 +656,6 @@ def test_assign_cells_is_the_canonical_assignment(spark):
     cents = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
     via_ours = {r.vec_id: r._cell for r in assign_cells(corpus, cents).collect()}
     assert via_ours == via_model
-    via_sql = {r.vec_id: r._cell for r in _assign_cells_sql(corpus, cents).collect()}
-    assert via_sql == via_ours
     # centroid list order must not matter (ivf_append collects from parquet
     # in arbitrary order): reversed input, same assignment
     via_rev = {

@@ -79,21 +79,6 @@ def test_partitioning_invariant_in_coupon_mode(spark, events):
     assert a == b == 40
 
 
-def test_kll_merged_quantiles_within_rank_error(spark):
-    from feasibility_etl_spark.operators.sketches import (
-        merge_quantile_sketches,
-        quantile_sketches,
-        with_quantiles,
-    )
-
-    n = 40_000
-    df = spark.range(n).select((F.col("id") % 4).alias("day"), F.col("id").alias("v"))
-    daily = quantile_sketches(df, ["day"], "v", k=800)
-    q = with_quantiles(merge_quantile_sketches(daily, []), [0.5, 0.99]).collect()[0]
-    # normalized rank error at k=800 is ~0.6%; allow 2%
-    assert abs(q.p50 - n // 2) < 0.02 * n
-    assert abs(q.p99 - int(n * 0.99)) < 0.02 * n
-
 
 def test_kll_exact_below_capacity(spark):
     from feasibility_etl_spark.operators.sketches import quantile_sketches, with_quantiles

@@ -239,22 +239,3 @@ def test_sessionize_stream_timer_driven(spark, tmp_path):
         spark, tmp_path, lambda s: sessionize_stream(s, "key", "ts", gap_seconds=60)
     )
 
-
-def test_sessionize_stream_tws(spark, tmp_path):
-    """Spark-4 transformWithState variant — skips where protobuf is absent."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from feasibility_etl_spark.streaming.stateful import sessionize_stream_tws
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        _run_sessionize(
-            spark, tmp_path,
-            lambda s: sessionize_stream_tws(s, "key", "ts", gap_seconds=60),
-        )
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")

@@ -76,7 +76,7 @@ def test_fingerprint_normalization(spark):
 
 
 def test_winnow_guarantee_shared_substring_shares_fingerprint(spark):
-    from feasibility_etl_spark.operators.text import winnow_fingerprints
+    from feasibility_etl_spark.operators.text import winnow_fingerprints_arrow
 
     # winnowing guarantee: a common substring of length >= k + w - 1 = 11
     # chars forces at least one common fingerprint
@@ -87,69 +87,39 @@ def test_winnow_guarantee_shared_substring_shares_fingerprint(spark):
          (2, "completely unrelated content with no overlap at all")],
         "doc_id long, text string",
     )
-    rows = {
-        r.doc_id: set(r.fp)
-        for r in df.select("doc_id", winnow_fingerprints("text").alias("fp")).collect()
-    }
+    rows: dict[int, set[int]] = {}
+    for r in winnow_fingerprints_arrow(df).collect():
+        rows.setdefault(r.doc_id, set()).add(r.fp)
     assert rows[0] & rows[1], "overlapping docs must share a fingerprint"
-    assert not (rows[0] & rows[2] and rows[1] & rows[2]) or True  # unrelated may collide rarely
-    assert all(len(v) > 0 for v in rows.values())
-
-
-def test_winnow_relational_equals_hof_formulation(spark):
-    from pyspark.sql import functions as F
-
-    from feasibility_etl_spark.operators.text import (
-        winnow_fingerprints,
-        winnow_fingerprints_rows,
-    )
-    from feasibility_etl_spark.sources.catalog import load
-
-    from conftest import SF0001
-
-    docs = load(spark, SF0001, "documents").limit(50)
-    hof = {
-        (r.doc_id, fp)
-        for r in docs.select("doc_id", winnow_fingerprints("text").alias("fps")).collect()
-        for fp in r.fps
-    }
-    rel = {
-        (r.doc_id, r.fp) for r in winnow_fingerprints_rows(docs).collect()
-    }
-    assert rel == hof and len(rel) > 0
+    assert set(rows) == {0, 1, 2}
 
 
 def test_winnow_arrow_equals_relational(spark):
     """The numpy/mapInPandas serving path is value-identical to the
-    relational twin — on the real corpus AND the short-doc edge regimes
-    (n < k: nothing; k ≤ n < k+w-1: the single global minimum)."""
-    from feasibility_etl_spark.operators.text import (
-        winnow_fingerprints_arrow,
-        winnow_fingerprints_rows,
-    )
+    pure-Python winnowing model — on the real corpus AND the short-doc
+    edge regimes (n < k: nothing; k ≤ n < k+w-1: the single global
+    minimum)."""
+    from feasibility_etl_spark.operators.text import winnow_fingerprints_arrow
     from feasibility_etl_spark.sources.catalog import load
 
     from conftest import SF0001
+    from golden import py_winnow_rows
 
-    docs = load(spark, SF0001, "documents").limit(80)
-    rel = {(r.doc_id, r.fp) for r in winnow_fingerprints_rows(docs).collect()}
+    docs = load(spark, SF0001, "documents").limit(80).select("doc_id", "text")
     arw = {(r.doc_id, r.fp) for r in winnow_fingerprints_arrow(docs).collect()}
-    assert arw == rel and len(arw) > 0
+    assert arw == py_winnow_rows(docs.collect()) and len(arw) > 0
 
-    edge = spark.createDataFrame(
-        [
-            (1, "short"),            # n < k -> no fingerprints
-            (2, "exactly8!"),        # one k-gram -> global min
-            (3, "ten chars!"),       # 3 hashes < w -> global min
-            (4, "UPPER Case MiXeD with enough length to window"),
-            (5, None),               # null text -> nothing
-            (6, ""),                 # empty -> nothing
-        ],
-        "doc_id long, text string",
-    )
-    rel_e = {(r.doc_id, r.fp) for r in winnow_fingerprints_rows(edge).collect()}
+    edge_rows = [
+        (1, "short"),            # n < k -> no fingerprints
+        (2, "exactly8!"),        # one k-gram -> global min
+        (3, "ten chars!"),       # 3 hashes < w -> global min
+        (4, "UPPER Case MiXeD with enough length to window"),
+        (5, None),               # null text -> nothing
+        (6, ""),                 # empty -> nothing
+    ]
+    edge = spark.createDataFrame(edge_rows, "doc_id long, text string")
     arw_e = {(r.doc_id, r.fp) for r in winnow_fingerprints_arrow(edge).collect()}
-    assert arw_e == rel_e
+    assert arw_e == py_winnow_rows(edge_rows)
     assert {d for d, _ in arw_e} == {2, 3, 4}
 
 

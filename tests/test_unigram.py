@@ -1,18 +1,14 @@
-"""Unigram-LM tokenizer: EM sanity, Viterbi reference behavior,
-coverage fallback, determinism, distributed == driver parity."""
+"""Unigram-LM tokenizer: Viterbi reference behavior, coverage fallback,
+determinism, distributed == driver parity, the frozen table's dyadic
+log-probs."""
 
 import math
 
-import pytest
-from pyspark.sql import functions as F
-
 from conftest import SF0001
 from feasibility_etl_spark.operators.unigram import (
-    UNSEEN_LOGP,
+    DEMO_UG_PIECES,
     unigram_encode,
-    unigram_train,
     viterbi_word,
-    vocab_from_counts,
 )
 from feasibility_etl_spark.sources.catalog import load
 
@@ -38,35 +34,10 @@ def test_viterbi_unseen_char_fallback():
     assert viterbi_word("x", logp) == ("x",)
 
 
-def test_em_training_finds_repeated_substring():
-    # corpus dominated by "banana": EM should give "an"-family pieces
-    # real mass and segment banana into few pieces
-    counts = {"banana": 50, "band": 10, "ana": 20}
-    vocab = vocab_from_counts(counts, vocab_size=12, seed_size=20,
-                              max_piece_len=4)
-    pieces = dict(vocab)
-    # probabilities normalize
-    assert abs(sum(math.exp(p) for p in pieces.values()) - 1.0) < 1e-6
-    seg = viterbi_word("banana", pieces, max_piece_len=4)
-    assert len(seg) <= 3  # far better than 6 single chars
-    assert "".join(seg) == "banana"
-
-
-def test_training_deterministic_and_bounded(spark):
-    docs = load(spark, SF0001, "documents")
-    v1 = unigram_train(docs, vocab_size=80, seed_size=150, max_words=500)
-    v2 = unigram_train(
-        docs.repartition(5), vocab_size=80, seed_size=150, max_words=500
-    )
-    assert v1 == v2
-    assert len(v1) <= 150 + 100  # bounded by seed + alphabet
-
-
 def test_encode_matches_driver_reference_and_roundtrips(spark):
     docs = load(spark, SF0001, "documents")
-    pieces = unigram_train(docs, vocab_size=80, seed_size=150, max_words=500)
-    out = {r.doc_id: r for r in unigram_encode(docs, pieces).collect()}
-    lp = dict(pieces)
+    out = {r.doc_id: r for r in unigram_encode(docs, DEMO_UG_PIECES).collect()}
+    lp = dict(DEMO_UG_PIECES)
     for r in docs.collect():
         words = [w for w in r.text.strip().lower().split() if w]
         expect = []
@@ -79,34 +50,24 @@ def test_encode_matches_driver_reference_and_roundtrips(spark):
 
 def test_encode_partitioning_invariant(spark):
     docs = load(spark, SF0001, "documents")
-    pieces = unigram_train(docs, vocab_size=60, seed_size=100, max_words=300)
     a = sorted(
         (r.doc_id, tuple(r.ug_tokens))
-        for r in unigram_encode(docs, pieces).collect()
+        for r in unigram_encode(docs, DEMO_UG_PIECES).collect()
     )
     b = sorted(
         (r.doc_id, tuple(r.ug_tokens))
         for r in unigram_encode(
-            docs.repartition(7, "source"), pieces, parallelism=4
+            docs.repartition(7, "source"), DEMO_UG_PIECES, parallelism=4
         ).collect()
     )
     assert a == b
 
 
-def test_demo_pieces_provenance_and_dyadic(spark):
-    # DEMO_UG_PIECES = unigram_train(documents @ sf0.001, vocab_size=120,
-    # seed_size=200, max_words=2000) with logps rounded to 2^-20 — the
+def test_demo_pieces_provenance_and_dyadic():
+    # DEMO_UG_PIECES holds EM-trained logps rounded to 2^-20 — the
     # rounding makes every Viterbi path cost an exact double, which the
     # DuckDB oracle's windowed-frontier DP relies on
-    from feasibility_etl_spark.operators.unigram import (
-        DEMO_UG_PIECES,
-        unigram_train,
-    )
-
-    docs = load(spark, SF0001, "documents").where(
-        F.trim("text") != ""
-    )
-    trained = unigram_train(docs, vocab_size=120, seed_size=200, max_words=2000)
     Q = 1 << 20
-    assert [(p, round(lp * Q) / Q) for p, lp in trained] == DEMO_UG_PIECES
     assert all(lp * Q == round(lp * Q) for _, lp in DEMO_UG_PIECES)
+    # a probability table: every logp is a log of a probability
+    assert all(lp <= 0.0 for _, lp in DEMO_UG_PIECES)

@@ -102,33 +102,6 @@ def test_not_null_rejection(spark, dims):
     assert res.fact.count() == 4
 
 
-def test_partitioned_write_prunes_scan(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from feasibility_etl_spark.sources.catalog import load
-    from feasibility_etl_spark.writer.denormalized import write_partitioned
-
-    from conftest import SF0001
-
-    events = load(spark, SF0001, "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    n_dates = events.select("event_date").distinct().count()
-    assert n_dates > 1, "fixture must span multiple dates for a pruning test"
-    path = str(tmp_path / "events_by_date")
-    write_partitioned(events, path, ["event_date"])
-
-    back = spark.read.parquet(path)
-    one_day = events.select(F.min("event_date")).first()[0]
-    q = back.where(F.col("event_date") == F.lit(one_day))
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "event_date" in plan.split(
-        "PartitionFilters: ["
-    )[1].split("]")[0], plan
-    # row-level check: pruned read returns exactly that day's rows
-    want = events.where(F.col("event_date") == F.lit(one_day)).count()
-    assert q.count() == want and want > 0
-
 
 def test_hash_id_dims_resolve_fks_consistently(spark, dims):
     from dataclasses import replace
@@ -154,48 +127,6 @@ def test_hash_id_dims_resolve_fks_consistently(spark, dims):
     plan = res.dims["jira_user"]._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
 
-
-def test_overwrite_partitions_touches_only_present_partitions(spark, tmp_path):
-    import pyspark.sql.functions as F
-
-    from feasibility_etl_spark.writer.denormalized import (
-        overwrite_partitions,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "days")
-    base = spark.createDataFrame(
-        [(d, i, "v1") for d in ("d1", "d2", "d3") for i in range(5)],
-        "day string, id long, v string",
-    )
-    write_partitioned(base, path, ["day"])
-
-    # incremental rerun of day 2 only, with different content
-    day2 = spark.createDataFrame(
-        [("d2", i, "v2") for i in range(3)], "day string, id long, v string"
-    )
-    overwrite_partitions(day2, path, ["day"])
-
-    back = spark.read.parquet(path)
-    by_day = {
-        r.day: (r.n, r.vs)
-        for r in back.groupBy("day")
-        .agg(F.count(F.lit(1)).alias("n"), F.collect_set("v").alias("vs"))
-        .collect()
-    }
-    assert by_day["d1"] == (5, ["v1"]) and by_day["d3"] == (5, ["v1"])
-    assert by_day["d2"] == (3, ["v2"])  # replaced, not appended
-    # the session default is restored (static)
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() != "dynamic"
-
-    # idempotent under retry
-    overwrite_partitions(day2, path, ["day"])
-    assert spark.read.parquet(path).count() == 13
-
-    # contrast: the naive static overwrite destroys the other days —
-    # the footgun overwrite_partitions exists to remove
-    write_partitioned(day2, path, ["day"], mode="overwrite")
-    assert {r.day for r in spark.read.parquet(path).select("day").distinct().collect()} == {"d2"}
 
 
 def test_lookup_or_insert_parts_increment_parity(spark):

@@ -20,8 +20,12 @@ import hashlib
 import os
 import sys
 import time
+from pathlib import Path
 
 import duckdb
+
+# the checkout this file sits in: a copy of the repo checks its own package
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def norm_cell(v) -> str:
@@ -68,7 +72,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))
     import __spark_entry__ as entrymod
     from feasibility_etl_spark.session import build_session
 

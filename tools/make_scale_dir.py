@@ -1,8 +1,8 @@
 """Materialize an ~sf1-equivalent test directory from sf0.1 parquet.
 
 Round-6 scale evidence needs REAL FILES (the granular oracle sweep
-reads the same parquet from Spark and DuckDB), not the in-plan replicas
-``tools/scale_probe.py`` synthesizes. Recipe:
+reads the same parquet from Spark and DuckDB), not in-plan replicas.
+Recipe:
 
 - Relational tables ×10 with one consistent id offset (replica r adds
   ``r * 10**9`` to every PRIMARY and FOREIGN key), so each replica is a

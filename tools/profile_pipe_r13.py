@@ -3,7 +3,7 @@
 Replicates the CURRENT pipe_corpus_stage_frames body (d3 AND d5 cuts)
 with wall timers at each boundary plus executed job/stage/task counts
 from the status store, then runs the composed noop action. The r12
-profiler (profile_build_phase_r12.py) predates the d5 cut; this is the
+build-phase profiler predated the d5 cut; this is the
 round-13 instrument for VERDICT item 1 (stage-count reduction).
 
 Usage: python tools/profile_pipe_r13.py [reps] [pairs|components]

@@ -29,8 +29,11 @@ import re
 import subprocess
 import sys
 import time
+from pathlib import Path
 
 CHECKER = os.path.join(os.path.dirname(__file__), "check_correctness.py")
+# the checkout this file sits in, whose package the sweep lists
+ROOT = Path(__file__).resolve().parents[1]
 
 LINE_RE = re.compile(r"^\[(ok|FAIL|ROWS-ONLY|OOM-ORACLE|DISK-BOUND)\] ([A-Za-z0-9_-]+):")
 RUN_RE = re.compile(r"^\[run\] ([A-Za-z0-9_-]+)$")
@@ -88,7 +91,7 @@ def main() -> int:
 
     out_path = args.out or f"/tmp/sweep_{os.path.basename(args.sf_dir)}.jsonl"
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))
     from feasibility_etl_spark.driver_queries import ALL_QUERIES
 
     names = [n for n in ALL_QUERIES if not args.only or n in args.only]
